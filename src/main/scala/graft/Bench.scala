@@ -319,7 +319,7 @@ object Bench {
       results.get("chromem_query_25000_d1536_k10").filter(_ > 0)
 
     // ---- committed at-scale point: 250k×1536 = 384M floats, ABOVE
-    // LocalScanMaxFloats (200M), so this records the genuinely
+    // LocalScanMaxBytes (800 MB = 200M floats), so this records the genuinely
     // distributed scan tier (executor-resident packed blocks,
     // per-partition heaps, partitions×k merge) in EVERY round's driver
     // artifact — not just in opt-in local notes. ~1.5 GB of packed
@@ -646,7 +646,7 @@ object Bench {
 
   /** Big-corpus distributed-tier probe: n docs (≥250k), d=1536, k=10 —
     * build the packed index, materialize WITHOUT any driver-local pull
-    * (n·d exceeds LocalScanMaxFloats, so this is also what
+    * (4·n·d exceeds LocalScanMaxBytes, so this is also what
     * materialize() would decide on its own), and time full distributed
     * top-k scans. Reported per query, plus the build time — at this
     * size the build (one pass packing the vectors) is the dominant
@@ -700,7 +700,7 @@ object Bench {
     }
 
     val out = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // driver-local packed control (25k fits far under LocalScanMaxFloats),
+    // driver-local packed control (25k fits far under LocalScanMaxBytes),
     // built FIRST so the big build below is bracketed by controls on
     // BOTH sides: `_ctrl_pre` here, the interleaved `_ctrl` median after.
     // r10's 151 s 1M build was 76% of the headline artifact with no way
@@ -991,7 +991,7 @@ object Bench {
       } finally idxC.unpersist(blocking = true)
 
       // -- distributed tier: same index, blocks pinned on executors.
-      // 100k×1536 is under LocalScanMaxFloats, so the headline above
+      // 100k×1536 is under LocalScanMaxBytes, so the headline above
       // exercises the driver-local fast path; this entry forces the
       // partition-heap path every at-scale corpus takes (per-partition
       // bounded heap + partitions×k driver merge), so the 100 TB claim

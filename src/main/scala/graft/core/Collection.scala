@@ -659,8 +659,13 @@ class Collection private[core] (
     * coherent; a concurrent swap surfaces as file loss, which
     * [[readCommitted]] retries on the new snapshot. */
   private def materializeByScore(
-      scored: DataFrame, base: DataFrame): Seq[QueryResult] = {
-    val top = scored.collect().map(r => r.getString(0) -> r.getDouble(1)).toIndexedSeq
+      scored: DataFrame, base: DataFrame): Seq[QueryResult] =
+    joinBack(scored.collect().map(r => r.getString(0) -> r.getDouble(1)).toIndexedSeq, base)
+
+  /** Join `(id, score)` pairs, best first, back against `base` — the
+    * documents in the same order, `similarity` = the score as float. */
+  private def joinBack(
+      top: IndexedSeq[(String, Double)], base: DataFrame): Seq[QueryResult] = {
     if (top.isEmpty) return Seq.empty
     val scores = top.toMap
     val order = top.map(_._1).zipWithIndex.toMap
@@ -701,17 +706,9 @@ class Collection private[core] (
       s.flat match {
         case Some(idx) if where.isEmpty && whereDocument.isEmpty && negVector == null =>
           val q = if (VectorFunctions.isNormalized(qv)) qv else VectorFunctions.normalize(qv)
-          val top = idx.topK(q, nResults).sortBy { case (id, s) => (-s, id) }
-          if (top.isEmpty) IndexedSeq.empty
-          else {
-            val scores = top.toMap
-            val order = top.map(_._1).zipWithIndex.toMap
-            // join-back materialization by id (reference collection.go:547-556)
-            s.df0.filter(col("id").isInCollection(top.map(_._1).toIndexedSeq))
-              .as[Document].collect()
-              .map(d => QueryResult(d.id, d.metadata, d.embedding, d.content, scores(d.id)))
-              .sortBy(r => order(r.id)).toIndexedSeq
-          }
+          // already (score desc, id asc); float → double → float is exact
+          joinBack(idx.topK(q, nResults).map { case (id, sc) => id -> sc.toDouble }.toIndexedSeq,
+            s.df0)
         case _ =>
           queryDF(qv, nResults, where, whereDocument, negVector, negThreshold)
             .as[QueryResult].collect().toIndexedSeq

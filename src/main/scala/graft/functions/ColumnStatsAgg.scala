@@ -52,7 +52,7 @@ case class ColumnStats(
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[ColumnStatsBuffer] {
 
-  // serialize() writes 42 + size*8 bytes; cap far below the int-length
+  // serialize() writes 38 + size*8 bytes; cap far below the int-length
   // overflow the same way LongBucketCounts does
   require(maxEntries > 0 && maxEntries <= (Int.MaxValue - 64) / 8,
     s"maxEntries must be in (0, ${(Int.MaxValue - 64) / 8}]")
@@ -194,7 +194,7 @@ final class ColumnStatsBuffer(maxEntries: Int) {
   }
 
   def toBytes: Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(42 + size * 8)
+    val bb = java.nio.ByteBuffer.allocate(38 + size * 8)
     bb.putLong(n); bb.putLong(nNull)
     bb.put(if (hasVal) 1.toByte else 0.toByte)
     bb.putDouble(mn); bb.putDouble(mx)

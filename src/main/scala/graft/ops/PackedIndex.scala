@@ -1,0 +1,241 @@
+package graft.ops
+
+import scala.reflect.ClassTag
+
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
+
+/**
+ * The packed FLAT scan engine — the reference's brute-force scan ("FLAT
+ * index", reference README.md:156; scan loop query.go:192-236) over
+ * packed row-major slabs, distributed over Spark partitions. One engine,
+ * two slab kinds: float32 ([[VectorIndex]]) and int8-quantized
+ * ([[Int8VectorIndex]]). A kind supplies only its slab type, its row
+ * scoring loop ([[Slab.scan]]), its per-row build decoder and its query
+ * preparation; heap, scan pool, distributed pass, merge, persist and the
+ * slab builder are written once here.
+ *
+ * Scale design: blocks live distributed in executor memory
+ * (MEMORY_AND_DISK); the prepared query travels in the task closure
+ * (~6 KB at d=1536); each partition keeps one bounded k-heap; the driver
+ * merges #partitions × k candidates — the reference's per-goroutine heaps
+ * (query.go:16-83) and Spark's own TakeOrderedAndProject, minus
+ * row-format overhead.
+ *
+ * Small-corpus fast path: when the slab payload fits under
+ * [[PackedIndex.LocalScanMaxBytes]], materialize() collects the index to
+ * the driver and queries scan it in-process on one shared pool — Spark's
+ * per-job floor (~45 ms of scheduling at local[32]) would otherwise dwarf
+ * a sub-ms scan. This mirrors the reference, whose scan is always
+ * in-process; at 25k×1536 float32 the driver copy is ~150 MB.
+ */
+abstract class PackedIndex[K, Q, B <: Slab[K, Q]] private[ops] (
+    val blocks: RDD[B],
+    val dim: Int,
+    valueBytes: Int)(implicit ord: Ordering[K]) extends Serializable {
+
+  @volatile private var local: Array[B] = null
+
+  /** True when queries run driver-locally (small corpus). */
+  def isLocal: Boolean = local != null
+
+  /** The kind's query preparation (int8 quantizes the query). */
+  protected def prepare(query: Array[Float]): Q
+
+  /** Exhaustive top-k, (score desc, id asc) — ties break by id
+    * ascending, the DataFrame tiers' contract, on every tier and layout. */
+  protected def scoreTopK(query: Array[Float], k: Int): Array[(K, Double)] = {
+    require(k > 0, "k must be > 0") // k=0 indexed scores(-1) opaquely
+    require(query.length == dim,
+      s"vectors must have the same length: ${query.length} vs $dim")
+    val q = prepare(query)
+    val d = dim
+    val o = ord
+    // Snapshot the @volatile once: a concurrent unpersist() nulling the
+    // field between a bare null-check and a re-read would NPE mid-query.
+    val snapshot = local
+    val partial: Array[(K, Double)] =
+      if (snapshot != null) {
+        // row-range chunks fanned out on the shared pool, one heap each
+        val pool = PackedIndex.scanPool(blocks.sparkContext)
+        snapshot.flatMap { b =>
+          (0 until b.ids.length by PackedIndex.FirstChunkRows).map { from =>
+            val until = math.min(from + PackedIndex.FirstChunkRows, b.ids.length)
+            pool.submit(new java.util.concurrent.Callable[Array[(K, Double)]] {
+              def call(): Array[(K, Double)] = {
+                val heap = new TopKHeap[K](k, o)
+                b.scan(from, until, d, q, heap)
+                heap.result
+              }
+            })
+          }
+        }.flatMap(_.get())
+      } else {
+        blocks.mapPartitions { it =>
+          val heap = new TopKHeap[K](k, o)
+          it.foreach(b => b.scan(0, b.ids.length, d, q, heap))
+          heap.result.iterator
+        }.collect()
+      }
+    partial.sorted(Ordering.by[(K, Double), Double](-_._2).orElseBy(_._1)(o)).take(k)
+  }
+
+  /** Count of indexed vectors. */
+  def count(): Long = {
+    val snapshot = local
+    if (snapshot != null) snapshot.map(_.ids.length.toLong).sum
+    else blocks.map(_.ids.length.toLong).sum().toLong
+  }
+
+  def persist(level: StorageLevel = StorageLevel.MEMORY_AND_DISK): this.type = {
+    blocks.persist(level); this
+  }
+
+  /** Force materialization (so the first query isn't charged the build);
+    * pulls the index driver-local when its payload fits under
+    * [[PackedIndex.LocalScanMaxBytes]]. `forceDistributed = true` keeps
+    * blocks on executors regardless — the path every corpus above the
+    * budget takes, benchmarked explicitly so the at-scale tier has a
+    * measured point. */
+  def materialize(forceDistributed: Boolean = false): this.type = {
+    val rows = blocks.map(_.ids.length.toLong).sum().toLong
+    if (!forceDistributed && rows * dim * valueBytes <= PackedIndex.LocalScanMaxBytes) {
+      PackedIndex.scanPool(blocks.sparkContext) // sized while the session is live
+      local = blocks.collect()
+      // blocking: callers time queries right after materialize(), and an
+      // asynchronous eviction of the executor copy would drain inside
+      // their first measured window
+      blocks.unpersist(blocking = true)
+    }
+    this
+  }
+
+  /** `blocking = true` waits for the executor blocks to actually drop —
+    * benchmark teardown paths use it so a later timed window doesn't
+    * absorb this index's asynchronous eviction. */
+  def unpersist(blocking: Boolean = false): this.type = {
+    if (local == null) blocks.unpersist(blocking); local = null; this
+  }
+}
+
+/** One packed row-major slab of some kind plus its parallel id array. */
+trait Slab[K, Q] extends Serializable {
+  def ids: Array[K]
+
+  /** Offer rows [from, until) scored against the prepared query to the
+    * heap — the kind's one monomorphic scoring loop. */
+  private[ops] def scan(from: Int, until: Int, d: Int, q: Q, heap: TopKHeap[K]): Unit
+}
+
+/** The packed tier's one bounded top-k: the k strongest rows under
+  * (score desc, id asc) — the SAME total order as every DataFrame tier
+  * (orderBy(desc(similarity), asc(id))), so tied results never depend on
+  * block or partition layout. The id comparison only runs on exact score
+  * equality, so the tie-aware branch costs nothing on the hot path. */
+private[ops] final class TopKHeap[K](k: Int, ord: Ordering[K]) {
+  private[this] val ids = new Array[Any](k)
+  private[this] val scores = new Array[Double](k)
+  private[this] var size = 0
+  private[this] var minIdx = -1
+
+  // weakest slot = (score asc, id desc)
+  private def establishMin(): Unit = {
+    minIdx = 0
+    var j = 1
+    while (j < k) {
+      if (scores(j) < scores(minIdx) || (scores(j) == scores(minIdx) &&
+          ord.compare(ids(j).asInstanceOf[K], ids(minIdx).asInstanceOf[K]) > 0))
+        minIdx = j
+      j += 1
+    }
+  }
+
+  def insert(id: K, s: Double): Unit = {
+    if (size < k) {
+      ids(size) = id; scores(size) = s; size += 1
+      if (size == k) establishMin()
+    } else if (s > scores(minIdx) || (s == scores(minIdx) &&
+        ord.compare(id, ids(minIdx).asInstanceOf[K]) < 0)) {
+      ids(minIdx) = id; scores(minIdx) = s
+      establishMin()
+    }
+  }
+
+  def result: Array[(K, Double)] =
+    Array.tabulate(size)(j => (ids(j).asInstanceOf[K], scores(j)))
+}
+
+object PackedIndex {
+
+  /** Slab payload at or below this scans driver-locally: 800 MB, i.e.
+    * 200M float32 or 800M int8 values, well inside the 8 GB driver heap.
+    * This is the reference's operating envelope (an embeddable in-process
+    * store); corpora beyond it stay distributed. */
+  val LocalScanMaxBytes: Long = 800L * 1000 * 1000
+
+  /** Per-block slab cap (~64 MB). The r12 1M-row build showed
+    * 17.9→143.9 s swings across identical-code windows: each partition
+    * buffered every row as its OWN ~6 KB float array (old-gen churn that
+    * survives minor GCs for the whole partition pass) and then held
+    * buffer + slab live simultaneously. Fixed-size chunks bound the
+    * transient footprint to ONE chunk per task regardless of partition
+    * size, which is also the property a 1000-executor build needs. */
+  private[graft] val ChunkBytes: Int = 64 * 1024 * 1024
+
+  /** Rows in a partition's first slab (so tiny partitions don't pay a
+    * 64 MB allocation) and in one driver-local scan task. */
+  private[ops] val FirstChunkRows: Int = 4096
+
+  @volatile private var pool: java.util.concurrent.ExecutorService = null
+
+  /** The one daemon pool for driver-local scans — creating threads
+    * per-query would cost more than the scan itself. Sized at first use
+    * from the session's parallelism, not the JVM's processor count, so a
+    * session that runs local[n] scans on n threads. */
+  private[ops] def scanPool(sc: SparkContext): java.util.concurrent.ExecutorService = {
+    if (pool == null) synchronized {
+      if (pool == null) pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.max(1, sc.defaultParallelism),
+        (r: Runnable) => { val t = new Thread(r, "packed-index-local-scan"); t.setDaemon(true); t })
+    }
+    pool
+  }
+
+  /** The one streaming slab builder: rows go straight into fixed-size
+    * slabs of `rowBytes`-wide rows — no per-row arrays, no grow-doubling,
+    * no buffer+slab double-live window. `alloc` makes an empty slab over
+    * the given id array, `put` decodes row columns 1.. into slot n, and
+    * `trim` cuts the last partial slab to n rows so persisted bytes ==
+    * data bytes. Small corpora want few partitions (per-task scheduling
+    * dominates sub-ms scans); `numBlocks = 0` keeps the upstream
+    * partitioning. */
+  private[ops] def buildSlabs[K: ClassTag, B: ClassTag](
+      df: DataFrame, cols: Seq[String], numBlocks: Int, rowBytes: Int)(
+      alloc: Array[K] => B, put: (B, Int, Row) => Unit, trim: (B, Int) => B): RDD[B] = {
+    val rows0 = df.select(cols.map(col): _*).rdd
+    val rows = if (numBlocks > 0) rows0.coalesce(numBlocks) else rows0
+    rows.mapPartitions { it =>
+      val capRows = math.max(1, ChunkBytes / rowBytes)
+      var nextRows = math.min(FirstChunkRows, capRows)
+      new Iterator[B] {
+        def hasNext: Boolean = it.hasNext
+        def next(): B = {
+          val ids = new Array[K](nextRows)
+          nextRows = capRows
+          val slab = alloc(ids)
+          var n = 0
+          while (n < ids.length && it.hasNext) {
+            val row = it.next()
+            put(slab, n, row)
+            ids(n) = row.getAs[K](0)
+            n += 1
+          }
+          if (n == ids.length) slab else trim(slab, n)
+        }
+      }
+    }
+  }
+}

@@ -4,13 +4,11 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
-import org.apache.spark.storage.StorageLevel
 
 /**
- * FLAT (exhaustive) in-memory vector index — the reference's brute-force
- * scan ("FLAT index", reference README.md:156; scan loop query.go:192-236)
- * distributed over Spark partitions.
+ * FLAT (exhaustive) float32 vector index — the float32 slab kind of the
+ * one packed-scan engine ([[PackedIndex]]): driver-local under the
+ * engine's 800 MB budget (200M floats), distributed above it.
  *
  * Why not the DataFrame columnar cache for the hot loop? Measured on
  * 100k×1536 float32 (local[32]): columnar-cache scan ≈ 92 ms/query,
@@ -19,234 +17,44 @@ import org.apache.spark.storage.StorageLevel
  * laptop, BASELINE.md). The win is data layout: one contiguous float[]
  * per block (SIMD-friendly, zero per-row decode), exactly what the
  * reference scans (contiguous sub-slices, query.go:192-196).
- *
- * Scale design: blocks live distributed in executor memory
- * (MEMORY_AND_DISK); the query travels in the task closure (~6 KB at
- * d=1536); each partition keeps a bounded k-heap; the driver merges
- * #partitions × k candidates — the same partial-top-k-then-merge shape
- * as the reference's per-goroutine heaps (query.go:16-83) and Spark's
- * own TakeOrderedAndProject, minus row-format overhead.
  */
-class VectorIndex[K: ClassTag: Ordering] private (
-    val blocks: RDD[VectorIndex.Block[K]],
-    val dim: Int) extends Serializable {
+final class VectorIndex[K: Ordering] private (
+    slabs: RDD[VectorIndex.Block[K]],
+    d: Int) extends PackedIndex[K, Array[Float], VectorIndex.Block[K]](slabs, d, 4) {
 
-  // (score desc, id asc) — the SAME total order as every DataFrame tier
-  // (orderBy(desc("similarity"), asc(id))). Score-only heaps resolved
-  // ties by block/partition order, making tied results layout-dependent
-  // — against the repo's partitioning-invariance rule. Ties are rare
-  // (the id comparison only runs on exact float equality), so the
-  // tie-aware branch costs nothing on the hot path.
-  private val ord = implicitly[Ordering[K]]
-
-  // Small-corpus fast path: when n·d fits under LocalScanMaxFloats the
-  // whole index is collected to the driver at materialize() time and
-  // queries scan it in-process on a thread pool — Spark's per-job floor
-  // (~45 ms of scheduling at local[32]) would otherwise dwarf a sub-ms
-  // scan. This mirrors the reference, whose scan is always in-process
-  // (query.go:192-236); at 25k×1536 the driver copy is ~150 MB.
-  // At real scale (n·d above the threshold) nothing changes: blocks stay
-  // distributed and the driver only ever sees partitions × k candidates.
-  @volatile private var local: Array[VectorIndex.Block[K]] = null
-
-  /** True when queries run driver-locally (small corpus). */
-  def isLocal: Boolean = local != null
+  protected def prepare(query: Array[Float]): Array[Float] = query
 
   /** Exhaustive top-k by dot product (== cosine for normalized vectors).
-    * Ties break by id ascending — the DataFrame tiers' contract. */
-  def topK(query: Array[Float], k: Int): Array[(K, Float)] = {
-    require(k > 0, "k must be > 0") // k=0 indexed scores(-1) opaquely
-    require(query.length == dim,
-      s"vectors must have the same length: ${query.length} vs $dim")
-    // Snapshot the @volatile once: a concurrent unpersist() nulling the
-    // field between a bare null-check and a re-read would NPE mid-query.
-    val snapshot = local
-    if (snapshot != null) return localTopK(snapshot, query, k)
-    val d = dim
-    val tieOrd = ord
-    val perPart = blocks.mapPartitions { it =>
-      val ids = new Array[Any](k)
-      val scores = new Array[Float](k)
-      var size = 0
-      var minIdx = -1
-      // weakest slot = (score asc, id desc); replace when the candidate
-      // is (score desc, id asc)-stronger — ties included
-      def establishMin(): Unit = {
-        minIdx = 0
-        var j = 1
-        while (j < k) {
-          if (scores(j) < scores(minIdx) ||
-            (scores(j) == scores(minIdx) &&
-              tieOrd.compare(ids(j).asInstanceOf[K], ids(minIdx).asInstanceOf[K]) > 0))
-            minIdx = j
-          j += 1
-        }
-      }
-      def insert(id: Any, s: Float): Unit = {
-        if (size < k) {
-          ids(size) = id; scores(size) = s; size += 1
-          if (size == k) establishMin()
-        } else if (s > scores(minIdx) || (s == scores(minIdx) &&
-            tieOrd.compare(id.asInstanceOf[K], ids(minIdx).asInstanceOf[K]) < 0)) {
-          ids(minIdx) = id; scores(minIdx) = s
-          establishMin()
-        }
-      }
-      it.foreach { block =>
-        val data = block.data
-        val bids = block.ids
-        var r = 0
-        val nRows = bids.length
-        while (r < nRows) {
-          val off = r * d
-          var s = 0.0f
-          var i = 0
-          while (i < d) { s += data(off + i) * query(i); i += 1 }
-          insert(bids(r), s)
-          r += 1
-        }
-      }
-      (0 until size).iterator.map(j => (ids(j).asInstanceOf[K], scores(j)))
-    }
-    perPart.collect()
-      .sorted(Ordering.by[(K, Float), Float](-_._2).orElseBy(_._1)(ord))
-      .take(k)
-  }
-
-  /** Driver-local exhaustive scan: row-range chunks fanned out on a fixed
-    * pool, one bounded heap per chunk, tiny final merge — the same
-    * partial-top-k shape as the distributed path minus job scheduling. */
-  private def localTopK(snapshot: Array[VectorIndex.Block[K]],
-      query: Array[Float], k: Int): Array[(K, Float)] = {
-    val d = dim
-    val chunkRows = 4096
-    val chunks = snapshot.iterator.flatMap { b =>
-      val n = b.ids.length
-      (0 until n by chunkRows).map(from => (b, from, math.min(from + chunkRows, n)))
-    }.toArray
-    val pool = VectorIndex.localPool
-    val tasks = chunks.map { case (block, from, until) =>
-      pool.submit(new java.util.concurrent.Callable[Array[(K, Float)]] {
-          def call(): Array[(K, Float)] = {
-            val data = block.data
-            val bids = block.ids
-            val ids = new Array[Any](k)
-            val scores = new Array[Float](k)
-            var size = 0
-            var minIdx = -1
-            def establishMin(): Unit = {
-              minIdx = 0
-              var j = 1
-              while (j < k) {
-                if (scores(j) < scores(minIdx) ||
-                  (scores(j) == scores(minIdx) &&
-                    ord.compare(ids(j).asInstanceOf[K], ids(minIdx).asInstanceOf[K]) > 0))
-                  minIdx = j
-                j += 1
-              }
-            }
-            var r = from
-            while (r < until) {
-              val off = r * d
-              var s = 0.0f
-              var i = 0
-              while (i < d) { s += data(off + i) * query(i); i += 1 }
-              if (size < k) {
-                ids(size) = bids(r); scores(size) = s; size += 1
-                if (size == k) establishMin()
-              } else if (s > scores(minIdx) || (s == scores(minIdx) &&
-                  ord.compare(bids(r).asInstanceOf[K], ids(minIdx).asInstanceOf[K]) < 0)) {
-                ids(minIdx) = bids(r); scores(minIdx) = s
-                establishMin()
-              }
-              r += 1
-            }
-            Array.tabulate(size)(j => (ids(j).asInstanceOf[K], scores(j)))
-          }
-        })
-      }
-    tasks.flatMap(_.get())
-      .sorted(Ordering.by[(K, Float), Float](-_._2).orElseBy(_._1)(ord))
-      .take(k)
-  }
-
-  /** Count of indexed vectors. */
-  def count(): Long = {
-    val snapshot = local
-    if (snapshot != null) snapshot.map(_.ids.length.toLong).sum
-    else blocks.map(_.ids.length.toLong).sum().toLong
-  }
-
-  def persist(level: StorageLevel = StorageLevel.MEMORY_AND_DISK): this.type = {
-    blocks.persist(level); this
-  }
-
-  /** Force materialization (so first query isn't charged the build); pulls
-    * the index driver-local when it fits under LocalScanMaxFloats.
-    * `forceDistributed = true` keeps blocks on executors regardless —
-    * the path every corpus above the threshold takes; benchmarked
-    * explicitly so the at-scale tier has a measured point, not just the
-    * small-corpus fast path. */
-  def materialize(forceDistributed: Boolean = false): this.type = {
-    val rows = blocks.map(_.ids.length.toLong).sum().toLong
-    if (!forceDistributed && rows * dim <= VectorIndex.LocalScanMaxFloats) {
-      local = blocks.collect()
-      // blocking: callers time queries right after materialize(), and an
-      // asynchronous eviction of the executor copy would drain inside
-      // their first measured window
-      blocks.unpersist(blocking = true)
-    }
-    this
-  }
-
-  /** `blocking = true` waits for the executor blocks to actually drop —
-    * benchmark teardown paths use it so a later timed window doesn't
-    * absorb this index's asynchronous eviction. */
-  def unpersist(blocking: Boolean = false): this.type = {
-    if (local == null) blocks.unpersist(blocking); local = null; this
-  }
+    * Ties break by id ascending — the DataFrame tiers' contract. The
+    * engine widens each float32 score to double (exact, order-preserving);
+    * narrowing it back here returns the kernel's float bit for bit. */
+  def topK(query: Array[Float], k: Int): Array[(K, Float)] =
+    scoreTopK(query, k).map { case (id, s) => (id, s.toFloat) }
 }
 
 object VectorIndex {
 
-  /** n·d at or below this scans driver-locally (~800 MB of float32, well
-    * inside the 8 GB driver heap) — Spark's per-job scheduling floor
-    * (~45 ms at local[32]) dominates scans this small. This is exactly
-    * the reference's operating envelope (an embeddable in-process store);
-    * corpora beyond it stay distributed. */
-  val LocalScanMaxFloats: Long = 200L * 1000 * 1000
+  /** One block = a packed row-major float32 slab + parallel id array. */
+  case class Block[K](ids: Array[K], data: Array[Float]) extends Slab[K, Array[Float]] {
+    private[ops] def scan(from: Int, until: Int, d: Int, q: Array[Float],
+        heap: TopKHeap[K]): Unit = {
+      val data = this.data
+      val ids = this.ids
+      var r = from
+      while (r < until) {
+        val off = r * d
+        var s = 0.0f
+        var i = 0
+        while (i < d) { s += data(off + i) * q(i); i += 1 }
+        heap.insert(ids(r), s)
+        r += 1
+      }
+    }
+  }
 
-  /** Shared daemon pool for driver-local scans — creating threads
-    * per-query would cost more than the scan itself. */
-  private[ops] lazy val localPool: java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, Runtime.getRuntime.availableProcessors()),
-      (r: Runnable) => {
-        val t = new Thread(r, "vectorindex-local-scan")
-        t.setDaemon(true)
-        t
-      })
-
-  /** One block = a packed row-major slab of vectors + parallel id array.
-    * Partitions hold one or more blocks, each capped at [[ChunkFloats]]
-    * (~64 MB) — build streams rows straight into fixed-size slabs, so
-    * slab allocation never scales with partition size. */
-  case class Block[K](ids: Array[K], data: Array[Float])
-
-  /** Per-block slab cap in floats (~64 MB). The r12 1M-row build showed
-    * 17.9→143.9 s swings across identical-code windows: each partition
-    * buffered every row as its OWN ~6 KB float array (old-gen churn that
-    * survives minor GCs for the whole partition pass) and then held
-    * buffer + slab live simultaneously — ~2× the index size in transient
-    * old-gen at an uncontrolled heap fraction. Fixed-size chunks bound
-    * the transient footprint to ONE chunk per task regardless of
-    * partition size, which is also the property a 1000-executor build
-    * needs: per-task allocation independent of rows-per-executor. */
-  private[graft] val ChunkFloats: Int = 16 * 1024 * 1024
-
-  /** Build from a DataFrame's (id, embedding) columns. Dimension is taken
-    * from the first row; rows with a different dimension fail the build
-    * (vectors must have the same length — reference vector.go:16-18). */
+  /** Build from a DataFrame's (id, embedding) columns. Rows whose vector
+    * is null or of another dimension fail the build (vectors must have
+    * the same length — reference vector.go:16-18). */
   def build[K: ClassTag: Ordering](
       df: DataFrame,
       idCol: String,
@@ -254,51 +62,21 @@ object VectorIndex {
       dim: Int,
       numBlocks: Int = 0): VectorIndex[K] = {
     require(dim > 0, s"dim must be > 0, got $dim")
-    val rows0 = df.select(col(idCol), col(vecCol)).rdd
-    // Small corpora want few partitions: per-task scheduling (~1-2 ms
-    // each) dominates sub-ms scans. Callers size partitions so each
-    // holds ≥ a few thousand rows; 0 keeps the upstream partitioning.
-    val rows = if (numBlocks > 0) rows0.coalesce(numBlocks) else rows0
-    val blocks = rows.mapPartitions { it =>
-      // Stream rows directly into packed chunk slabs — no per-row float
-      // arrays, no grow-doubling, no buffer+slab double-live window.
-      // The first chunk is small (4096 rows) so tiny partitions don't
-      // pay a 64 MB allocation; later chunks use the full cap.
-      val capRows = math.max(1, ChunkFloats / dim)
-      var nextRows = math.min(4096, capRows)
-      new Iterator[Block[K]] {
-        def hasNext: Boolean = it.hasNext
-        def next(): Block[K] = {
-          val cap = nextRows
-          nextRows = capRows
-          val ids = new Array[K](cap)
-          val data = new Array[Float](cap * dim)
-          var n = 0
-          while (n < cap && it.hasNext) {
-            val row = it.next()
-            val v = row.getSeq[Float](1)
-            if (v == null) {
-              // diagnostic, not a bare NPE at v.length: the corpus schema
-              // allows embedding-less rows (embed-on-write), and callers
-              // are expected to filter them before indexing
-              throw new IllegalArgumentException(
-                s"cannot index a null vector (id=${row.get(0)}); " +
-                  "filter embedding IS NOT NULL before VectorIndex.build")
-            }
-            if (v.length != dim) {
-              throw new IllegalArgumentException(
-                s"vectors must have the same length: ${v.length} vs $dim")
-            }
-            v.copyToArray(data, n * dim)
-            ids(n) = row.getAs[K](0)
-            n += 1
-          }
-          // trim the final partial chunk so persisted bytes == data bytes
-          if (n == cap) Block(ids, data)
-          else Block(ids.take(n), java.util.Arrays.copyOf(data, n * dim))
-        }
-      }
-    }
+    val blocks = PackedIndex.buildSlabs[K, Block[K]](df, Seq(idCol, vecCol), numBlocks, 4 * dim)(
+      ids => Block(ids, new Array[Float](ids.length * dim)),
+      (b, n, row) => {
+        val v = row.getSeq[Float](1)
+        // diagnostic, not a bare NPE at v.length: the corpus schema
+        // allows embedding-less rows (embed-on-write), and callers are
+        // expected to filter them before indexing
+        if (v == null) throw new IllegalArgumentException(
+          s"cannot index a null vector (id=${row.get(0)}); " +
+            "filter embedding IS NOT NULL before VectorIndex.build")
+        if (v.length != dim) throw new IllegalArgumentException(
+          s"vectors must have the same length: ${v.length} vs $dim")
+        v.copyToArray(b.data, n * dim)
+      },
+      (b, n) => Block(b.ids.take(n), java.util.Arrays.copyOf(b.data, n * dim)))
     new VectorIndex[K](blocks, dim)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.{Int8VectorIndex, Quantize}
 
-class Int8VectorIndexSpec extends SparkSuite {
+class Int8VectorIndexSpec extends SparkSuite with PackedIndexCases {
   import spark.implicits._
 
   private val d = 16
@@ -51,20 +51,11 @@ class Int8VectorIndexSpec extends SparkSuite {
   }
 
   test("score ties break by id ascending (the DataFrame tiers' contract)") {
-    // two identical vectors ⇒ identical integer dot and scale ⇒ exact
-    // score tie; the lower id must win the heap slot
-    val df = Quantize.quantize(withLogLevel(Seq(
-      (5L, Array.fill(d)(0.5f)),
-      (2L, Array.fill(d)(0.5f)),
-      (9L, Array.fill(d)(-0.5f))
-    ).toDF("id", "embedding")), "embedding")
-    val idx = Int8VectorIndex.build[Long](df, "id", "qvec", "qscale", d)
-      .persist().materialize()
-    try {
-      val r = idx.topK(Array.fill(d)(0.25f), 2)
-      assert(r.map(_._1).toSeq === Seq(2L, 5L))
-      assert(r(0)._2 === r(1)._2)
-    } finally idx.unpersist(blocking = true)
+    tieOrderCase(Int8)
+  }
+
+  test("chunked build crosses the 4096-row first-chunk boundary losslessly") {
+    chunkBoundaryCase(Int8)
   }
 
   test("build and query validate inputs loudly") {

@@ -92,7 +92,9 @@ class ProfileCohortsSpec extends SparkSuite {
     assert(!exact.contains("Join"), s"exact must not join:\n$exact")
     // the only Generate is the |cols|-row unpivot ABOVE the aggregate
     // (one row in, |cols| out); the corpus side below the partial
-    // aggregate must not stack
+    // aggregate must not stack (the marker must exist, or the check
+    // below would pass over an empty plan suffix)
+    assert(exact.contains("partial_column_stats"), s"no partial aggregate:\n$exact")
     val belowAgg = exact.linesIterator
       .dropWhile(!_.contains("partial_column_stats")).mkString("\n")
     assert(!belowAgg.contains("Generate"),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
 import graft.ops.{VectorIndex, VectorSearch}
 
-class VectorSearchSpec extends SparkSuite {
+class VectorSearchSpec extends SparkSuite with PackedIndexCases {
   import spark.implicits._
 
   private lazy val emb = withLogLevel(
@@ -33,60 +33,11 @@ class VectorSearchSpec extends SparkSuite {
   }
 
   test("VectorIndex topK ties break by id ascending on BOTH paths, independent of layout (r12)") {
-    import spark.implicits._
-    // five copies of the same vector spread across blocks: every score
-    // ties, so a score-only heap resolved the winner by block order —
-    // layout-dependent and diverging from the DataFrame tiers'
-    // (desc similarity, asc id) contract
-    val v = Array(0.6f, 0.8f)
-    val dup = withLogLevel(Seq(
-      (40L, v), (10L, v), (30L, v), (20L, v), (50L, v),
-      (5L, Array(0.8f, 0.6f))
-    ).toDF("vec_id", "embedding").repartition(3))
-    val want = Seq(40L, 10L, 30L, 20L, 50L).sorted // ties: id asc
-    val qv = Array(0.6f, 0.8f)
-    val distributed = VectorIndex.build[Long](dup, "vec_id", "embedding", 2, 3)
-    assert(distributed.topK(qv, 3).map(_._1).toSeq === want.take(3))
-    val localIdx: graft.ops.VectorIndex[Long] =
-      VectorIndex.build[Long](dup, "vec_id", "embedding", 2, 3)
-        .persist().materialize()
-    try assert(localIdx.topK(qv, 3).map(_._1).toSeq === want.take(3))
-    finally localIdx.unpersist()
-    // agreement with the DataFrame tier under the same ties
-    val viaDf = VectorSearch.topK(dup, "embedding", qv, 3, "vec_id")
-      .select("vec_id").as[Long].collect().toSeq
-    assert(viaDf === want.take(3))
+    tieOrderCase(F32)
   }
 
   test("chunked build crosses the 4096-row first-chunk boundary losslessly (r13)") {
-    // the r13 streaming-slab build emits one small first chunk (4096
-    // rows) then full-cap chunks; the unit corpora elsewhere never
-    // exceed 4096 rows per partition, so the boundary was only
-    // exercised by the bench. 5000 rows in ONE partition must split
-    // 4096 + 904 with every (id, vector) preserved and topK identical
-    // to the DataFrame tier.
-    val rnd = new scala.util.Random(77)
-    val rows = (0L until 5000L).map { id =>
-      (id, Array.fill(4)(rnd.nextFloat() * 2f - 1f))
-    }
-    val df = withLogLevel(rows.toDF("vec_id", "embedding").coalesce(1))
-    val idx = VectorIndex.build[Long](df, "vec_id", "embedding", 4, 1)
-    val sizes = idx.blocks.map(b => b.ids.length).collect().toSeq
-    assert(sizes === Seq(4096, 904), s"chunk split was $sizes")
-    // data arrays trimmed to exactly rows*dim (persisted bytes == data)
-    val dataSizes = idx.blocks.map(b => b.data.length).collect().toSeq
-    assert(dataSizes === Seq(4096 * 4, 904 * 4))
-    // ids survive in partition order across the boundary
-    val allIds = idx.blocks.flatMap(_.ids).collect().toSeq
-    assert(allIds === (0L until 5000L), "ids must survive chunking in order")
-    val qv = rows(1234)._2
-    val viaIdx = idx.topK(qv, 7).map(_._1).toSeq
-    val viaDf = VectorSearch.topK(df, "embedding", qv, 7, "vec_id")
-      .select("vec_id").as[Long].collect().toSeq
-    assert(viaIdx === viaDf)
-    // no self-match-first claim: vectors are unnormalized, so raw-dot
-    // ranking can put a larger-magnitude aligned vector above the query
-    assert(viaIdx.contains(1234L) || viaIdx.size == 7)
+    chunkBoundaryCase(F32)
   }
 
   test("VectorIndex topK rejects k <= 0 loudly (r12)") {
@@ -131,7 +82,7 @@ class VectorSearchSpec extends SparkSuite {
     val distributed = VectorIndex.build[Long](emb, "vec_id", "embedding", q0.length, 2)
     val localIdx: graft.ops.VectorIndex[Long] =
       VectorIndex.build[Long](emb, "vec_id", "embedding", q0.length, 2)
-        .persist().materialize() // 500×64 floats ≪ LocalScanMaxFloats ⇒ local
+        .persist().materialize() // 500×64 floats ≪ LocalScanMaxBytes ⇒ local
     try {
       assert(localIdx.isLocal && !distributed.isLocal)
       assert(localIdx.count() === emb.count())

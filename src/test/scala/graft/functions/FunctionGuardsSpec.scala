@@ -92,6 +92,21 @@ class FunctionGuardsSpec extends SparkSuite {
     assert(flt.select(PqFunctions.pq_encode(col("v"), cb, 2, 2, 1)).count() === 1L)
   }
 
+  test("column_stats buffer serializes to its 38-byte header plus 8 bytes per key and round-trips") {
+    val buf = new ColumnStatsBuffer(1 << 10)
+    Seq(3.5, -1.0, 0.0, -0.0, Double.NaN, 3.5, 1e300, -7.25).foreach(buf.addValue)
+    buf.nNull = 2
+    val bytes = buf.toBytes
+    // n, n_null (8+8) · hasVal (1) · mn, mx (8+8) · hasZero (1) · size (4)
+    assert(bytes.length === 38 + 8 * buf.size)
+    val back = ColumnStatsBuffer.fromBytes(bytes, 1 << 10)
+    assert((back.n, back.nNull, back.hasVal, back.hasZero, back.size) ===
+      (buf.n, buf.nNull, buf.hasVal, buf.hasZero, buf.size))
+    assert(java.lang.Double.compare(back.mn, buf.mn) == 0 &&
+      java.lang.Double.compare(back.mx, buf.mx) == 0)
+    assert(back.keys.filter(_ != 0L).sorted.toSeq === buf.keys.filter(_ != 0L).sorted.toSeq)
+  }
+
   test("bucket_counts bounds maxEntries at the serializable ceiling") {
     intercept[IllegalArgumentException] {
       HistAgg.bucket_counts(col("x"), 1, maxEntries = Int.MaxValue)
