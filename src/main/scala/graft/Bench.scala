@@ -492,7 +492,7 @@ object Bench {
     // file is the belt to that suspender — a whole-file, single-line,
     // machine-readable record of the same JSON the tail carries.
     try {
-      val dir = java.nio.file.Paths.get("/root/repo/bench_local")
+      val dir = java.nio.file.Paths.get("bench_local")
       java.nio.file.Files.createDirectories(dir)
       java.nio.file.Files.writeString(dir.resolve("headline.json"),
         headlineLine + "\n")
@@ -558,7 +558,7 @@ object Bench {
           case _ => now
         })
       }
-      val dir = java.nio.file.Paths.get("/root/repo/bench_local")
+      val dir = java.nio.file.Paths.get("bench_local")
       java.nio.file.Files.createDirectories(dir)
       java.nio.file.Files.writeString(dir.resolve("last_full.json"),
         s"""{"metric":"full","queries":${fmt(baseline)},"sf":"$sfDir"}""" + "\n")
@@ -579,7 +579,7 @@ object Bench {
     * fall back to harvesting the newest artifact's tail. Total/robust:
     * any failure yields an empty map and the retime pass no-ops. */
   private def readPrevBench(sfDir: String): Map[String, Double] = try {
-    val full = java.nio.file.Paths.get("/root/repo/bench_local/last_full.json")
+    val full = java.nio.file.Paths.get("bench_local/last_full.json")
     val fromFile =
       if (java.nio.file.Files.exists(full)) {
         val txt = new String(java.nio.file.Files.readAllBytes(full),
@@ -601,7 +601,7 @@ object Bench {
     * fire a dozen spurious cross-sf retimes. */
   private def readPrevBenchArtifact(sfDir: String): Map[String, Double] = try {
     val re = "BENCH_r(\\d+)\\.json".r
-    val files = Option(new java.io.File("/root/repo").listFiles())
+    val files = Option(new java.io.File(".").listFiles())
       .getOrElse(Array.empty[java.io.File])
       .flatMap(f => f.getName match {
         case re(n) => Some((n.toInt, f))

@@ -24,9 +24,10 @@ import scala.jdk.CollectionConverters._
  */
 object GateStage {
 
-  /** Absolute staging root — the oracle runs as a separate DuckDB
-    * process with its own cwd, so the path cannot be relative. */
-  val Root = "/root/repo/target/gate_stage"
+  /** Absolute staging root under the working directory's target/ — the
+    * oracle runs as a separate DuckDB process with its own cwd, so the
+    * path cannot be relative. */
+  val Root: String = new java.io.File("target/gate_stage").getAbsolutePath
 
   // (stage name, scope) → path of the bytes written for it in this JVM.
   // Both Verify mains run every query BEFORE dumping oracle_sql.json, so

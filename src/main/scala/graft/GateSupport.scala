@@ -118,7 +118,7 @@ private[graft] object GateSupport {
   private[graft] def storedCorpusSketch(s: SparkSession,
       dir: String): graft.ops.KmvSketchStore.CorpusKmvSketch =
     memoized(kmvSketchCache, dir) {
-      val path = "/root/repo/target/kmv_sketch_gate/" +
+      val path = new java.io.File("target/kmv_sketch_gate").getAbsolutePath + "/" +
         java.lang.Integer.toHexString(dir.hashCode)
       graft.ops.KmvSketchStore.build(
         t(s, dir, "documents").filter(col("doc_id") % 10 =!= 0),

@@ -264,7 +264,7 @@ private[graft] object SparkEntryCore {
     // not just the session cache. ----
     "q_ivf_topk" -> ((s, dir) => {
       val idx = ivfCache.get(s, dir) {
-        val path = "/root/repo/target/ivf_gate/" +
+        val path = new java.io.File("target/ivf_gate").getAbsolutePath + "/" +
           java.lang.Integer.toHexString(dir.hashCode)
         val built = graft.ops.AnnIndex.buildIvf(t(s, dir, "embeddings"),
           "embedding", "vec_id", nlist = 4, sampleSize = 500)
@@ -297,7 +297,7 @@ private[graft] object SparkEntryCore {
     // corpus pass. Bit-identical to text_bm25 ⇒ same oracle. ----
     "text_bm25_indexed" -> ((s, dir) => {
       val idx = termIndexCache.get(s, dir) {
-        val path = "/root/repo/target/term_index_gate/" +
+        val path = new java.io.File("target/term_index_gate").getAbsolutePath + "/" +
           java.lang.Integer.toHexString(dir.hashCode)
         graft.ops.TermIndex.build(t(s, dir, "documents"), "text", "doc_id", path)
       }

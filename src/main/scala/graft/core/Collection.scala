@@ -59,10 +59,10 @@ class Collection private[core] (
   /** One immutable view of the collection: rows + count + the optional
     * indexes built OVER those rows, swapped together through a single
     * volatile (replaces documentsLock RWMutex, collection.go:21). Readers
-    * take ONE `snap` read and get a coherent (state, index) pair — with
-    * the previous four independent volatiles, a query could read the OLD
-    * flat index and then join back against the NEW state, silently
-    * returning deleted ids' holes / stale scores. Writers are all
+    * take ONE `snap` read and get a coherent (state, index) pair. The
+    * flat index carries each row's metadata and content beside its
+    * slab, so an indexed query reads that one object and never `df0`:
+    * it cannot pair an old index with new rows. Writers are all
     * `synchronized`, so copy-and-swap inside a writer is race-free;
     * displaced indexes unpersist AFTER the swap so no new reader can pick
     * them up. */
@@ -379,11 +379,15 @@ class Collection private[core] (
 
   /**
    * Build (or rebuild) the packed FLAT index for this collection's
-   * embeddings. Unfiltered `queryEmbedding` calls then scan packed
+   * embeddings, with each row's metadata and content decoded beside the
+   * slab in the same pass. Unfiltered `query`/`queryEmbedding`/
+   * `queryWithOptions` calls (no negative filter) then scan packed
    * primitive float[] slabs (~2× faster than the columnar DataFrame scan;
-   * see ops.VectorIndex) and join survivors back by id — the reference's
-   * own materialize-by-id step (collection.go:547-556). Any mutation
-   * drops the index; call again to rebuild.
+   * see ops.VectorIndex) and read the winners' documents from the
+   * index in the same pass — like the reference, which reads them from
+   * its in-memory map (collection.go:547-556) — with no Spark job on the
+   * driver-local tier. Any mutation drops the index; call again to
+   * rebuild.
    */
   def buildIndex(numBlocks: Int = 0): Unit = synchronized {
     val s = snap
@@ -391,8 +395,8 @@ class Collection private[core] (
       // explicit type: the this.type chain otherwise infers an
       // inexpressible existential (a -feature warning)
       val built: graft.ops.VectorIndex[String] = graft.ops.VectorIndex
-        .build[String](s.df0.filter(col("embedding").isNotNull), "id", "embedding",
-          embeddingDim(s.df0), numBlocks)
+        .buildWithPayload[String](s.df0.filter(col("embedding").isNotNull),
+          "id", "embedding", "metadata", "content", embeddingDim(s.df0), numBlocks)
         .persist().materialize()
       snap = s.copy(flat = Some(built))
       // release the DISPLACED index's persisted blocks after the swap
@@ -659,13 +663,8 @@ class Collection private[core] (
     * coherent; a concurrent swap surfaces as file loss, which
     * [[readCommitted]] retries on the new snapshot. */
   private def materializeByScore(
-      scored: DataFrame, base: DataFrame): Seq[QueryResult] =
-    joinBack(scored.collect().map(r => r.getString(0) -> r.getDouble(1)).toIndexedSeq, base)
-
-  /** Join `(id, score)` pairs, best first, back against `base` — the
-    * documents in the same order, `similarity` = the score as float. */
-  private def joinBack(
-      top: IndexedSeq[(String, Double)], base: DataFrame): Seq[QueryResult] = {
+      scored: DataFrame, base: DataFrame): Seq[QueryResult] = {
+    val top = scored.collect().map(r => r.getString(0) -> r.getDouble(1)).toIndexedSeq
     if (top.isEmpty) return Seq.empty
     val scores = top.toMap
     val order = top.map(_._1).zipWithIndex.toMap
@@ -698,17 +697,15 @@ class Collection private[core] (
     Filters.validateWhereDocument(whereDocument, "unsupported operator")
     // Index path: exhaustive packed scan when no filters narrow the scan
     // set (filters would have pruned BEFORE scoring, collection.go:521).
-    // ONE snap read: the index and the join-back rows come from the same
-    // committed view — reading them through separate volatiles let a
-    // concurrent commit pair an old index with the new state.
+    // One pass over ONE snap read: the winners' documents come from the
+    // index's own payload, so the result is (score desc, id asc) and
+    // coherent with the committed view the index was built over.
     readCommitted {
-      val s = snap
-      s.flat match {
+      snap.flat match {
         case Some(idx) if where.isEmpty && whereDocument.isEmpty && negVector == null =>
           val q = if (VectorFunctions.isNormalized(qv)) qv else VectorFunctions.normalize(qv)
-          // already (score desc, id asc); float → double → float is exact
-          joinBack(idx.topK(q, nResults).map { case (id, sc) => id -> sc.toDouble }.toIndexedSeq,
-            s.df0)
+          idx.topKRows(q, nResults).toIndexedSeq
+            .map(h => QueryResult(h.id, h.metadata, h.embedding, h.content, h.similarity))
         case _ =>
           queryDF(qv, nResults, where, whereDocument, negVector, negThreshold)
             .as[QueryResult].collect().toIndexedSeq

@@ -13,8 +13,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
  * r13/r14 audits pinned ("caps are never silent"), now evaluated
  * without a dedicated job per guard.
  *
+ * An action that fails after the guard ran reports its drop as well,
+ * with "(action failed)" appended to the WARN.
+ *
  * Registration is idempotent per session (weak keys — a stopped test
- * session must not pin the map). The listener bus delivers onSuccess
+ * session must not pin the map). The listener bus delivers its events
  * asynchronously, so the WARN trails the action by bus latency; specs
  * poll [[lastDrop]] rather than the log.
  */
@@ -42,27 +45,34 @@ private[graft] object GuardMetrics {
     if (!first) return
     spark.listenerManager.register(new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = {
-        qe.observedMetrics.foreach { case (name, row) =>
-          if (name.startsWith(Prefix)) {
-            seen.incrementAndGet()
-            val op = name.stripPrefix(Prefix)
-            val nb = row.getLong(0)
-            val nr = row.getLong(1)
-            val cap = row.getLong(2)
-            if (nb > 0) {
-              lastDrop = Some((op, nb, nr))
-              log.warn(s"$op: dropping $nb oversized LSH bucket(s) " +
-                s"(> $cap rows each, $nr banded rows skipped). " +
-                "Near-dups inside dropped buckets are NOT paired here — " +
-                "run exact dedup first (identical docs fill every bucket) " +
-                "or raise maxBucketSize.")
-            }
-          }
-        }
-      }
+          durationNs: Long): Unit = report(qe, "")
+      // the guard's build side may have run (and dropped buckets) before
+      // a later stage failed: that drop is reported too. An action that
+      // failed while planning has no plan to read metrics from.
       override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = ()
+          exception: Exception): Unit =
+        try report(qe, " (action failed)")
+        catch { case scala.util.control.NonFatal(_) => () }
     })
   }
+
+  /** WARN and record every non-empty guard drop the action observed. */
+  private def report(qe: QueryExecution, suffix: String): Unit =
+    qe.observedMetrics.foreach { case (name, row) =>
+      if (name.startsWith(Prefix)) {
+        seen.incrementAndGet()
+        val op = name.stripPrefix(Prefix)
+        val nb = row.getLong(0)
+        val nr = row.getLong(1)
+        val cap = row.getLong(2)
+        if (nb > 0) {
+          lastDrop = Some((op, nb, nr))
+          log.warn(s"$op: dropping $nb oversized LSH bucket(s) " +
+            s"(> $cap rows each, $nr banded rows skipped). " +
+            "Near-dups inside dropped buckets are NOT paired here — " +
+            "run exact dedup first (identical docs fill every bucket) " +
+            "or raise maxBucketSize." + suffix)
+        }
+      }
+    }
 }

@@ -34,7 +34,8 @@ final class Int8VectorIndex[K: Ordering] private (
   /** Exhaustive top-k by quantized similarity (≈ dot/cosine of the
     * original floats): score = (Σ qaᵢ·qbᵢ) · scale_row · scale_query,
     * ties by id ascending — the [[Quantize.quantizedTopK]] contract. */
-  def topK(query: Array[Float], k: Int): Array[(K, Double)] = scoreTopK(query, k)
+  def topK(query: Array[Float], k: Int): Array[(K, Double)] =
+    scoreTopK(query, k)((_, _) => ()).map { case (id, s, _) => (id, s) }
 }
 
 object Int8VectorIndex {
@@ -46,7 +47,7 @@ object Int8VectorIndex {
     /** The int accumulator is exact: |Σ qaᵢ·qbᵢ| ≤ 127²·d < 2³¹ for every
       * supported d (build rejects d > 100000). */
     private[ops] def scan(from: Int, until: Int, d: Int, q: (Array[Byte], Double),
-        heap: TopKHeap[K]): Unit = {
+        heap: TopKHeap[K], slab: Int): Unit = {
       val data = this.data
       val ids = this.ids
       val scales = this.scales
@@ -59,7 +60,7 @@ object Int8VectorIndex {
         while (i < d) { dot += data(off + i) * qb(i); i += 1 }
         // same double product, same order, as quantizedTopK's
         // (qdot.cast(double) * qscale) * qs — bit-equal scores
-        heap.insert(ids(r), dot.toDouble * scales(r) * qs)
+        heap.insert(ids(r), dot.toDouble * scales(r) * qs, slab, r)
         r += 1
       }
     }
@@ -80,21 +81,23 @@ object Int8VectorIndex {
     require(dim <= 100000,
       s"dim $dim exceeds the exact-int-accumulator bound (127²·d < 2³¹)")
     val blocks = PackedIndex.buildSlabs[K, Block[K]](
-        df, Seq(idCol, qvecCol, qscaleCol), numBlocks, dim)(
+        df, Seq(idCol, qvecCol, qscaleCol), Seq("array<int>", "double"), numBlocks, dim)(
       ids => Block(ids, new Array[Double](ids.length), new Array[Byte](ids.length * dim)),
-      (b, n, row) => {
-        val v = row.getSeq[Int](1)
-        if (v == null) throw new IllegalArgumentException(
-          s"cannot index a null qvec (id=${row.get(0)}); " +
+      (b, n, id, row) => {
+        if (row.isNullAt(1)) throw new IllegalArgumentException(
+          s"cannot index a null qvec (id=$id); " +
             "filter nulls before Int8VectorIndex.build")
-        if (v.length != dim) throw new IllegalArgumentException(
-          s"vectors must have the same length: ${v.length} vs $dim")
-        var i = n * dim
-        v.foreach { q =>
+        val v = row.getArray(1)
+        if (v.numElements() != dim) throw new IllegalArgumentException(
+          s"vectors must have the same length: ${v.numElements()} vs $dim")
+        val off = n * dim
+        var i = 0
+        while (i < dim) {
+          val q = v.getInt(i)
           if (q < -127 || q > 127) throw new IllegalArgumentException(
-            s"qvec value $q outside int8 range (id=${row.get(0)}); " +
+            s"qvec value $q outside int8 range (id=$id); " +
               "build from Quantize.quantize output")
-          b.data(i) = q.toByte
+          b.data(off + i) = q.toByte
           i += 1
         }
         b.scales(n) = row.getDouble(2)

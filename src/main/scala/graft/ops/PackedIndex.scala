@@ -4,7 +4,8 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
@@ -30,7 +31,9 @@ import org.apache.spark.storage.StorageLevel
  * the driver and queries scan it in-process on one shared pool — Spark's
  * per-job floor (~45 ms of scheduling at local[32]) would otherwise dwarf
  * a sub-ms scan. This mirrors the reference, whose scan is always
- * in-process; at 25k×1536 float32 the driver copy is ~150 MB.
+ * in-process; at 25k×1536 float32 the driver copy is ~150 MB, plus the
+ * payload a [[VectorIndex.buildWithPayload]] index carries (the budget
+ * counts slab bytes only).
  */
 abstract class PackedIndex[K, Q, B <: Slab[K, Q]] private[ops] (
     val blocks: RDD[B],
@@ -46,41 +49,54 @@ abstract class PackedIndex[K, Q, B <: Slab[K, Q]] private[ops] (
   protected def prepare(query: Array[Float]): Q
 
   /** Exhaustive top-k, (score desc, id asc) — ties break by id
-    * ascending, the DataFrame tiers' contract, on every tier and layout. */
-  protected def scoreTopK(query: Array[Float], k: Int): Array[(K, Double)] = {
+    * ascending, the DataFrame tiers' contract, on every tier and layout.
+    * Each winner comes back with `project(slab, row)` of its own row,
+    * read by the row position the heap kept beside its id: on the
+    * driver-local tier for the k overall winners only, on the
+    * distributed tier inside the scan task for that partition's at most
+    * k winners — one pass, no lookup by id. */
+  protected def scoreTopK[R](query: Array[Float], k: Int)(
+      project: (B, Int) => R): Array[(K, Double, R)] = {
     require(k > 0, "k must be > 0") // k=0 indexed scores(-1) opaquely
     require(query.length == dim,
       s"vectors must have the same length: ${query.length} vs $dim")
     val q = prepare(query)
     val d = dim
     val o = ord
+    val byRank = Ordering.by[Winner[K], Double](-_.score).orElseBy(_.id)(o)
     // Snapshot the @volatile once: a concurrent unpersist() nulling the
     // field between a bare null-check and a re-read would NPE mid-query.
     val snapshot = local
-    val partial: Array[(K, Double)] =
+    val top: Seq[(Winner[K], R)] =
       if (snapshot != null) {
         // row-range chunks fanned out on the shared pool, one heap each
         val pool = PackedIndex.scanPool(blocks.sparkContext)
-        snapshot.flatMap { b =>
+        snapshot.indices.flatMap { slab =>
+          val b = snapshot(slab)
           (0 until b.ids.length by PackedIndex.FirstChunkRows).map { from =>
             val until = math.min(from + PackedIndex.FirstChunkRows, b.ids.length)
-            pool.submit(new java.util.concurrent.Callable[Array[(K, Double)]] {
-              def call(): Array[(K, Double)] = {
+            pool.submit(new java.util.concurrent.Callable[Array[Winner[K]]] {
+              def call(): Array[Winner[K]] = {
                 val heap = new TopKHeap[K](k, o)
-                b.scan(from, until, d, q, heap)
+                b.scan(from, until, d, q, heap, slab)
                 heap.result
               }
             })
           }
-        }.flatMap(_.get())
+        }.flatMap(_.get()).sorted(byRank).take(k)
+          .map(w => w -> project(snapshot(w.slab), w.row))
       } else {
         blocks.mapPartitions { it =>
           val heap = new TopKHeap[K](k, o)
-          it.foreach(b => b.scan(0, b.ids.length, d, q, heap))
-          heap.result.iterator
-        }.collect()
+          // a cached partition's blocks are resident in the block
+          // manager already; holding their references until the heap is
+          // final lets the winners be projected without a second pass
+          val seen = scala.collection.mutable.ArrayBuffer.empty[B]
+          it.foreach { b => b.scan(0, b.ids.length, d, q, heap, seen.length); seen += b }
+          heap.result.iterator.map(w => w -> project(seen(w.slab), w.row))
+        }.collect().toSeq.sortBy(_._1)(byRank).take(k)
       }
-    partial.sorted(Ordering.by[(K, Double), Double](-_._2).orElseBy(_._1)(o)).take(k)
+    top.map { case (w, r) => (w.id, w.score, r) }.toArray
   }
 
   /** Count of indexed vectors. */
@@ -126,18 +142,27 @@ trait Slab[K, Q] extends Serializable {
   def ids: Array[K]
 
   /** Offer rows [from, until) scored against the prepared query to the
-    * heap — the kind's one monomorphic scoring loop. */
-  private[ops] def scan(from: Int, until: Int, d: Int, q: Q, heap: TopKHeap[K]): Unit
+    * heap, each at its position (`slab`, row) — the kind's one
+    * monomorphic scoring loop. */
+  private[ops] def scan(from: Int, until: Int, d: Int, q: Q, heap: TopKHeap[K], slab: Int): Unit
 }
+
+/** One heap winner: its id and score, and its row position — row `row`
+  * of the scan's `slab`-th slab. */
+private[ops] final case class Winner[K](id: K, score: Double, slab: Int, row: Int)
 
 /** The packed tier's one bounded top-k: the k strongest rows under
   * (score desc, id asc) — the SAME total order as every DataFrame tier
   * (orderBy(desc(similarity), asc(id))), so tied results never depend on
   * block or partition layout. The id comparison only runs on exact score
-  * equality, so the tie-aware branch costs nothing on the hot path. */
+  * equality, so the tie-aware branch costs nothing on the hot path. Each
+  * slot keeps its row position beside the id, so a winner's row can be
+  * read back without a lookup by id. */
 private[ops] final class TopKHeap[K](k: Int, ord: Ordering[K]) {
   private[this] val ids = new Array[Any](k)
   private[this] val scores = new Array[Double](k)
+  private[this] val slabs = new Array[Int](k)
+  private[this] val rows = new Array[Int](k)
   private[this] var size = 0
   private[this] var minIdx = -1
 
@@ -153,19 +178,23 @@ private[ops] final class TopKHeap[K](k: Int, ord: Ordering[K]) {
     }
   }
 
-  def insert(id: K, s: Double): Unit = {
+  def insert(id: K, s: Double, slab: Int, row: Int): Unit = {
     if (size < k) {
-      ids(size) = id; scores(size) = s; size += 1
+      put(size, id, s, slab, row); size += 1
       if (size == k) establishMin()
     } else if (s > scores(minIdx) || (s == scores(minIdx) &&
         ord.compare(id, ids(minIdx).asInstanceOf[K]) < 0)) {
-      ids(minIdx) = id; scores(minIdx) = s
+      put(minIdx, id, s, slab, row)
       establishMin()
     }
   }
 
-  def result: Array[(K, Double)] =
-    Array.tabulate(size)(j => (ids(j).asInstanceOf[K], scores(j)))
+  private def put(j: Int, id: K, s: Double, slab: Int, row: Int): Unit = {
+    ids(j) = id; scores(j) = s; slabs(j) = slab; rows(j) = row
+  }
+
+  def result: Array[Winner[K]] =
+    Array.tabulate(size)(j => Winner(ids(j).asInstanceOf[K], scores(j), slabs(j), rows(j)))
 }
 
 object PackedIndex {
@@ -206,18 +235,28 @@ object PackedIndex {
 
   /** The one streaming slab builder: rows go straight into fixed-size
     * slabs of `rowBytes`-wide rows — no per-row arrays, no grow-doubling,
-    * no buffer+slab double-live window. `alloc` makes an empty slab over
-    * the given id array, `put` decodes row columns 1.. into slot n, and
+    * no buffer+slab double-live window. Rows are Spark's internal rows,
+    * decoded by position, so columns 1.. must have the simple type names
+    * `types`; a vector is copied element by element into the slab, never
+    * boxed. `alloc` makes an empty slab over the given id array, `put`
+    * decodes columns 1.. of the row with the given id into slot n, and
     * `trim` cuts the last partial slab to n rows so persisted bytes ==
     * data bytes. Small corpora want few partitions (per-task scheduling
     * dominates sub-ms scans); `numBlocks = 0` keeps the upstream
     * partitioning. */
   private[ops] def buildSlabs[K: ClassTag, B: ClassTag](
-      df: DataFrame, cols: Seq[String], numBlocks: Int, rowBytes: Int)(
-      alloc: Array[K] => B, put: (B, Int, Row) => Unit, trim: (B, Int) => B): RDD[B] = {
-    val rows0 = df.select(cols.map(col): _*).rdd
+      df: DataFrame, cols: Seq[String], types: Seq[String], numBlocks: Int, rowBytes: Int)(
+      alloc: Array[K] => B, put: (B, Int, K, InternalRow) => Unit, trim: (B, Int) => B): RDD[B] = {
+    val selected = df.select(cols.map(col): _*)
+    selected.schema.tail.zip(types).foreach { case (f, t) =>
+      val actual = f.dataType.simpleString
+      require(actual == t, s"column ${f.name} must be $t, got $actual")
+    }
+    val idType = selected.schema.head.dataType
+    val rows0 = selected.queryExecution.toRdd
     val rows = if (numBlocks > 0) rows0.coalesce(numBlocks) else rows0
     rows.mapPartitions { it =>
+      val toId = CatalystTypeConverters.createToScalaConverter(idType)
       val capRows = math.max(1, ChunkBytes / rowBytes)
       var nextRows = math.min(FirstChunkRows, capRows)
       new Iterator[B] {
@@ -229,8 +268,9 @@ object PackedIndex {
           var n = 0
           while (n < ids.length && it.hasNext) {
             val row = it.next()
-            put(slab, n, row)
-            ids(n) = row.getAs[K](0)
+            val id = toId(row.get(0, idType)).asInstanceOf[K]
+            put(slab, n, id, row)
+            ids(n) = id
             n += 1
           }
           if (n == ids.length) slab else trim(slab, n)

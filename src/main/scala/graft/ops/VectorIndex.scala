@@ -4,6 +4,8 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.types.{MapType, StringType}
 
 /**
  * FLAT (exhaustive) float32 vector index — the float32 slab kind of the
@@ -20,7 +22,10 @@ import org.apache.spark.sql.DataFrame
  */
 final class VectorIndex[K: Ordering] private (
     slabs: RDD[VectorIndex.Block[K]],
-    d: Int) extends PackedIndex[K, Array[Float], VectorIndex.Block[K]](slabs, d, 4) {
+    d: Int,
+    /** the blocks carry each row's metadata and content */
+    hasPayload: Boolean)
+    extends PackedIndex[K, Array[Float], VectorIndex.Block[K]](slabs, d, 4) {
 
   protected def prepare(query: Array[Float]): Array[Float] = query
 
@@ -29,15 +34,33 @@ final class VectorIndex[K: Ordering] private (
     * engine widens each float32 score to double (exact, order-preserving);
     * narrowing it back here returns the kernel's float bit for bit. */
   def topK(query: Array[Float], k: Int): Array[(K, Float)] =
-    scoreTopK(query, k).map { case (id, s) => (id, s.toFloat) }
+    scoreTopK(query, k)((_, _) => ()).map { case (id, s, _) => (id, s.toFloat) }
+
+  /** [[topK]] with each winner's whole row, read from the slab in the
+    * same pass: the embedding is a fresh copy (a caller never holds an
+    * array that aliases the slab), metadata and content are the payload
+    * the build decoded. */
+  def topKRows(query: Array[Float], k: Int): Array[VectorIndex.Hit[K]] = {
+    require(hasPayload, "topKRows needs an index built by VectorIndex.buildWithPayload")
+    val d = dim
+    scoreTopK(query, k) { (b, r) =>
+      (java.util.Arrays.copyOfRange(b.data, r * d, r * d + d), b.metadata(r), b.content(r))
+    }.map { case (id, s, (v, m, c)) => VectorIndex.Hit(id, s.toFloat, v, m, c) }
+  }
 }
 
 object VectorIndex {
 
-  /** One block = a packed row-major float32 slab + parallel id array. */
-  case class Block[K](ids: Array[K], data: Array[Float]) extends Slab[K, Array[Float]] {
+  /** One block = a packed row-major float32 slab + parallel id array and,
+    * when built with a payload, parallel metadata and content arrays
+    * (null otherwise). */
+  case class Block[K](
+      ids: Array[K],
+      data: Array[Float],
+      metadata: Array[Map[String, String]] = null,
+      content: Array[String] = null) extends Slab[K, Array[Float]] {
     private[ops] def scan(from: Int, until: Int, d: Int, q: Array[Float],
-        heap: TopKHeap[K]): Unit = {
+        heap: TopKHeap[K], slab: Int): Unit = {
       val data = this.data
       val ids = this.ids
       var r = from
@@ -46,11 +69,19 @@ object VectorIndex {
         var s = 0.0f
         var i = 0
         while (i < d) { s += data(off + i) * q(i); i += 1 }
-        heap.insert(ids(r), s)
+        heap.insert(ids(r), s, slab, r)
         r += 1
       }
     }
   }
+
+  /** One [[VectorIndex.topKRows]] result: a document and its similarity. */
+  case class Hit[K](
+      id: K,
+      similarity: Float,
+      embedding: Array[Float],
+      metadata: Map[String, String],
+      content: String)
 
   /** Build from a DataFrame's (id, embedding) columns. Rows whose vector
     * is null or of another dimension fail the build (vectors must have
@@ -60,23 +91,60 @@ object VectorIndex {
       idCol: String,
       vecCol: String,
       dim: Int,
-      numBlocks: Int = 0): VectorIndex[K] = {
+      numBlocks: Int = 0): VectorIndex[K] =
+    slabs[K](df, Seq(idCol, vecCol), dim, numBlocks)
+
+  /** [[build]] that also keeps each row's `metadataCol`
+    * (map<string, string>) and `contentCol` (string) beside the slab,
+    * decoded in the same pass as the vectors, so [[VectorIndex.topKRows]]
+    * answers with whole rows. */
+  def buildWithPayload[K: ClassTag: Ordering](
+      df: DataFrame,
+      idCol: String,
+      vecCol: String,
+      metadataCol: String,
+      contentCol: String,
+      dim: Int,
+      numBlocks: Int = 0): VectorIndex[K] =
+    slabs[K](df, Seq(idCol, vecCol, metadataCol, contentCol), dim, numBlocks)
+
+  /** Columns 0 and 1 are id and vector; columns 2 and 3, when present,
+    * are the metadata and content payload. */
+  private def slabs[K: ClassTag: Ordering](
+      df: DataFrame, cols: Seq[String], dim: Int, numBlocks: Int): VectorIndex[K] = {
     require(dim > 0, s"dim must be > 0, got $dim")
-    val blocks = PackedIndex.buildSlabs[K, Block[K]](df, Seq(idCol, vecCol), numBlocks, 4 * dim)(
-      ids => Block(ids, new Array[Float](ids.length * dim)),
-      (b, n, row) => {
-        val v = row.getSeq[Float](1)
-        // diagnostic, not a bare NPE at v.length: the corpus schema
-        // allows embedding-less rows (embed-on-write), and callers are
-        // expected to filter them before indexing
-        if (v == null) throw new IllegalArgumentException(
-          s"cannot index a null vector (id=${row.get(0)}); " +
-            "filter embedding IS NOT NULL before VectorIndex.build")
-        if (v.length != dim) throw new IllegalArgumentException(
-          s"vectors must have the same length: ${v.length} vs $dim")
-        v.copyToArray(b.data, n * dim)
+    val payload = cols.length == 4
+    val metadataType = MapType(StringType, StringType)
+    val toMetadata = CatalystTypeConverters.createToScalaConverter(metadataType)
+    val types = Seq("array<float>", "map<string,string>", "string").take(cols.length - 1)
+    val blocks = PackedIndex.buildSlabs[K, Block[K]](df, cols, types, numBlocks, 4 * dim)(
+      ids => {
+        val data = new Array[Float](ids.length * dim)
+        if (payload) Block(ids, data, new Array[Map[String, String]](ids.length),
+          new Array[String](ids.length))
+        else Block(ids, data)
       },
-      (b, n) => Block(b.ids.take(n), java.util.Arrays.copyOf(b.data, n * dim)))
-    new VectorIndex[K](blocks, dim)
+      (b, n, id, row) => {
+        // diagnostic, not a bare NPE: the corpus schema allows
+        // embedding-less rows (embed-on-write), and callers are expected
+        // to filter them before indexing
+        if (row.isNullAt(1)) throw new IllegalArgumentException(
+          s"cannot index a null vector (id=$id); " +
+            "filter embedding IS NOT NULL before VectorIndex.build")
+        val v = row.getArray(1)
+        if (v.numElements() != dim) throw new IllegalArgumentException(
+          s"vectors must have the same length: ${v.numElements()} vs $dim")
+        val off = n * dim
+        var i = 0
+        while (i < dim) { b.data(off + i) = v.getFloat(i); i += 1 }
+        if (payload) {
+          b.metadata(n) = toMetadata(row.get(2, metadataType)).asInstanceOf[Map[String, String]]
+          b.content(n) = if (row.isNullAt(3)) null else row.getUTF8String(3).toString
+        }
+      },
+      (b, n) => Block(b.ids.take(n), java.util.Arrays.copyOf(b.data, n * dim),
+        if (payload) b.metadata.take(n) else null,
+        if (payload) b.content.take(n) else null))
+    new VectorIndex[K](blocks, dim, payload)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{DB, Document, NegativeMode, NegativeQueryOptions, QueryOptions}
+import graft.core.{DB, Document, NegativeMode, NegativeQueryOptions, QueryOptions, QueryResult}
 import graft.embed.{ConstEmbeddingFunc, HashingEmbeddingFunc}
 
 /** API parity with reference collection_test.go (add/query/delete/errors). */
@@ -381,4 +381,111 @@ class CollectionSpec extends SparkSuite {
   }
 
   private def msgOf(f: => Unit): String = intercept[Exception](f).getMessage
+
+  // ---- single-pass indexed query ≡ the queryDF path ----
+
+  private val tieVec = Array(0.6f, 0.8f, 0f, 0f, 0f, 0f, 0f, 0f)
+
+  /** 40 docs over d = 8. Five share `tieVec` (d03, d11, d19, d27, d35),
+    * every 4th has null content, and by i % 3 the metadata is empty, two
+    * entries or null. */
+  private lazy val singlePassDocs: Seq[Document] = {
+    val rnd = new scala.util.Random(31)
+    (0 until 40).map { i =>
+      Document(f"d$i%02d",
+        metadata = i % 3 match {
+          case 0 => Map.empty
+          case 1 => Map("k" -> s"v$i", "g" -> (i % 2).toString)
+          case _ => null
+        },
+        embedding = if (i % 8 == 3) tieVec else Array.fill(8)(rnd.nextFloat() * 2f - 1f),
+        content = if (i % 4 == 0) null else s"content of doc $i")
+    }
+  }
+
+  /** Every field of each result, floats as raw bits: equal keys mean
+    * bit-equal results in the same order. */
+  private def bits(rs: Seq[QueryResult]): Seq[Any] = rs.map { r =>
+    (r.id, java.lang.Float.floatToRawIntBits(r.similarity), r.metadata, r.content,
+      r.embedding.toSeq.map(java.lang.Float.floatToRawIntBits))
+  }
+
+  /** Each public unfiltered query at k = 1, 10 and count(), answered by
+    * the queryDF path before buildIndex and by the index after it, must
+    * be bit-equal; a returned embedding must not alias the slab. */
+  private def singlePassMatchesQueryDF(db: DB): Unit = {
+    val c = db.createCollection("single-pass")
+    c.addDocuments(singlePassDocs)
+    val n = c.count().toInt
+    val q = Array(0.3f, -1.2f, 0.5f, 0.9f, -0.1f, 0.4f, 0.7f, -0.6f) // not normalized
+    val calls: Seq[(String, () => Seq[QueryResult])] = Seq(1, 10, n).flatMap { k =>
+      Seq(
+        s"queryEmbedding k=$k" -> (() => c.queryEmbedding(q, k)),
+        s"ties k=$k" -> (() => c.queryEmbedding(tieVec, k)),
+        s"query k=$k" -> (() => c.query("content of doc", k)),
+        s"queryWithOptions subtract k=$k" -> (() => c.queryWithOptions(QueryOptions(
+          queryEmbedding = q, nResults = k,
+          negative = NegativeQueryOptions(embedding = tieVec)))))
+    }
+    val viaQueryDF = calls.map { case (_, f) => bits(f()) }
+    assert(!c.hasIndex)
+    c.buildIndex()
+    assert(c.hasIndex)
+    calls.zip(viaQueryDF).foreach { case ((name, f), want) =>
+      assert(bits(f()) === want, name)
+    }
+    assert(c.queryEmbedding(tieVec, 5).map(_.id) === Seq("d03", "d11", "d19", "d27", "d35"),
+      "five tied vectors: id asc")
+    val first = c.queryEmbedding(tieVec, 3)
+    val want = bits(first)
+    first.foreach(r => java.util.Arrays.fill(r.embedding, 42f))
+    assert(bits(c.queryEmbedding(tieVec, 3)) === want, "a returned embedding aliases the index")
+  }
+
+  test("indexed query is bit-equal to the queryDF path: in-memory collection") {
+    singlePassMatchesQueryDF(withLogLevel(DB.inMemory(spark, new HashingEmbeddingFunc(8))))
+  }
+
+  test("indexed query is bit-equal to the queryDF path: persistent collection") {
+    val root = java.nio.file.Files.createTempDirectory("graft-single-pass").toString
+    singlePassMatchesQueryDF(withLogLevel(DB.persistent(spark, root, new HashingEmbeddingFunc(8))))
+  }
+
+  test("an indexed, unfiltered query on a driver-local collection runs no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val c = withLogLevel(DB.inMemory(spark, new HashingEmbeddingFunc(8)))
+      .createCollection("zero-job")
+    c.addDocuments(singlePassDocs)
+    c.buildIndex()
+    c.queryEmbedding(tieVec, 10) // warm
+    val group = "collection-zero-job"
+    val sentinel = "collection-zero-job-sentinel"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val p = js.properties
+        if (p != null && p.getProperty("spark.jobGroup.id") == group) {
+          if (p.getProperty("spark.job.description") == sentinel) sentinelSeen.countDown()
+          else jobs.incrementAndGet()
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "queries under test")
+    try {
+      assert(c.queryEmbedding(tieVec, 10).length === 10)
+      // one bus delivers job starts in order: once the sentinel's start
+      // is seen, every job the query started has been counted
+      sc.setJobDescription(sentinel)
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinelSeen.await(30, java.util.concurrent.TimeUnit.SECONDS), "sentinel job not seen")
+      assert(jobs.get() === 0, s"indexed query ran ${jobs.get()} Spark job(s)")
+    } finally {
+      sc.clearJobGroup()
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }

@@ -349,6 +349,34 @@ class DedupSpec extends SparkSuite {
     assert(nr === nb * 120, s"nr = $nr for nb = $nb")
   }
 
+  test("guard drop is reported when the action fails after the guard ran") {
+    // the guard's build side runs first; a non-deterministic UDF that
+    // throws on every candidate pair then fails the main action, which
+    // the listener sees only through onFailure. 130 copies, not the 120
+    // of the tests above, so a late event from them cannot pass this one
+    import graft.ops.GuardMetrics
+    GuardMetrics.lastDrop = None
+    val mega = (0 until 130).map(i => (i.toLong, "boiler plate page body"))
+    val pair = Seq(
+      (900L, "rare unique sentence alpha beta gamma"),
+      (901L, "rare unique sentence alpha beta gamma"))
+    val df = (mega ++ pair).toDF("doc_id", "text")
+    val boom = udf((id: Long) => {
+      if (id >= 0) throw new IllegalStateException("planted failure after the guard")
+      id
+    }).asNondeterministic()
+    val candidates = Dedup.minhashCandidates(df, "text", "doc_id",
+      numHashes = 64, bands = 16, shingleSize = 1, maxBucketSize = 50)
+    withLogLevel {
+      intercept[Exception](candidates.select(boom(col(candidates.columns(0)))).collect())
+    }
+    def reported = GuardMetrics.lastDrop.exists { case (_, nb, nr) => nb > 0 && nr == nb * 130 }
+    val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
+    while (!reported && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(reported, s"a guard drop in a failed action went unreported: ${GuardMetrics.lastDrop}")
+    assert(GuardMetrics.lastDrop.map(_._1) === Some("minhashCandidates"))
+  }
+
   test("bucket-skew guard bounds embedding-LSH candidates too") {
     val v = Array(0.6f, 0.8f, 0f, 0f)
     val mega = (0 until 80).map(i => (i.toLong, v))

@@ -93,6 +93,44 @@ class VectorSearchSpec extends SparkSuite with PackedIndexCases {
     } finally localIdx.unpersist()
   }
 
+  test("payload-carrying index returns equal rows on the driver-local and distributed tier") {
+    // 500 corpus rows plus five copies of q0 (ids 1000-1004), which tie
+    // with row 0; null and empty metadata, null content
+    val ties = (1000L to 1004L).map(id => (id, q0)).toDF("vec_id", "embedding")
+    val docs = withLogLevel(emb.select("vec_id", "embedding").union(ties)
+      .withColumn("metadata",
+        when($"vec_id" % 3 === 0, typedLit(Map.empty[String, String]))
+          .when($"vec_id" % 3 === 1, map(lit("k"), concat(lit("v"), $"vec_id".cast("string"))))
+          .otherwise(lit(null).cast("map<string,string>")))
+      .withColumn("content",
+        when($"vec_id" % 4 === 0, lit(null).cast("string"))
+          .otherwise(concat(lit("doc "), $"vec_id".cast("string"))))
+      .repartition(3))
+    val source = docs.collect().map { r =>
+      r.getLong(0) -> ((r.getSeq[Float](1), r.getMap[String, String](2), r.getString(3)))
+    }.toMap
+    def build() = VectorIndex.buildWithPayload[Long](docs, "vec_id", "embedding",
+      "metadata", "content", q0.length, 3).persist()
+    val local = build().materialize()
+    val distributed = build().materialize(forceDistributed = true)
+    def rows(idx: VectorIndex[Long], k: Int) = idx.topKRows(q0, k).toSeq.map { h =>
+      (h.id, java.lang.Float.floatToRawIntBits(h.similarity), h.embedding.toSeq, h.metadata, h.content)
+    }
+    try {
+      assert(local.isLocal && !distributed.isLocal)
+      for (k <- Seq(1, 6, 10, source.size)) withClue(s"k = $k: ") {
+        val a = rows(local, k)
+        assert(a === rows(distributed, k))
+        assert(a.map(r => (r._1, r._2)) ===
+          local.topK(q0, k).toSeq.map { case (id, s) => (id, java.lang.Float.floatToRawIntBits(s)) })
+        a.foreach { case (id, _, v, m, c) => assert((v, m, c) === source(id), s"row $id") }
+      }
+      assert(rows(local, 6).map(_._1) === Seq(0L, 1000L, 1001L, 1002L, 1003L, 1004L), "ties: id asc")
+      intercept[IllegalArgumentException](
+        VectorIndex.build[Long](docs, "vec_id", "embedding", q0.length).topKRows(q0, 1))
+    } finally { local.unpersist(); distributed.unpersist(blocking = true) }
+  }
+
   test("thresholdSearch returns exactly rows above threshold") {
     val viaFilter = VectorSearch.thresholdSearch(emb, "embedding", q0, 0.3)
       .select("vec_id").as[Long].collect().toSet
