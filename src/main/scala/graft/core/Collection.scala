@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -25,9 +26,11 @@ import graft.functions.VectorFunctions.{dot_const_f32, is_normalized, normalize_
  *    exactly the reference's per-goroutine-heap algorithm (query.go:16-83)
  *    but distributed, with NO full shuffle and NO full sort.
  *  - The query vector travels as a literal (few KB) — no broadcast join.
- *  - Filters are pushed to the parquet scan; the expensive dot product
- *    only runs on filter survivors (reference orders it the same way,
- *    collection.go:521 before :542).
+ *  - Filters run before scoring, so the expensive dot product only runs
+ *    on filter survivors (reference orders it the same way,
+ *    collection.go:521 before :542): pushed to the parquet scan on the
+ *    DataFrame path, tested on each row's payload inside the packed
+ *    scan once [[buildIndex]] has run.
  */
 class Collection private[core] (
     val name: String,
@@ -380,12 +383,14 @@ class Collection private[core] (
   /**
    * Build (or rebuild) the packed FLAT index for this collection's
    * embeddings, with each row's metadata and content decoded beside the
-   * slab in the same pass. Unfiltered `query`/`queryEmbedding`/
-   * `queryWithOptions` calls (no negative filter) then scan packed
+   * slab in the same pass. Every exact `query`/`queryEmbedding`/
+   * `queryWithOptions`/`queryEmbeddingWhere` call then scans packed
    * primitive float[] slabs (~2× faster than the columnar DataFrame scan;
-   * see ops.VectorIndex) and read the winners' documents from the
-   * index in the same pass — like the reference, which reads them from
-   * its in-memory map (collection.go:547-556) — with no Spark job on the
+   * see ops.VectorIndex) in one pass: `where`, `whereDocument`, clauses
+   * and the negative filter are tested on each row's payload before it
+   * is scored, and the winners' documents are read from the index —
+   * like the reference, which filters and reads them from its in-memory
+   * map (collection.go:521, :547-556) — with no Spark job on the
    * driver-local tier. Any mutation drops the index; call again to
    * rebuild.
    */
@@ -695,26 +700,47 @@ class Collection private[core] (
       throw new IllegalArgumentException(
         "nResults must be <= the number of documents in the collection")
     Filters.validateWhereDocument(whereDocument, "unsupported operator")
-    // Index path: exhaustive packed scan when no filters narrow the scan
-    // set (filters would have pruned BEFORE scoring, collection.go:521).
-    // One pass over ONE snap read: the winners' documents come from the
-    // index's own payload, so the result is (score desc, id asc) and
-    // coherent with the committed view the index was built over.
+    exactQuery(qv, nResults, filterOf(where, whereDocument), negVector, negThreshold)
+  }
+
+  private def filterOf(
+      where: Map[String, String],
+      whereDocument: Map[String, String]): Option[Filters.Clause] =
+    if (where.isEmpty && whereDocument.isEmpty) None
+    else Some(Filters.clause(where, whereDocument))
+
+  /** One exact query over ONE snap read. A flat-indexed collection
+    * answers from the index in one pass: `filter` and the negative
+    * filter are tested on each row's payload before it is scored
+    * (collection.go:521 before :542), and the winners' documents come
+    * from the payload too, so the result is (score desc, id asc) and
+    * coherent with the committed view the index was built over. An
+    * unindexed collection runs the DataFrame plan of [[queryDF]]. */
+  private def exactQuery(
+      qv: Array[Float],
+      nResults: Int,
+      filter: Option[Filters.Clause],
+      negVector: Array[Float],
+      negThreshold: Float): Seq[QueryResult] = {
+    // checked up front on both paths, so a negative of another
+    // dimension fails even when the filter passes no row
+    if (negVector != null && negVector.length != qv.length) throw new IllegalArgumentException(
+      s"vectors must have the same length: ${negVector.length} vs ${qv.length}")
+    val keep = Collection.keep[String](filter, negVector, negThreshold)
     readCommitted {
       snap.flat match {
-        case Some(idx) if where.isEmpty && whereDocument.isEmpty && negVector == null =>
+        case Some(idx) =>
           val q = if (VectorFunctions.isNormalized(qv)) qv else VectorFunctions.normalize(qv)
-          idx.topKRows(q, nResults).toIndexedSeq
+          idx.topKRows(q, nResults, keep).toIndexedSeq
             .map(h => QueryResult(h.id, h.metadata, h.embedding, h.content, h.similarity))
-        case _ =>
-          queryDF(qv, nResults, where, whereDocument, negVector, negThreshold)
-            .as[QueryResult].collect().toIndexedSeq
+        case None => plan(qv, nResults, filter, negVector, negThreshold)
+          .as[QueryResult].collect().toIndexedSeq
       }
     }
   }
 
   /** Clause-combinator query ($and/$or/$not — reference roadmap,
-    * README.md:179-180): same pipeline with a compiled clause predicate. */
+    * README.md:179-180): same pipeline with the clause as its filter. */
   def queryEmbeddingWhere(
       queryEmbedding: Array[Float],
       nResults: Int,
@@ -726,17 +752,7 @@ class Collection private[core] (
     if (nResults > count())
       throw new IllegalArgumentException(
         "nResults must be <= the number of documents in the collection")
-    val q = if (VectorFunctions.isNormalized(queryEmbedding)) queryEmbedding
-            else VectorFunctions.normalize(queryEmbedding)
-    // same embedding-null guard as queryDF (see the comment there)
-    readCommitted {
-      df.filter(col("embedding").isNotNull)
-        .filter(Filters.compile(clause))
-        .withColumn("similarity", dot_const_f32(col("embedding"), q))
-        .orderBy(desc("similarity"), asc("id"))
-        .limit(nResults)
-        .as[QueryResult].collect().toIndexedSeq
-    }
+    exactQuery(queryEmbedding, nResults, Some(clause), negVector = null, negThreshold = 0f)
   }
 
   /** Lazy DataFrame form of the query — for composition / explain / tests. */
@@ -746,7 +762,15 @@ class Collection private[core] (
       where: Map[String, String] = Map.empty,
       whereDocument: Map[String, String] = Map.empty,
       negVector: Array[Float] = null,
-      negThreshold: Float = 0f): DataFrame = {
+      negThreshold: Float = 0f): DataFrame =
+    plan(qv, nResults, filterOf(where, whereDocument), negVector, negThreshold)
+
+  private def plan(
+      qv: Array[Float],
+      nResults: Int,
+      filter: Option[Filters.Clause],
+      negVector: Array[Float],
+      negThreshold: Float): DataFrame = {
     // normalize query vector if needed (collection.go:530-532)
     val q = if (VectorFunctions.isNormalized(qv)) qv else VectorFunctions.normalize(qv)
     // Embedding-less rows (externally landed parquet read by
@@ -756,14 +780,14 @@ class Collection private[core] (
     // .as[QueryResult] would crash on the primitive similarity field.
     // The negVector branch filtered them implicitly (null <= thr is
     // never true); this keeps both paths agreeing explicitly.
-    var plan = df.filter(col("embedding").isNotNull)
-      .filter(Filters.predicate(where, whereDocument))
+    var scan = df.filter(col("embedding").isNotNull)
+    filter.foreach(c => scan = scan.filter(Filters.compile(c)))
     if (negVector != null) {
       // NEGATIVE_MODE_FILTER: drop docs too similar to the negative
       // (query.go:221-231): keep negSim <= threshold.
-      plan = plan.filter(dot_const_f32(col("embedding"), negVector) <= lit(negThreshold))
+      scan = scan.filter(dot_const_f32(col("embedding"), negVector) <= lit(negThreshold))
     }
-    plan
+    scan
       .withColumn("similarity", dot_const_f32(col("embedding"), q))
       // TakeOrderedAndProject = distributed bounded top-k heap (query.go:43-45)
       .orderBy(desc("similarity"), asc("id"))
@@ -792,6 +816,26 @@ class Collection private[core] (
     old.flat.foreach(_.unpersist())
     old.lsh.foreach(_.unpersist())
     old.ivf.foreach(_.unpersist())
+  }
+}
+
+private[graft] object Collection {
+
+  /** The row test of a filtered indexed query, or None when nothing
+    * narrows the scan: the payload filter, then NegativeMode.Filter's
+    * keep-if `dot(row, negative) <= threshold` (query.go:221-231). The
+    * dot is the sequential float sum `dot_const_f32` runs and the
+    * comparison is Spark's float order, so each keep/drop decision
+    * equals the DataFrame path's. Built here, outside the collection,
+    * so the distributed tier ships only the filter to its tasks. */
+  def keep[K](filter: Option[Filters.Clause], negative: Array[Float], threshold: Float)
+      : Option[(graft.ops.VectorIndex.Block[K], Int) => Boolean] = {
+    val payload = filter.map(Filters.eval)
+    if (payload.isEmpty && negative == null) None
+    else Some { (b, r) =>
+      payload.forall(_(b.metadata(r), b.content(r))) &&
+        (negative == null || SQLOrderingUtil.compareFloats(b.dot(r, negative), threshold) <= 0)
+    }
   }
 }
 

@@ -35,7 +35,7 @@ final class Int8VectorIndex[K: Ordering] private (
     * original floats): score = (Σ qaᵢ·qbᵢ) · scale_row · scale_query,
     * ties by id ascending — the [[Quantize.quantizedTopK]] contract. */
   def topK(query: Array[Float], k: Int): Array[(K, Double)] =
-    scoreTopK(query, k)((_, _) => ()).map { case (id, s, _) => (id, s) }
+    scoreTopK(query, k, None)((_, _) => ()).map { case (id, s, _) => (id, s) }
 }
 
 object Int8VectorIndex {

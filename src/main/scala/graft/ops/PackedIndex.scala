@@ -32,8 +32,9 @@ import org.apache.spark.storage.StorageLevel
  * per-job floor (~45 ms of scheduling at local[32]) would otherwise dwarf
  * a sub-ms scan. This mirrors the reference, whose scan is always
  * in-process; at 25k×1536 float32 the driver copy is ~150 MB, plus the
- * payload a [[VectorIndex.buildWithPayload]] index carries (the budget
- * counts slab bytes only).
+ * payload a [[VectorIndex.buildWithPayload]] index carries (~100 MB at
+ * 1875-char content, counted at 2 bytes per char), and the budget
+ * counts both.
  */
 abstract class PackedIndex[K, Q, B <: Slab[K, Q]] private[ops] (
     val blocks: RDD[B],
@@ -54,8 +55,9 @@ abstract class PackedIndex[K, Q, B <: Slab[K, Q]] private[ops] (
     * read by the row position the heap kept beside its id: on the
     * driver-local tier for the k overall winners only, on the
     * distributed tier inside the scan task for that partition's at most
-    * k winners — one pass, no lookup by id. */
-  protected def scoreTopK[R](query: Array[Float], k: Int)(
+    * k winners — one pass, no lookup by id. Under `keep`, only the rows
+    * it passes are scored, so fewer than k rows can come back. */
+  protected def scoreTopK[R](query: Array[Float], k: Int, keep: Option[(B, Int) => Boolean])(
       project: (B, Int) => R): Array[(K, Double, R)] = {
     require(k > 0, "k must be > 0") // k=0 indexed scores(-1) opaquely
     require(query.length == dim,
@@ -78,7 +80,7 @@ abstract class PackedIndex[K, Q, B <: Slab[K, Q]] private[ops] (
             pool.submit(new java.util.concurrent.Callable[Array[Winner[K]]] {
               def call(): Array[Winner[K]] = {
                 val heap = new TopKHeap[K](k, o)
-                b.scan(from, until, d, q, heap, slab)
+                PackedIndex.offer[K, Q, B](b, from, until, d, q, heap, slab, keep)
                 heap.result
               }
             })
@@ -92,7 +94,10 @@ abstract class PackedIndex[K, Q, B <: Slab[K, Q]] private[ops] (
           // manager already; holding their references until the heap is
           // final lets the winners be projected without a second pass
           val seen = scala.collection.mutable.ArrayBuffer.empty[B]
-          it.foreach { b => b.scan(0, b.ids.length, d, q, heap, seen.length); seen += b }
+          it.foreach { b =>
+            PackedIndex.offer[K, Q, B](b, 0, b.ids.length, d, q, heap, seen.length, keep)
+            seen += b
+          }
           heap.result.iterator.map(w => w -> project(seen(w.slab), w.row))
         }.collect().toSeq.sortBy(_._1)(byRank).take(k)
       }
@@ -111,14 +116,16 @@ abstract class PackedIndex[K, Q, B <: Slab[K, Q]] private[ops] (
   }
 
   /** Force materialization (so the first query isn't charged the build);
-    * pulls the index driver-local when its payload fits under
-    * [[PackedIndex.LocalScanMaxBytes]]. `forceDistributed = true` keeps
-    * blocks on executors regardless — the path every corpus above the
-    * budget takes, benchmarked explicitly so the at-scale tier has a
-    * measured point. */
+    * pulls the index driver-local when its slabs and payload fit under
+    * [[PackedIndex.LocalScanMaxBytes]] — both are counted by the one job
+    * that builds the blocks. `forceDistributed = true` keeps blocks on
+    * executors regardless — the path every corpus above the budget
+    * takes, benchmarked explicitly so the at-scale tier has a measured
+    * point. */
   def materialize(forceDistributed: Boolean = false): this.type = {
-    val rows = blocks.map(_.ids.length.toLong).sum().toLong
-    if (!forceDistributed && rows * dim * valueBytes <= PackedIndex.LocalScanMaxBytes) {
+    val (rows, payloadBytes) = blocks.map(b => (b.ids.length.toLong, b.payloadBytes))
+      .fold((0L, 0L)) { case ((r1, p1), (r2, p2)) => (r1 + r2, p1 + p2) }
+    if (!forceDistributed && PackedIndex.fitsDriver(rows, dim, valueBytes, payloadBytes)) {
       PackedIndex.scanPool(blocks.sparkContext) // sized while the session is live
       local = blocks.collect()
       // blocking: callers time queries right after materialize(), and an
@@ -145,6 +152,10 @@ trait Slab[K, Q] extends Serializable {
     * heap, each at its position (`slab`, row) — the kind's one
     * monomorphic scoring loop. */
   private[ops] def scan(from: Int, until: Int, d: Int, q: Q, heap: TopKHeap[K], slab: Int): Unit
+
+  /** Bytes the slab keeps beside its vectors, for the driver-local
+    * budget. */
+  private[graft] def payloadBytes: Long = 0L
 }
 
 /** One heap winner: its id and score, and its row position — row `row`
@@ -199,11 +210,35 @@ private[ops] final class TopKHeap[K](k: Int, ord: Ordering[K]) {
 
 object PackedIndex {
 
-  /** Slab payload at or below this scans driver-locally: 800 MB, i.e.
-    * 200M float32 or 800M int8 values, well inside the 8 GB driver heap.
+  /** Slabs plus payload at or below this scan driver-locally: 800 MB,
+    * i.e. 200M float32 or 800M int8 values, well inside the 8 GB driver heap.
     * This is the reference's operating envelope (an embeddable in-process
     * store); corpora beyond it stay distributed. */
   val LocalScanMaxBytes: Long = 800L * 1000 * 1000
+
+  /** Whether an index of `rows` vectors of `dim` values, `valueBytes`
+    * each, plus `payloadBytes` kept beside them, fits the driver-local
+    * budget. */
+  private[graft] def fitsDriver(rows: Long, dim: Int, valueBytes: Int, payloadBytes: Long): Boolean =
+    rows * dim * valueBytes + payloadBytes <= LocalScanMaxBytes
+
+  /** Offer rows [from, until) of `b` to the heap: all of them through
+    * the kind's contiguous loop, or under `keep` the rows it passes,
+    * selected first and then scored one by one by the same loop. */
+  private def offer[K, Q, B <: Slab[K, Q]](b: B, from: Int, until: Int, d: Int, q: Q,
+      heap: TopKHeap[K], slab: Int, keep: Option[(B, Int) => Boolean]): Unit = keep match {
+    case None => b.scan(from, until, d, q, heap, slab)
+    case Some(pass) =>
+      val rows = new Array[Int](until - from)
+      var n = 0
+      var r = from
+      while (r < until) {
+        if (pass(b, r)) { rows(n) = r; n += 1 }
+        r += 1
+      }
+      var j = 0
+      while (j < n) { b.scan(rows(j), rows(j) + 1, d, q, heap, slab); j += 1 }
+  }
 
   /** Per-block slab cap (~64 MB). The r12 1M-row build showed
     * 17.9→143.9 s swings across identical-code windows: each partition

@@ -34,22 +34,31 @@ final class VectorIndex[K: Ordering] private (
     * engine widens each float32 score to double (exact, order-preserving);
     * narrowing it back here returns the kernel's float bit for bit. */
   def topK(query: Array[Float], k: Int): Array[(K, Float)] =
-    scoreTopK(query, k)((_, _) => ()).map { case (id, s, _) => (id, s.toFloat) }
+    scoreTopK(query, k, None)((_, _) => ()).map { case (id, s, _) => (id, s.toFloat) }
 
   /** [[topK]] with each winner's whole row, read from the slab in the
     * same pass: the embedding is a fresh copy (a caller never holds an
     * array that aliases the slab), metadata and content are the payload
-    * the build decoded. */
-  def topKRows(query: Array[Float], k: Int): Array[VectorIndex.Hit[K]] = {
+    * the build decoded. With `keep`, only the rows it passes — tested on
+    * (block, row) before the row is scored — compete, and fewer than k
+    * can come back; the test runs on executors on the distributed tier,
+    * so it must be serializable. */
+  def topKRows(query: Array[Float], k: Int,
+      keep: Option[(VectorIndex.Block[K], Int) => Boolean] = None): Array[VectorIndex.Hit[K]] = {
     require(hasPayload, "topKRows needs an index built by VectorIndex.buildWithPayload")
     val d = dim
-    scoreTopK(query, k) { (b, r) =>
+    scoreTopK(query, k, keep) { (b, r) =>
       (java.util.Arrays.copyOfRange(b.data, r * d, r * d + d), b.metadata(r), b.content(r))
     }.map { case (id, s, (v, m, c)) => VectorIndex.Hit(id, s.toFloat, v, m, c) }
   }
 }
 
 object VectorIndex {
+
+  /** Heap a payload object takes beyond its chars, for the driver-local
+    * budget: a String's header and fields (24 bytes) plus its backing
+    * array's header (16), and the same figure for each metadata map. */
+  private[graft] val ObjectBytes = 40L
 
   /** One block = a packed row-major float32 slab + parallel id array and,
     * when built with a payload, parallel metadata and content arrays
@@ -72,6 +81,35 @@ object VectorIndex {
         heap.insert(ids(r), s, slab, r)
         r += 1
       }
+    }
+
+    /** Row `r`'s dot product with `v`, which must have the slab's
+      * dimension: the sequential float sum of [[scan]] and of
+      * `dot_const_f32`, so it is bit-equal to both. */
+    def dot(r: Int, v: Array[Float]): Float = {
+      val d = v.length
+      val off = r * d
+      var s = 0.0f
+      var i = 0
+      while (i < d) { s += data(off + i) * v(i); i += 1 }
+      s
+    }
+
+    /** An estimate of the heap the payload takes, not a measurement: 2
+      * bytes per char of content and of metadata keys and values (the
+      * UTF-16 width; compact Latin-1 strings take half), plus
+      * [[VectorIndex.ObjectBytes]] per string and per metadata map. */
+    private[graft] override def payloadBytes: Long = {
+      var bytes = 0L
+      def string(s: String): Unit = if (s != null) bytes += 2L * s.length + ObjectBytes
+      if (content != null) content.foreach(string)
+      if (metadata != null) metadata.foreach { m =>
+        if (m != null) {
+          bytes += ObjectBytes
+          m.foreach { case (k, v) => string(k); string(v) }
+        }
+      }
+      bytes
     }
   }
 

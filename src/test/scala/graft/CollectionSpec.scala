@@ -410,14 +410,24 @@ class CollectionSpec extends SparkSuite {
       r.embedding.toSeq.map(java.lang.Float.floatToRawIntBits))
   }
 
-  /** Each public unfiltered query at k = 1, 10 and count(), answered by
-    * the queryDF path before buildIndex and by the index after it, must
-    * be bit-equal; a returned embedding must not alias the slab. */
+  /** Each public query at k = 1, 10 and count(), unfiltered and
+    * filtered, answered by the queryDF path before buildIndex and by the
+    * index after it, must be bit-equal, and a bad filter must fail with
+    * the same message on both; a returned embedding must not alias the
+    * slab. */
   private def singlePassMatchesQueryDF(db: DB): Unit = {
+    import graft.core.Filters._
     val c = db.createCollection("single-pass")
     c.addDocuments(singlePassDocs)
     val n = c.count().toInt
     val q = Array(0.3f, -1.2f, 0.5f, 0.9f, -0.1f, 0.4f, 0.7f, -0.6f) // not normalized
+    def negFilter(k: Int, threshold: Float, where: Map[String, String] = Map.empty) =
+      c.queryWithOptions(QueryOptions(queryEmbedding = q, nResults = k, where = where,
+        negative = NegativeQueryOptions(mode = NegativeMode.Filter, embedding = tieVec,
+          filterThreshold = threshold)))
+    val clause = Or(Seq(
+      And(Seq(ContentContains("doc 1"), Not(MetaEq("g", "1")))),
+      MetaEq("k", "v13")))
     val calls: Seq[(String, () => Seq[QueryResult])] = Seq(1, 10, n).flatMap { k =>
       Seq(
         s"queryEmbedding k=$k" -> (() => c.queryEmbedding(q, k)),
@@ -425,15 +435,59 @@ class CollectionSpec extends SparkSuite {
         s"query k=$k" -> (() => c.query("content of doc", k)),
         s"queryWithOptions subtract k=$k" -> (() => c.queryWithOptions(QueryOptions(
           queryEmbedding = q, nResults = k,
-          negative = NegativeQueryOptions(embedding = tieVec)))))
+          negative = NegativeQueryOptions(embedding = tieVec)))),
+        s"where present key k=$k" -> (() => c.queryEmbedding(q, k, where = Map("g" -> "1"))),
+        s"where empty value (missing key, null metadata) k=$k" ->
+          (() => c.queryEmbedding(tieVec, k, where = Map("k" -> ""))),
+        s"where two keys, one row k=$k" ->
+          (() => c.queryEmbedding(q, k, where = Map("k" -> "v7", "g" -> "1"))),
+        s"where no row k=$k" -> (() => c.queryEmbedding(q, k, where = Map("g" -> "7"))),
+        s"contains k=$k" ->
+          (() => c.queryEmbedding(q, k, whereDocument = Map("$contains" -> "doc 1"))),
+        s"not_contains (null content passes) k=$k" ->
+          (() => c.queryEmbedding(q, k, whereDocument = Map("$not_contains" -> "doc 1"))),
+        s"contains empty needle k=$k" ->
+          (() => c.queryEmbedding(q, k, whereDocument = Map("$contains" -> ""))),
+        s"not_contains empty needle k=$k" ->
+          (() => c.queryEmbedding(q, k, whereDocument = Map("$not_contains" -> ""))),
+        s"where and whereDocument k=$k" -> (() => c.query("content of doc", k,
+          where = Map("g" -> "1"),
+          whereDocument = Map("$contains" -> "doc", "$not_contains" -> "doc 1"))),
+        s"negative filter default threshold k=$k" -> (() => negFilter(k, 0f)),
+        s"negative filter on the ties k=$k" -> (() => negFilter(k, 0.25f)),
+        s"negative filter and where k=$k" -> (() => negFilter(k, 0.3f, Map("k" -> ""))),
+        s"queryEmbeddingWhere k=$k" -> (() => c.queryEmbeddingWhere(q, k, clause)),
+        s"queryEmbeddingWhere ties k=$k" ->
+          (() => c.queryEmbeddingWhere(tieVec, k, Not(ContentContains("doc 1"))))
+      )
+    }
+    val badFilters: Seq[(String, () => Seq[QueryResult])] = Seq(
+      "operator" -> (() => c.queryEmbedding(q, 1, whereDocument = Map("$regex" -> "x"))),
+      "null where value" -> (() => c.queryEmbedding(q, 1, where = Map("k" -> null))),
+      "null where key" -> (() => c.queryEmbedding(q, 1, where = Map((null: String) -> "v"))),
+      "null needle" -> (() => c.queryEmbedding(q, 1, whereDocument = Map("$contains" -> null))),
+      "null clause value" -> (() => c.queryEmbeddingWhere(q, 1, Or(Seq(MetaEq("k", null))))),
+      "null clause needle" -> (() => c.queryEmbeddingWhere(q, 1, Not(ContentNotContains(null)))),
+      "negative of another dimension" -> (() => c.queryWithOptions(QueryOptions(
+        queryEmbedding = q, nResults = 1, where = Map("g" -> "7"),
+        negative = NegativeQueryOptions(mode = NegativeMode.Filter, embedding = Array(1f, 0f, 0f))))))
+    def errors = badFilters.map { case (name, f) =>
+      name -> intercept[IllegalArgumentException](f()).getMessage
     }
     val viaQueryDF = calls.map { case (_, f) => bits(f()) }
+    val errorsViaQueryDF = errors
+    assert(errorsViaQueryDF.map(_._2).distinct.sorted === Seq("unsupported operator",
+      "vectors must have the same length: 3 vs 8",
+      "where keys and values must be non-null", "whereDocument values must be non-null"))
+    assert(viaQueryDF.exists(_.isEmpty), "a filter that passes no row")
+    assert(viaQueryDF.exists(r => r.nonEmpty && r.length < 10), "a filter that passes fewer than k")
     assert(!c.hasIndex)
     c.buildIndex()
     assert(c.hasIndex)
     calls.zip(viaQueryDF).foreach { case ((name, f), want) =>
       assert(bits(f()) === want, name)
     }
+    assert(errors === errorsViaQueryDF)
     assert(c.queryEmbedding(tieVec, 5).map(_.id) === Seq("d03", "d11", "d19", "d27", "d35"),
       "five tied vectors: id asc")
     val first = c.queryEmbedding(tieVec, 3)
@@ -451,14 +505,18 @@ class CollectionSpec extends SparkSuite {
     singlePassMatchesQueryDF(withLogLevel(DB.persistent(spark, root, new HashingEmbeddingFunc(8))))
   }
 
-  test("an indexed, unfiltered query on a driver-local collection runs no Spark job") {
+  /** Asserts that `query`, run on an indexed driver-local collection of
+    * `singlePassDocs` after one warm-up call, starts no Spark job and
+    * returns `want` rows. */
+  private def assertNoSparkJob(name: String, want: Int)(
+      query: graft.core.Collection => Seq[QueryResult]): Unit = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
     val c = withLogLevel(DB.inMemory(spark, new HashingEmbeddingFunc(8)))
-      .createCollection("zero-job")
+      .createCollection(name)
     c.addDocuments(singlePassDocs)
     c.buildIndex()
-    c.queryEmbedding(tieVec, 10) // warm
+    query(c) // warm
     val group = "collection-zero-job"
     val sentinel = "collection-zero-job-sentinel"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
@@ -475,17 +533,29 @@ class CollectionSpec extends SparkSuite {
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "queries under test")
     try {
-      assert(c.queryEmbedding(tieVec, 10).length === 10)
+      assert(query(c).length === want)
       // one bus delivers job starts in order: once the sentinel's start
       // is seen, every job the query started has been counted
       sc.setJobDescription(sentinel)
       sc.parallelize(Seq(1), 1).count()
       assert(sentinelSeen.await(30, java.util.concurrent.TimeUnit.SECONDS), "sentinel job not seen")
-      assert(jobs.get() === 0, s"indexed query ran ${jobs.get()} Spark job(s)")
+      assert(jobs.get() === 0, s"indexed $name query ran ${jobs.get()} Spark job(s)")
     } finally {
       sc.clearJobGroup()
       sc.setJobDescription(null)
       sc.removeSparkListener(listener)
     }
+  }
+
+  test("an indexed, unfiltered query on a driver-local collection runs no Spark job") {
+    assertNoSparkJob("unfiltered", want = 10)(_.queryEmbedding(tieVec, 10))
+  }
+
+  test("an indexed, filtered query on a driver-local collection runs no Spark job") {
+    assertNoSparkJob("where + whereDocument", want = 3)(_.queryEmbedding(tieVec, 10,
+      where = Map("g" -> "1"), whereDocument = Map("$contains" -> "doc 1")))
+    assertNoSparkJob("negative filter", want = 10)(_.queryWithOptions(QueryOptions(
+      queryEmbedding = tieVec, nResults = 10,
+      negative = NegativeQueryOptions(mode = NegativeMode.Filter, embedding = tieVec))))
   }
 }

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.{DoubleType, StructType}
+
 /**
  * Every gate query must be value-deterministic across runs: the driver
  * hash-compares Verify output against a DuckDB oracle, so ANY
@@ -13,16 +16,21 @@ class DeterminismSpec extends SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
 
-  test("every gate query returns identical rows on a second run") {
-    withLogLevel {
-      val diffs = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-        def run(): Seq[String] =
-          fn(spark, dir).collect().map(_.toString).sorted.toSeq
-        val (a, b) = (run(), run())
-        if (a == b) None else Some(name)
-      }
-      assert(diffs.isEmpty, s"nondeterministic gate queries: $diffs")
+  /** Per gate query, by name: its schema, the rows of its first run, and
+    * whether a second run returned the same rows. Both tests read this
+    * one pair of runs. */
+  private lazy val runs: Seq[(String, StructType, Array[Row], Boolean)] = withLogLevel {
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val df = fn(spark, dir)
+      val first = df.collect()
+      def sorted(rows: Array[Row]): Seq[String] = rows.map(_.toString).sorted.toSeq
+      (name, df.schema, first, sorted(first) == sorted(fn(spark, dir).collect()))
     }
+  }
+
+  test("every gate query returns identical rows on a second run") {
+    val diffs = runs.collect { case (name, _, _, false) => name }
+    assert(diffs.isEmpty, s"nondeterministic gate queries: $diffs")
   }
 
   test("no gate query emits IEEE -0.0 in a double column") {
@@ -33,26 +41,16 @@ class DeterminismSpec extends SparkSuite {
     // A future gate projection that skips the round() convention and
     // leaks a signed zero would diverge only at the sf where real data
     // lands exactly on zero; this pins the invariant at test time.
-    withLogLevel {
-      val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-        case (name, fn) =>
-          val df = fn(spark, dir)
-          val doubleCols = df.schema.fields.collect {
-            case f if f.dataType == org.apache.spark.sql.types.DoubleType =>
-              f.name
-          }
-          if (doubleCols.isEmpty) None
-          else {
-            val hasNegZero = df.collect().exists(r => doubleCols.exists { c =>
-              val i = r.fieldIndex(c)
-              !r.isNullAt(i) &&
-                java.lang.Double.doubleToRawLongBits(r.getDouble(i)) ==
-                  java.lang.Double.doubleToRawLongBits(-0.0)
-            })
-            if (hasNegZero) Some(name) else None
-          }
-      }
-      assert(offenders.isEmpty, s"gate queries emitting -0.0: $offenders")
+    val offenders = runs.flatMap { case (name, schema, rows, _) =>
+      val doubleCols = schema.fields.collect { case f if f.dataType == DoubleType => f.name }
+      val hasNegZero = doubleCols.nonEmpty && rows.exists(r => doubleCols.exists { c =>
+        val i = r.fieldIndex(c)
+        !r.isNullAt(i) &&
+          java.lang.Double.doubleToRawLongBits(r.getDouble(i)) ==
+            java.lang.Double.doubleToRawLongBits(-0.0)
+      })
+      if (hasNegZero) Some(name) else None
     }
+    assert(offenders.isEmpty, s"gate queries emitting -0.0: $offenders")
   }
 }

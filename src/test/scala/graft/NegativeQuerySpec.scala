@@ -66,7 +66,7 @@ class NegativeQuerySpec extends SparkSuite {
       "same float32 kernel => bit-identical scores")
     assert(viaIdx.map(_.content) === viaDf.map(_.content))
     assert(viaIdx.map(_.metadata) === viaDf.map(_.metadata))
-    // filtered queries fall back to the DataFrame path (filters prune
+    // filtered queries are answered by the index too (filters prune
     // before scoring); mutations drop the index
     assert(c.queryEmbedding(q, 1, where = Map("t" -> "v")).map(_.id) === Seq("1"))
     c.addDocuments(Seq(Document("4",

@@ -94,6 +94,7 @@ class VectorSearchSpec extends SparkSuite with PackedIndexCases {
   }
 
   test("payload-carrying index returns equal rows on the driver-local and distributed tier") {
+    import graft.core.Filters.{And, ContentContains, MetaEq, Not}
     // 500 corpus rows plus five copies of q0 (ids 1000-1004), which tie
     // with row 0; null and empty metadata, null content
     val ties = (1000L to 1004L).map(id => (id, q0)).toDF("vec_id", "embedding")
@@ -126,9 +127,69 @@ class VectorSearchSpec extends SparkSuite with PackedIndexCases {
         a.foreach { case (id, _, v, m, c) => assert((v, m, c) === source(id), s"row $id") }
       }
       assert(rows(local, 6).map(_._1) === Seq(0L, 1000L, 1001L, 1002L, 1003L, 1004L), "ties: id asc")
+      // the same row test on both tiers: null-content rows (ids 0, 1000
+      // and 1004 among the ties) and rows too close to a negative drop
+      val neg = q0.map(-_)
+      val keep: Option[(VectorIndex.Block[Long], Int) => Boolean] =
+        Some((b, r) => b.content(r) != null && b.dot(r, neg) <= 0.2f)
+      val passing = source.count { case (_, (v, _, c)) =>
+        c != null && VectorFunctions.dot(v.toArray, neg) <= 0.2f }
+      assert(passing > 10 && passing < source.size - 10)
+      for (k <- Seq(1, 3, 10, source.size)) withClue(s"filtered, k = $k: ") {
+        val a = filteredRows(local, k, keep)
+        assert(a === filteredRows(distributed, k, keep))
+        assert(a.length === math.min(k, passing))
+        a.foreach { case (id, _, v, _, c) =>
+          assert(c != null && VectorFunctions.dot(v.toArray, neg) <= 0.2f, s"row $id")
+        }
+      }
+      assert(filteredRows(local, 3, keep).map(_._1) === Seq(1001L, 1002L, 1003L), "ties: id asc")
+      // the row test a filtered Collection query ships to the tasks:
+      // where + $contains + $not, then the negative filter
+      val clause = And(Seq(MetaEq("k", ""), ContentContains("doc"), Not(ContentContains("7"))))
+      val shipped = graft.core.Collection.keep[Long](Some(clause), neg, 0.2f)
+      val clausePassing = source.filter { case (_, (v, m, c)) =>
+        (if (m == null) "" else m.getOrElse("k", "")) == "" && c != null && c.contains("doc") &&
+          !c.contains("7") && VectorFunctions.dot(v.toArray, neg) <= 0.2f
+      }.keySet
+      assert(clausePassing.size > 10 && clausePassing.size < passing)
+      for (k <- Seq(1, 3, 10, source.size)) withClue(s"clause, k = $k: ") {
+        val a = filteredRows(local, k, shipped)
+        assert(a === filteredRows(distributed, k, shipped))
+        assert(a.length === math.min(k, clausePassing.size))
+        assert(a.map(_._1).forall(clausePassing))
+      }
+      assert(filteredRows(local, 2, shipped).map(_._1) === Seq(1001L, 1002L), "ties: id asc")
+      val none: Option[(VectorIndex.Block[Long], Int) => Boolean] = Some((_, _) => false)
+      assert(filteredRows(local, 5, none).isEmpty && filteredRows(distributed, 5, none).isEmpty)
       intercept[IllegalArgumentException](
         VectorIndex.build[Long](docs, "vec_id", "embedding", q0.length).topKRows(q0, 1))
     } finally { local.unpersist(); distributed.unpersist(blocking = true) }
+  }
+
+  private def filteredRows(idx: VectorIndex[Long], k: Int,
+      keep: Option[(VectorIndex.Block[Long], Int) => Boolean]) =
+    idx.topKRows(q0, k, keep).toSeq.map { h =>
+      (h.id, java.lang.Float.floatToRawIntBits(h.similarity), h.embedding.toSeq, h.metadata, h.content)
+    }
+
+  test("the driver-local budget counts slab and payload bytes") {
+    import graft.ops.PackedIndex.{LocalScanMaxBytes, fitsDriver}
+    val maxFloats = LocalScanMaxBytes / 4
+    assert(fitsDriver(maxFloats, 1, 4, 0L))
+    assert(!fitsDriver(maxFloats + 1, 1, 4, 0L))
+    assert(!fitsDriver(maxFloats, 1, 4, 1L))
+    assert(fitsDriver(maxFloats - 1, 1, 4, 4L))
+    assert(!fitsDriver(0L, 1536, 4, LocalScanMaxBytes + 1))
+    assert(fitsDriver(25000L, 1536, 4, 25000L * 2 * 1875))
+    // vectors alone fit; the payload tips the index over the budget
+    assert(fitsDriver(120000L, 1536, 4, 0L) && !fitsDriver(120000L, 1536, 4, 120000L * 2 * 1875))
+    val b = VectorIndex.Block[Long](Array(1L, 2L, 3L), new Array[Float](3),
+      Array(Map("ab" -> "c", "d" -> null), null, Map.empty), Array("hello", null, ""))
+    // chars "ab", "c", "d", "hello"; strings "ab", "c", "d", "hello", "";
+    // two non-null maps
+    assert(b.payloadBytes === 2 * (2 + 1 + 1 + 5) + VectorIndex.ObjectBytes * (5 + 2))
+    assert(VectorIndex.Block[Long](Array(1L), new Array[Float](1)).payloadBytes === 0L)
   }
 
   test("thresholdSearch returns exactly rows above threshold") {
