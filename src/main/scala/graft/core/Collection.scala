@@ -1,6 +1,11 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -82,10 +87,10 @@ class Collection private[core] (
       * DB.persistent used to run one Spark count job per catalog entry
       * before returning (linear-in-collections startup); the first
       * count()/ingest that needs the number forces it once. Mutation
-      * commits still pass a precomputed value (their eager post-swap
-      * count is what readCommitted's monitor-bounce timing relies on),
-      * so a forced lazy count only ever races a commit on the OPEN
-      * snap — count() wraps in readCommitted for exactly that window.
+      * commits pass a known value: a persistent commit's write job
+      * counts the rows it writes, before the directory swap. So a forced
+      * lazy count only ever races a commit on the OPEN snap — count()
+      * wraps in readCommitted for exactly that window.
       * A lazy val whose initializer throws stays uninitialized, so a
       * lost-file failure does not poison the snap for the retry. */
     lazy val n: Long = n0
@@ -170,32 +175,76 @@ class Collection private[core] (
   }
 
   /** Batch upsert — reference collection.go:193-245 + AddDocument :250-293.
-    * Docs without an embedding are embedded via `embedFunc` inside
-    * `mapPartitions` (one task = one reference worker goroutine); vectors
-    * are normalized on ingest when needed so the query path never
-    * re-normalizes stored vectors (collection.go:272-276). */
+    * Deduplicates on the DRIVER, in batch order: the last occurrence of
+    * each id wins (map-assignment overwrite, collection.go:280). The ids
+    * are then known, so the rows they displace are dropped by a filter
+    * on those ids, and the batch goes straight into the commit without a
+    * shuffle or a cache: a persistent collection commits a batch whose
+    * documents all carry vectors in one Spark job, adding one file.
+    * Docs without a vector are embedded via `embedFunc` per partition,
+    * spread over `concurrency` partitions (one task = one reference
+    * worker goroutine); vectors are normalized on ingest when needed so
+    * the query path never re-normalizes stored vectors
+    * (collection.go:272-276). */
   def addDocuments(documents: Seq[Document], concurrency: Int = 1): Unit = {
     if (documents == null || documents.isEmpty)
       throw new IllegalArgumentException("documents slice is nil or empty")
     if (concurrency < 1)
       throw new IllegalArgumentException("concurrency must be at least 1")
     documents.foreach(Document.validate)
-    // last occurrence per id wins, decided driver-side while batch order is
-    // still defined (map-assignment overwrite parity, collection.go:280)
     val lastWins = documents.zipWithIndex
       .groupBy(_._1.id).valuesIterator.map(_.maxBy(_._2)._1).toVector
-    val batch = spark.createDataset(lastWins).toDF()
-      .repartition(math.min(concurrency, lastWins.size))
-    addDF(batch)
+    // one partition, so a commit adds one file to the collection; more
+    // only to spread embedding over `concurrency` tasks (a shuffle)
+    val parts =
+      if (lastWins.exists(Collection.lacksVector)) math.min(concurrency, lastWins.size) else 1
+    val local = spark.createDataset(lastWins).toDF()
+    val batch = if (parts == 1) local.coalesce(1) else local.repartition(parts)
+    val ids = lastWins.map(_.id)
+    synchronized {
+      val old = snap.df0
+      // a null id matches no batch id, as in addDF's anti-join
+      commit(old.filter(col("id").isNull || !col("id").isInCollection(ids))
+        .unionByName(embedded(batch)))
+    }
   }
 
   /**
-   * Bulk upsert of a conforming DataFrame — THE scale path. Upsert-by-id
-   * (map-assignment overwrite in the reference, collection.go:280) becomes:
-   * within-batch last-writer-wins, then anti-join old state against batch
-   * ids, then union. Both the anti-join and the dedup shuffle on `id`.
+   * Bulk upsert of a conforming DataFrame — THE scale path. A DataFrame
+   * batch has no order and may repeat ids, so addDF deduplicates on the
+   * executors: within-batch last-writer-wins over a window on `id`, then
+   * an anti-join of the old state against the batch ids, then union.
+   * Both the window and the anti-join shuffle on `id`. The embed and
+   * normalize step and the commit are the ones [[addDocuments]] runs.
    */
   def addDF(batch: DataFrame): Unit = synchronized {
+    // last occurrence per id within the batch wins (SURVEY §7.4).
+    // "Last" means PARTITION order: monotonically_increasing_id ranks by
+    // (partition index, position), which is deterministic for a given
+    // partitioning but is NOT an arrival order — a distributed batch has
+    // none. Callers that need a specific winner among same-id rows must
+    // pre-dedup (addDocuments does, driver-side) or carry an explicit
+    // sequence column and dedup on it before addDF.
+    val deduped = embedded(batch)
+      .withColumn("__seq", monotonically_increasing_id())
+      .withColumn("__rn", row_number().over(
+        Window.partitionBy(col("id")).orderBy(col("__seq").desc)))
+      .filter(col("__rn") === 1).drop("__seq", "__rn")
+      // persist: `next` references this subtree TWICE (anti-join id side
+      // and union payload side) and column pruning can't reach into the
+      // embed mapPartitions — without the cache every document would be
+      // EMBEDDED twice per upsert, doubling the provider API cost of
+      // the single most expensive ingest stage
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val old = snap.df0
+      commit(old.join(deduped.select("id"), Seq("id"), "left_anti").unionByName(deduped))
+    } finally { deduped.unpersist(); () }
+  }
+
+  /** `batch` conformed to `Document.schema`, each missing vector
+    * embedded and each vector normalized. */
+  private def embedded(batch: DataFrame): DataFrame = {
     val ef = embedFunc
     val conformed = batch.select(
       col("id").cast("string").as("id"),
@@ -206,7 +255,7 @@ class Collection private[core] (
     // client + request batching per task, not a row-at-a-time UDF call
     // (the reference's worker-goroutine shape, collection.go:218-240,
     // mapped onto Spark tasks).
-    val embedded = conformed.as[Document].mapPartitions { it =>
+    conformed.as[Document].mapPartitions { it =>
       it.grouped(256).flatMap { chunk => // bounded per-task buffering
         // id validation HERE, not just in addDocuments (reference
         // NewDocument, collection.go:257-259): addDF is the scale entry
@@ -217,8 +266,7 @@ class Collection private[core] (
           if (d.id == null || d.id.isEmpty)
             throw new IllegalArgumentException("document id is empty")
         }
-        val (needVec, haveVec) =
-          chunk.partition(d => d.embedding == null || d.embedding.isEmpty)
+        val (needVec, haveVec) = chunk.partition(Collection.lacksVector)
         needVec.foreach { d =>
           if (d.content == null || d.content.isEmpty)
             throw new IllegalArgumentException(
@@ -234,30 +282,6 @@ class Collection private[core] (
       .withColumn("embedding",
         when(is_normalized(col("embedding")), col("embedding"))
           .otherwise(normalize_f32(col("embedding"))))
-    // last occurrence per id within the batch wins (SURVEY §7.4).
-    // "Last" means PARTITION order: monotonically_increasing_id ranks by
-    // (partition index, position), which is deterministic for a given
-    // partitioning but is NOT an arrival order — a distributed batch has
-    // none. Callers that need a specific winner among same-id rows must
-    // pre-dedup (addDocuments does, driver-side) or carry an explicit
-    // sequence column and dedup on it before addDF.
-    val deduped = embedded
-      .withColumn("__seq", monotonically_increasing_id())
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("id")).orderBy(col("__seq").desc)))
-      .filter(col("__rn") === 1).drop("__seq", "__rn")
-      // persist: `next` references this subtree TWICE (anti-join id side
-      // and union payload side) and column pruning can't reach into the
-      // embed mapPartitions — without the cache every document would be
-      // EMBEDDED twice per upsert, doubling the provider API cost of
-      // the single most expensive ingest stage
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val old = snap.df0
-      val next = old.join(deduped.select("id"), Seq("id"), "left_anti")
-        .unionByName(deduped.select(old.columns.map(col).toIndexedSeq: _*))
-      commit(next)
-    } finally { deduped.unpersist(); () }
   }
 
   /**
@@ -643,7 +667,8 @@ class Collection private[core] (
                 "in a row under concurrent commits; last loss attached").initCause(e)
           // The displaced files die inside the concurrent commit's
           // write() swap, but the NEW snapshot lands only after its
-          // post-swap re-read/count — retrying immediately would
+          // post-swap re-read of the directory (its row count came from
+          // the write job, before the swap) — retrying immediately would
           // re-scan the same dead view. Every writer holds THIS
           // object's monitor from before the swap until after the snap
           // assignment, so briefly taking the monitor blocks exactly
@@ -796,22 +821,26 @@ class Collection private[core] (
 
   // ------------------------------------------------------------------
 
+  /** Makes `next` the collection's state. On a persistent collection
+    * this is one Spark job, which also counts the rows it writes
+    * ([[Collection.writeCounted]]); a failed write leaves the committed
+    * files and the snap as they were. */
   private def commit(next: DataFrame): Unit = {
-    val materialized = persistRef match {
-      case Some(p) => p.write(next); p.read(spark)
+    val (materialized, nNext) = persistRef match {
+      case Some(p) => Collection.writeCounted(p, next, spark)
       case None =>
         // Cut plan lineage so repeated upserts don't grow an unbounded
         // union/anti-join tree (the in-memory analog of the reference's
         // "persist each mutation", collection.go:284-290).
-        next.localCheckpoint(true)
+        val checkpointed = next.localCheckpoint(true)
+        (checkpointed, checkpointed.count())
     }
     // swap the whole view first (new state, no indexes), THEN release the
     // displaced indexes — after the swap no new reader can reach them.
-    // The count stays EAGER here (hoisted: Snap's n is by-name now):
-    // readCommitted's monitor-bounce relies on the commit finishing its
-    // post-swap count before releasing this object's monitor
+    // The count is known before the swap (hoisted: Snap's n is by-name):
+    // readCommitted's monitor-bounce relies on the commit publishing the
+    // new snap, count included, before releasing this object's monitor
     val old = snap
-    val nNext = materialized.count()
     snap = new Snap(materialized, nNext, None, None, None)
     old.flat.foreach(_.unpersist())
     old.lsh.foreach(_.unpersist())
@@ -820,6 +849,23 @@ class Collection private[core] (
 }
 
 private[graft] object Collection {
+
+  def lacksVector(d: Document): Boolean = d.embedding == null || d.embedding.isEmpty
+
+  /** Writes `next` through `p` in one Spark job and returns the
+    * committed frame with the row count that job observed. Spark posts
+    * the count from its listener bus, so it lands just after a write
+    * that succeeded; if the bus drops it, the committed files are
+    * counted instead. A failed write throws before any wait. */
+  def writeCounted(p: CollectionPersistence, next: DataFrame, spark: SparkSession)
+      : (DataFrame, Long) = {
+    val written = Observation()
+    p.write(next.observe(written, count(lit(1))))
+    val committed = p.read(spark)
+    val rows = try Await.result(written.future, 10.seconds).getLong(0)
+      catch { case _: TimeoutException => committed.count() }
+    (committed, rows)
+  }
 
   /** The row test of a filtered indexed query, or None when nothing
     * narrows the scan: the payload filter, then NegativeMode.Filter's

@@ -510,15 +510,21 @@ class CollectionSpec extends SparkSuite {
     * returns `want` rows. */
   private def assertNoSparkJob(name: String, want: Int)(
       query: graft.core.Collection => Seq[QueryResult]): Unit = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
     val c = withLogLevel(DB.inMemory(spark, new HashingEmbeddingFunc(8)))
       .createCollection(name)
     c.addDocuments(singlePassDocs)
     c.buildIndex()
     query(c) // warm
-    val group = "collection-zero-job"
-    val sentinel = "collection-zero-job-sentinel"
+    val jobs = sparkJobs(assert(query(c).length === want))
+    assert(jobs === 0, s"indexed $name query ran $jobs Spark job(s)")
+  }
+
+  /** The number of Spark jobs `body` starts on this thread. */
+  private def sparkJobs(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "collection-job-count"
+    val sentinel = "collection-job-count-sentinel"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
@@ -531,15 +537,15 @@ class CollectionSpec extends SparkSuite {
       }
     }
     sc.addSparkListener(listener)
-    sc.setJobGroup(group, "queries under test")
+    sc.setJobGroup(group, "calls under test")
     try {
-      assert(query(c).length === want)
+      body
       // one bus delivers job starts in order: once the sentinel's start
-      // is seen, every job the query started has been counted
+      // is seen, every job the body started has been counted
       sc.setJobDescription(sentinel)
       sc.parallelize(Seq(1), 1).count()
       assert(sentinelSeen.await(30, java.util.concurrent.TimeUnit.SECONDS), "sentinel job not seen")
-      assert(jobs.get() === 0, s"indexed $name query ran ${jobs.get()} Spark job(s)")
+      jobs.get()
     } finally {
       sc.clearJobGroup()
       sc.setJobDescription(null)
@@ -558,4 +564,166 @@ class CollectionSpec extends SparkSuite {
       queryEmbedding = tieVec, nResults = 10,
       negative = NegativeQueryOptions(mode = NegativeMode.Filter, embedding = tieVec))))
   }
+
+  // ---- one-job upsert: addDocuments ≡ addDF ----
+
+  private def vec(v: Float*): Array[Float] = v.toArray
+
+  /** Each call of the differential test, as documents plus the
+    * `concurrency` addDocuments runs them at. */
+  private val upsertCalls: Seq[(String, Seq[Document], Int)] = Seq(
+    ("duplicate ids within a batch, un-normalized vectors", Seq(
+      Document("a", Map("v" -> "first"), vec(3f, 4f, 0f), "alpha"),
+      Document("b", Map.empty, vec(0f, 2f, 0f), "beta"),
+      Document("a", Map("v" -> "second"), vec(0f, 0f, 5f), "alpha again"),
+      Document("c", null, vec(1f, 1f, 1f), null),
+      Document("b", null, vec(0.6f, 0.8f, 0f), "beta again")), 1),
+    ("overwrites of existing ids and new ids", Seq(
+      Document("c", Map("k" -> "c2"), vec(1f, -2f, 0.5f), "gamma"),
+      Document("d", Map.empty, vec(0f, 0f, 1f), null),
+      Document("a", null, vec(-1f, 0f, 0f), "alpha third")), 3),
+    ("documents without vectors at concurrency 1", Seq(
+      Document("e", Map("k" -> "e"), content = "echo text"),
+      Document("b", Map.empty, content = "beta by text"),
+      Document("e", null, content = "echo text again"),
+      Document("f", null, vec(2f, 0f, 0f), null)), 1),
+    ("documents without vectors at concurrency 3", Seq(
+      Document("g", Map.empty, content = "golf"),
+      Document("h", Map("k" -> "h"), content = "hotel"),
+      Document("d", null, content = "delta by text"),
+      Document("i", Map("k" -> ""), vec(0f, 3f, 4f), "india"),
+      Document("j", null, content = "juliett")), 3))
+
+  /** Every stored row, ordered by id, floats as raw bits. */
+  private def storedBits(c: graft.core.Collection): Seq[Any] = {
+    import spark.implicits._
+    c.df.as[Document].collect().sortBy(_.id).toSeq.map { d =>
+      (d.id, d.metadata, d.content, Option(d.embedding).map(_.toSeq.map(java.lang.Float.floatToRawIntBits)))
+    }
+  }
+
+  /** addDocuments and addDF of the same documents leave bit-equal rows
+    * after every call, and count() equals a fresh scan. */
+  private def addDocumentsMatchesAddDF(db: DB): Unit = {
+    import spark.implicits._
+    val viaDocs = db.createCollection("via-documents")
+    val viaDF = db.createCollection("via-dataframe")
+    upsertCalls.foreach { case (name, docs, concurrency) =>
+      viaDocs.addDocuments(docs, concurrency)
+      viaDF.addDF(spark.createDataset(docs).toDF())
+      withClue(s"$name: ") {
+        assert(storedBits(viaDocs) === storedBits(viaDF))
+        assert(viaDocs.count() === viaDocs.df.count())
+        assert(viaDF.count() === viaDF.df.count())
+      }
+    }
+    val stored = viaDocs.df.as[Document].collect().map(d => d.id -> d).toMap
+    assert(stored.keySet === "abcdefghij".map(_.toString).toSet)
+    assert(stored("a").content === "alpha third" && stored("a").metadata === null)
+    assert(stored("e").content === "echo text again", "within-batch last wins")
+    assert(stored.values.forall(d => math.abs(graft.functions.VectorFunctions.norm(d.embedding) - 1.0) < 1e-6))
+  }
+
+  test("addDocuments stores the same rows as addDF: in-memory collection") {
+    addDocumentsMatchesAddDF(withLogLevel(DB.inMemory(spark, new HashingEmbeddingFunc(3))))
+  }
+
+  test("addDocuments stores the same rows as addDF: persistent collection") {
+    val root = java.nio.file.Files.createTempDirectory("graft-upsert-diff").toString
+    addDocumentsMatchesAddDF(withLogLevel(DB.persistent(spark, root, new HashingEmbeddingFunc(3))))
+  }
+
+  test("addDocuments embeds each text exactly once per call") {
+    val root = java.nio.file.Files.createTempDirectory("graft-embed-once").toString
+    val dbs = Seq("in-memory" -> DB.inMemory(spark, ConstEmbeddingFunc.stub()),
+      "persistent" -> DB.persistent(spark, root, ConstEmbeddingFunc.stub()))
+    for ((kind, db) <- dbs; concurrency <- Seq(1, 3)) withClue(s"$kind, concurrency $concurrency: ") {
+      val tag = s"$kind-$concurrency"
+      val c = withLogLevel(db.createCollection(tag, embeddingFunc = new CountingEmbeddingFunc(tag)))
+      c.addDocuments((1 to 8).map(i => Document(s"d$i", content = s"text $i")), concurrency)
+      assert(CountingEmbeddingFunc.take(tag) === (1 to 8).map(i => s"text $i" -> 1).toMap)
+      // overwrites, a within-batch duplicate and a document with its own vector
+      c.addDocuments(Seq(Document("d1", content = "text 1 again"), Document("d9", content = "text 9"),
+        Document("d9", content = "text 9 again"), Document("d2", embedding = vec(1f, 0f, 0f))),
+        concurrency)
+      assert(CountingEmbeddingFunc.take(tag) === Map("text 1 again" -> 1, "text 9 again" -> 1))
+      assert(c.count() === 9)
+    }
+  }
+
+  test("a persistent addDocuments of documents with vectors runs exactly one Spark job") {
+    val root = java.nio.file.Files.createTempDirectory("graft-one-job").toString
+    val c = withLogLevel(DB.persistent(spark, root, new HashingEmbeddingFunc(8)))
+      .createCollection("one-job")
+    c.addDocuments(singlePassDocs)
+    val upsert = singlePassDocs.take(10).map(d => d.copy(content = s"${d.id} updated")) ++
+      (40 until 50).map(i => Document(s"d$i", Map("k" -> s"v$i"), tieVec, s"new doc $i"))
+    val jobs = sparkJobs(c.addDocuments(upsert))
+    assert(jobs === 1, s"persistent addDocuments ran $jobs Spark job(s)")
+    assert(c.count() === 50 && c.df.count() === 50)
+    assert(c.getByID("d03").content === "d03 updated")
+  }
+
+  test("an embedding failure partway through a batch leaves a persistent collection as it was") {
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("graft-upsert-atomic").toString
+    val db = withLogLevel(DB.persistent(spark, root, new HashingEmbeddingFunc(8)))
+    val c = db.createCollection("atomic")
+    c.addDocuments(singlePassDocs)
+    val dir = graft.persist.Persistence.collectionDir(root, "atomic").resolve("documents")
+    def files: Seq[(String, Long)] = {
+      val s = Files.walk(dir)
+      try s.iterator.asScala.filter(Files.isRegularFile(_))
+        .map((f: Path) => dir.relativize(f).toString -> Files.size(f)).toSeq.sorted
+      finally s.close()
+    }
+    def state = (c.count(), files, bits(c.queryEmbedding(tieVec, 10)),
+      bits(c.queryEmbedding(tieVec, 10, where = Map("g" -> "1"))))
+    val before = state
+    db.getCollection("atomic", new FailingEmbeddingFunc("text 3", new HashingEmbeddingFunc(8)))
+    val batch = (1 to 6).map(i => Document(s"n$i", content = s"text $i")) :+ singlePassDocs(5)
+    val started = System.nanoTime()
+    intercept[Exception](withLogLevel(c.addDocuments(batch)))
+    val seconds = (System.nanoTime() - started) / 1e9
+    // below the 10-s bound on the wait for the write's observed row count
+    assert(seconds < 10, s"failed addDocuments took $seconds s")
+    assert(state === before)
+    // the failed write leaves its output dir behind; the next commit clears it
+    assert(Files.exists(dir.resolveSibling("documents.tmp")))
+    db.getCollection("atomic", new HashingEmbeddingFunc(8))
+    c.addDocuments(batch)
+    assert(c.count() === 46 && c.df.count() === 46)
+    assert(!Files.exists(dir.resolveSibling("documents.tmp")))
+  }
+}
+
+/** Counts, per tag, how often each text was embedded; tasks run in this
+  * JVM, so every serialized copy of a func counts into the same map. */
+class CountingEmbeddingFunc(tag: String) extends graft.embed.EmbeddingFunc {
+  private val inner = new HashingEmbeddingFunc(3)
+  def embed(text: String): Array[Float] = {
+    CountingEmbeddingFunc.seen.computeIfAbsent(tag, _ => new java.util.concurrent.ConcurrentHashMap)
+      .merge(text, 1, (a: Int, b: Int) => a + b)
+    inner.embed(text)
+  }
+}
+
+object CountingEmbeddingFunc {
+  private val seen = new java.util.concurrent.ConcurrentHashMap[
+    String, java.util.concurrent.ConcurrentHashMap[String, Int]]
+
+  /** The texts `tag` embedded since the last call, with their counts. */
+  def take(tag: String): Map[String, Int] = {
+    import scala.jdk.CollectionConverters._
+    Option(seen.remove(tag)).map(_.asScala.toMap).getOrElse(Map.empty)
+  }
+}
+
+/** Delegates to `inner`, but throws on the text `bad`. */
+class FailingEmbeddingFunc(bad: String, inner: graft.embed.EmbeddingFunc)
+    extends graft.embed.EmbeddingFunc {
+  def embed(text: String): Array[Float] =
+    if (text == bad) throw new IllegalStateException(s"embedding failed on '$text'")
+    else inner.embed(text)
 }
