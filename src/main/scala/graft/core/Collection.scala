@@ -440,8 +440,7 @@ class Collection private[core] (
    * Build (or rebuild) a persisted hyperplane-LSH index: one map-only
    * signature pass over the collection, cached. Subsequent
    * `queryEmbeddingApprox` calls probe the precomputed signature column —
-   * no per-query corpus signature recompute (the gap flagged against the
-   * one-shot `VectorSearch.lshTopK`).
+   * no per-query corpus signature recompute.
    */
   def buildLshIndex(numPlanes: Int = 16, seed: Long = 42L): Unit = synchronized {
     val s = snap

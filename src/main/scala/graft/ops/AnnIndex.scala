@@ -9,16 +9,14 @@ import graft.functions.VectorFunctions
 import graft.functions.VectorFunctions.dot_const_f32
 
 /**
- * Persisted ANN index state — the "build once, probe many" counterpart of
- * the one-shot helpers in [[VectorSearch]] / [[IvfIndex]].
+ * Persisted ANN index state — "build once, probe many".
  *
- * `VectorSearch.lshTopK` recomputes every row's hyperplane signature on
- * every call, and `IvfIndex` leaves centroid training + cell assignment
- * to the caller. Fine for a single query; for the repeated-query shape
- * (an online ANN service, a bench loop) the signature/assignment pass is
- * the dominant cost and must be paid ONCE. These classes materialize that
- * pass into a cached DataFrame and keep the driver-side model (planes /
- * centroids) alongside it, so each probe is:
+ * `IvfIndex` leaves centroid training + cell assignment to the caller.
+ * For the repeated-query shape (an online ANN service, a bench loop) the
+ * signature/assignment pass is the dominant cost and must be paid ONCE.
+ * These classes materialize that pass into a cached DataFrame and keep
+ * the driver-side model (planes / centroids) alongside it, so each probe
+ * is:
  *
  *  - LSH: a codegen'd hamming-distance filter on a precomputed i64
  *    signature column + exact re-rank of survivors → TakeOrderedAndProject
@@ -92,14 +90,12 @@ final class LshIndex private[ops] (
   /** Top-k by exact score among rows within `maxHamming` signature bits of
     * the query — the probe never recomputes a corpus signature.
     *
-    * Normalization note: this persisted tier normalizes an unnormalized
-    * query first (the chromem collection contract — stored vectors are
+    * Normalization note: the probe normalizes an unnormalized query
+    * first (the chromem collection contract — stored vectors are
     * normalized on ingest, so dot == cosine only against a normalized
-    * query). The one-shot [[VectorSearch.lshTopK]] deliberately does
-    * NOT: VectorSearch helpers are raw-dot like the rest of that API.
-    * Signatures agree either way (positive scaling never flips a plane
-    * sign); only the similarity VALUES differ for unnormalized queries
-    * — don't compare raw scores across the two tiers in that case.
+    * query), unlike the raw-dot [[VectorSearch]] helpers. Signatures
+    * agree either way (positive scaling never flips a plane sign); only
+    * the similarity VALUES differ for unnormalized queries.
     *
     * `precision` ranks the candidates with the f32 hot-path kernel
     * (default) or exact f64 (the [[VectorSearch.scored]] convention) —

@@ -287,42 +287,6 @@ object VectorSearch {
   }
 
   /**
-   * LSH-bucketed ANN (random-hyperplane signatures, Charikar '02): the
-   * scale path when brute force over the full corpus is too expensive.
-   * Rows are bucketed by the sign-pattern of `numPlanes` fixed random
-   * hyperplanes; a query probes only its own bucket (and optionally
-   * neighboring buckets via multi-probe `maxHamming`).
-   *
-   * Candidates = corpus rows whose signature is within `maxHamming` of the
-   * query signature; exact re-rank on the survivors. Deterministic planes
-   * from `seed` so signatures are reproducible across runs/sessions.
-   */
-  def lshTopK(
-      df: DataFrame,
-      vecCol: String,
-      queryVec: Array[Float],
-      k: Int,
-      idCol: String = "id",
-      numPlanes: Int = 16,
-      maxHamming: Int = 2,
-      seed: Long = 42L): DataFrame = {
-    // 64-bit signature: a shift of p ≥ 64 wraps (mod 64) and silently
-    // ALIASES plane p with plane p−64 on both sides — the persisted
-    // twin AnnIndex.buildLsh already enforces the same bound
-    require(numPlanes >= 1 && numPlanes <= 64, "numPlanes must be in [1, 64]")
-    val dim = queryVec.length
-    val planes = randomPlanes(numPlanes, dim, seed)
-    val sigCol = hyperplaneSignature(col(vecCol), planes)
-    val qSig = signatureOf(queryVec, planes)
-    scored(df.withColumn("__sig", sigCol)
-        .filter(graft.functions.HashFunctions.hamming64(col("__sig"), lit(qSig)) <= lit(maxHamming)),
-        vecCol, queryVec)
-      .orderBy(desc("similarity"), asc(idCol))
-      .limit(k)
-      .drop("__sig")
-  }
-
-  /**
    * Maximal Marginal Relevance re-rank: select `k` of the candidate rows
    * greedily by `lambda·relevance − (1−lambda)·max cosine to the already
    * selected` (Carbonell & Goldstein 1998) — the standard

@@ -14,15 +14,21 @@ class AnnIndexSpec extends SparkSuite {
   private lazy val q0: Array[Float] =
     emb.filter($"vec_id" === 0).select("embedding").head().getSeq[Float](0).toArray
 
-  test("LshIndex probe equals one-shot lshTopK (signatures precomputed once)") {
+  test("LshIndex probe equals exact top-k over the rows within maxHamming of the query") {
     val idx = AnnIndex.buildLsh(emb, "embedding", "vec_id", dim = q0.length,
       numPlanes = 12).materialize()
     try {
       val viaIndex = idx.topK(q0, 10, maxHamming = 3)
         .select("vec_id").as[Long].collect().toSeq
-      val oneShot = VectorSearch.lshTopK(emb, "embedding", q0, 10, "vec_id",
-        numPlanes = 12, maxHamming = 3).select("vec_id").as[Long].collect().toSeq
-      assert(viaIndex === oneShot)
+      // reference: the same seed-42 planes, each row signed on the driver
+      val planes = VectorSearch.randomPlanes(12, q0.length, 42L)
+      val qSig = VectorSearch.signatureOf(q0, planes)
+      val near = emb.select("vec_id", "embedding").as[(Long, Seq[Float])].collect()
+        .collect { case (id, v) if java.lang.Long.bitCount(
+          VectorSearch.signatureOf(v.toArray, planes) ^ qSig) <= 3 => id }
+      val reference = VectorSearch.topK(emb.filter($"vec_id".isInCollection(near)),
+        "embedding", q0, 10, "vec_id").select("vec_id").as[Long].collect().toSeq
+      assert(viaIndex === reference)
       assert(viaIndex.head === 0L) // self-match survives its own bucket
     } finally idx.unpersist()
   }

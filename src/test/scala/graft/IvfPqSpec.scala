@@ -70,7 +70,7 @@ class IvfPqSpec extends SparkSuite {
     // seeded Random, per-row codegen kernels, (desc score, asc id)
     // tie-breaks). The split was the OLD-definition 0.5750 revived from
     // a BENCH_r12 artifact-tail prior through the recall high-water
-    // max() (fixed in Bench.readPrevBenchArtifact). This pin keeps the
+    // max(). This pin keeps the
     // determinism claim enforced: two fresh builds, exactly equal
     // doubles — 1/160 is the probe's quantum, so ANY instability shows
     // as inequality here, not as an epsilon.

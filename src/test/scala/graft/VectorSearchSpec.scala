@@ -229,17 +229,6 @@ class VectorSearchSpec extends SparkSuite with PackedIndexCases {
     assert(counts.forall(_ <= 2))
   }
 
-  test("lshTopK returns a subset consistent with brute force on its candidates") {
-    val exact = VectorSearch.topK(emb, "embedding", q0, 5, "vec_id")
-      .select("vec_id").as[Long].collect()
-    val approx = VectorSearch.lshTopK(emb, "embedding", q0, 5, "vec_id",
-      numPlanes = 8, maxHamming = 4)
-    val ids = approx.select("vec_id").as[Long].collect()
-    // self-match survives any LSH probe of its own bucket (hamming 0)
-    assert(ids.contains(0L))
-    assert(ids.length <= 5)
-  }
-
   test("mmrRerank trades relevance for diversity; lambda=1 is pure relevance") {
     def unit(deg: Double): Array[Float] = {
       val r = math.toRadians(deg)

@@ -107,6 +107,6 @@ fi
 
 if [[ "$RUN_BENCH" == 1 ]]; then
   echo "== Bench @ sf0.1 =="
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
+  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
     sbt -batch "runMain graft.Bench" 2>/dev/null | grep '"metric"'
 fi
