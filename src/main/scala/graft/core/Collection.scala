@@ -13,6 +13,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.embed.EmbeddingFunc
 import graft.functions.VectorFunctions
 import graft.functions.VectorFunctions.{dot_const_f32, is_normalized, normalize_f32}
+import graft.ops.{IvfState, LshIndex, VectorIndex}
 
 /**
  * A collection of documents — parity with reference collection.go:16-29,
@@ -71,15 +72,15 @@ class Collection private[core] (
     * flat index carries each row's metadata and content beside its
     * slab, so an indexed query reads that one object and never `df0`:
     * it cannot pair an old index with new rows. Writers are all
-    * `synchronized`, so copy-and-swap inside a writer is race-free;
-    * displaced indexes unpersist AFTER the swap so no new reader can pick
-    * them up. */
+    * `synchronized` and swap through [[publish]], which unpersists
+    * displaced indexes AFTER the swap so no new reader can pick them
+    * up. */
   private final class Snap(
       val df0: DataFrame,
       n0: => Long,
-      val flat: Option[graft.ops.VectorIndex[String]],
-      val lsh: Option[graft.ops.LshIndex],
-      val ivf: Option[graft.ops.IvfState]) {
+      val flat: Option[VectorIndex[String]],
+      val lsh: Option[LshIndex],
+      val ivf: Option[IvfState]) {
     // plain class (not a case class: the synthetic inner-class equals
     // emits an uncheckable outer-reference type test); identity
     // semantics are what `snap eq before` wants anyway
@@ -87,17 +88,17 @@ class Collection private[core] (
       * DB.persistent used to run one Spark count job per catalog entry
       * before returning (linear-in-collections startup); the first
       * count()/ingest that needs the number forces it once. Mutation
-      * commits pass a known value: a persistent commit's write job
-      * counts the rows it writes, before the directory swap. So a forced
+      * commits pass a known value: on both tiers the commit's one job
+      * counts the rows it materializes, before the swap. So a forced
       * lazy count only ever races a commit on the OPEN snap — count()
       * wraps in readCommitted for exactly that window.
       * A lazy val whose initializer throws stays uninitialized, so a
       * lost-file failure does not poison the snap for the retry. */
     lazy val n: Long = n0
     def copy(
-        flat: Option[graft.ops.VectorIndex[String]] = this.flat,
-        lsh: Option[graft.ops.LshIndex] = this.lsh,
-        ivf: Option[graft.ops.IvfState] = this.ivf): Snap =
+        flat: Option[VectorIndex[String]] = this.flat,
+        lsh: Option[LshIndex] = this.lsh,
+        ivf: Option[IvfState] = this.ivf): Snap =
       new Snap(df0, n, flat, lsh, ivf)
   }
 
@@ -370,7 +371,7 @@ class Collection private[core] (
       nResults: Int,
       where: Map[String, String] = Map.empty,
       whereDocument: Map[String, String] = Map.empty): Seq[QueryResult] =
-    runQuery(queryEmbedding, nResults, where, whereDocument, negVector = null, negThreshold = 0f)
+    exactQuery(queryEmbedding, nResults, filterOf(where, whereDocument), negVector = null, negThreshold = 0f)
 
   /** Options/negative query — reference collection.go:431-481. */
   def queryWithOptions(options: QueryOptions): Seq[QueryResult] = {
@@ -387,8 +388,7 @@ class Collection private[core] (
       val nvRaw =
         if (neg.embedding != null && neg.embedding.nonEmpty) neg.embedding
         else embedFunc.embed(neg.text)
-      val nv = if (VectorFunctions.isNormalized(nvRaw)) nvRaw
-               else VectorFunctions.normalize(nvRaw)
+      val nv = VectorFunctions.normalized(nvRaw)
       neg.mode match {
         case NegativeMode.Subtract | null | "" =>
           qv = VectorFunctions.normalize(VectorFunctions.subtract(qv, nv))
@@ -401,7 +401,7 @@ class Collection private[core] (
           throw new IllegalArgumentException(s"""unsupported negative mode: "$other"""")
       }
     }
-    runQuery(qv, options.nResults, options.where, options.whereDocument, negVec, negThreshold)
+    exactQuery(qv, options.nResults, filterOf(options.where, options.whereDocument), negVec, negThreshold)
   }
 
   /**
@@ -418,21 +418,13 @@ class Collection private[core] (
    * driver-local tier. Any mutation drops the index; call again to
    * rebuild.
    */
-  def buildIndex(numBlocks: Int = 0): Unit = synchronized {
-    val s = snap
-    if (s.n > 0) {
-      // explicit type: the this.type chain otherwise infers an
-      // inexpressible existential (a -feature warning)
-      val built: graft.ops.VectorIndex[String] = graft.ops.VectorIndex
-        .buildWithPayload[String](s.df0.filter(col("embedding").isNotNull),
-          "id", "embedding", "metadata", "content", embeddingDim(s.df0), numBlocks)
-        .persist().materialize()
-      snap = s.copy(flat = Some(built))
-      // release the DISPLACED index's persisted blocks after the swap
-      // (no new reader can reach it anymore)
-      s.flat.foreach(_.unpersist())
+  def buildIndex(numBlocks: Int = 0): Unit =
+    // explicit type: the this.type chain otherwise infers an
+    // inexpressible existential (a -feature warning)
+    swapIndex[VectorIndex[String]]((s, i) => s.copy(flat = i)) { rows =>
+      VectorIndex.buildWithPayload[String](rows, "id", "embedding", "metadata", "content",
+        embeddingDim(rows), numBlocks).persist().materialize()
     }
-  }
 
   def hasIndex: Boolean = snap.flat.isDefined
 
@@ -442,17 +434,11 @@ class Collection private[core] (
    * `queryEmbeddingApprox` calls probe the precomputed signature column —
    * no per-query corpus signature recompute.
    */
-  def buildLshIndex(numPlanes: Int = 16, seed: Long = 42L): Unit = synchronized {
-    val s = snap
-    if (s.n > 0) {
-      val built = graft.ops.AnnIndex
-        .buildLsh(s.df0.filter(col("embedding").isNotNull), "embedding", "id",
-          dim = embeddingDim(s.df0), numPlanes = numPlanes, seed = seed)
-        .materialize()
-      snap = s.copy(lsh = Some(built))
-      s.lsh.foreach(_.unpersist())
+  def buildLshIndex(numPlanes: Int = 16, seed: Long = 42L): Unit =
+    swapIndex[LshIndex]((s, i) => s.copy(lsh = i)) { rows =>
+      graft.ops.AnnIndex.buildLsh(rows, "embedding", "id",
+        dim = embeddingDim(rows), numPlanes = numPlanes, seed = seed).materialize()
     }
-  }
 
   /**
    * Build (or rebuild) a persisted IVF index: centroids trained once on a
@@ -460,19 +446,22 @@ class Collection private[core] (
    * Subsequent `queryEmbeddingApprox` calls scan only the `nprobe`
    * nearest cells of the clustered layout.
    */
-  def buildIvfIndex(nlist: Int = 16, sampleSize: Int = 10000): Unit = synchronized {
-    val s = snap
-    if (s.n > 0) {
-      val built = graft.ops.AnnIndex
-        .buildIvf(s.df0.filter(col("embedding").isNotNull), "embedding", "id",
-          nlist = nlist, sampleSize = sampleSize)
-        .materialize()
-      snap = s.copy(ivf = Some(built))
-      s.ivf.foreach(_.unpersist())
+  def buildIvfIndex(nlist: Int = 16, sampleSize: Int = 10000): Unit =
+    swapIndex[IvfState]((s, i) => s.copy(ivf = i)) { rows =>
+      graft.ops.AnnIndex.buildIvf(rows, "embedding", "id",
+        nlist = nlist, sampleSize = sampleSize).materialize()
     }
-  }
 
   def hasAnnIndex: Boolean = { val s = snap; s.lsh.isDefined || s.ivf.isDefined }
+
+  /** Builds one index over the embedded rows of ONE snap read (nothing
+    * while the collection is empty) and publishes it in the slot `put`
+    * fills, releasing the index it displaces. */
+  private def swapIndex[I](put: (Snap, Option[I]) => Snap)(build: DataFrame => I): Unit =
+    synchronized {
+      val s = snap
+      if (s.n > 0) publish(put(s, Some(build(s.df0.filter(col("embedding").isNotNull)))))
+    }
 
   /**
    * Approximate nearest-neighbor query through a built ANN index (LSH
@@ -494,13 +483,7 @@ class Collection private[core] (
       nResults: Int,
       maxHamming: Int = 2,
       nprobe: Int = 2): Seq[QueryResult] = {
-    if (queryEmbedding == null || queryEmbedding.isEmpty)
-      throw new IllegalArgumentException("queryEmbedding is empty")
-    if (nResults <= 0)
-      throw new IllegalArgumentException("nResults must be > 0")
-    if (nResults > count())
-      throw new IllegalArgumentException(
-        "nResults must be <= the number of documents in the collection")
+    checkQuery(nResults, None, Some(queryEmbedding))
     readCommitted {
       val s = snap // one coherent (state, index) view for the whole probe
       val probe = s.lsh.map(_.topK(queryEmbedding, nResults, maxHamming))
@@ -528,13 +511,7 @@ class Collection private[core] (
       nResults: Int,
       k1: Double = 1.2,
       b: Double = 0.75): Seq[QueryResult] = {
-    if (terms == null || terms.isEmpty)
-      throw new IllegalArgumentException("terms is empty")
-    if (nResults <= 0)
-      throw new IllegalArgumentException("nResults must be > 0")
-    if (nResults > count())
-      throw new IllegalArgumentException(
-        "nResults must be <= the number of documents in the collection")
+    checkQuery(nResults, Some(terms), None)
     readCommitted {
       val base = df // ONE state read: score and join back over the same rows
       materializeByScore(graft.ops.KeywordSearch.bm25TopK(
@@ -555,17 +532,8 @@ class Collection private[core] (
       nResults: Int,
       fetchK: Int = 50,
       rrfK: Int = 60): Seq[QueryResult] = {
-    if (terms == null || terms.isEmpty)
-      throw new IllegalArgumentException("terms is empty")
-    if (queryEmbedding == null || queryEmbedding.isEmpty)
-      throw new IllegalArgumentException("queryEmbedding is empty")
-    if (nResults <= 0)
-      throw new IllegalArgumentException("nResults must be > 0")
-    if (nResults > count())
-      throw new IllegalArgumentException(
-        "nResults must be <= the number of documents in the collection")
-    val q = if (VectorFunctions.isNormalized(queryEmbedding)) queryEmbedding
-            else VectorFunctions.normalize(queryEmbedding)
+    checkQuery(nResults, Some(terms), Some(queryEmbedding))
+    val q = VectorFunctions.normalized(queryEmbedding)
     val fetch = math.max(fetchK, nResults)
     readCommitted {
       val base = df // ONE state read for lexical side, semantic side, join-back
@@ -588,15 +556,8 @@ class Collection private[core] (
       queryEmbedding: Array[Float],
       nResults: Int,
       numSub: Int = 8): Seq[QueryResult] = {
-    if (queryEmbedding == null || queryEmbedding.isEmpty)
-      throw new IllegalArgumentException("queryEmbedding is empty")
-    if (nResults <= 0)
-      throw new IllegalArgumentException("nResults must be > 0")
-    if (nResults > count())
-      throw new IllegalArgumentException(
-        "nResults must be <= the number of documents in the collection")
-    val q = if (VectorFunctions.isNormalized(queryEmbedding)) queryEmbedding
-            else VectorFunctions.normalize(queryEmbedding)
+    checkQuery(nResults, None, Some(queryEmbedding))
+    val q = VectorFunctions.normalized(queryEmbedding)
     // maxSimTopK scores in scale² integer units (one scale per operand
     // of each sub-dot); divide by the same scale the kernel ran with so
     // the two can never drift apart, then average over the sub-vectors.
@@ -667,7 +628,7 @@ class Collection private[core] (
           // The displaced files die inside the concurrent commit's
           // write() swap, but the NEW snapshot lands only after its
           // post-swap re-read of the directory (its row count came from
-          // the write job, before the swap) — retrying immediately would
+          // the commit's job, before the swap) — retrying immediately would
           // re-scan the same dead view. Every writer holds THIS
           // object's monitor from before the swap until after the snap
           // assignment, so briefly taking the monitor blocks exactly
@@ -708,23 +669,21 @@ class Collection private[core] (
     df0.select("embedding").filter(col("embedding").isNotNull)
       .head().getSeq[Float](0).length
 
-  /** The fused pipeline of reference queryEmbedding (collection.go:496-559). */
-  private def runQuery(
-      qv: Array[Float],
-      nResults: Int,
-      where: Map[String, String],
-      whereDocument: Map[String, String],
-      negVector: Array[Float],
-      negThreshold: Float): Seq[QueryResult] = {
-    if (qv == null || qv.isEmpty)
+  /** The argument checks every query makes before it reads the
+    * collection, in the reference's order (collection.go:496-507): its
+    * `terms`, then its `queryEmbedding` (each only when given), then
+    * `nResults`. */
+  private def checkQuery(
+      nResults: Int, terms: Option[Seq[String]], qv: Option[Array[Float]]): Unit = {
+    if (terms.exists(t => t == null || t.isEmpty))
+      throw new IllegalArgumentException("terms is empty")
+    if (qv.exists(v => v == null || v.isEmpty))
       throw new IllegalArgumentException("queryEmbedding is empty")
     if (nResults <= 0)
       throw new IllegalArgumentException("nResults must be > 0")
     if (nResults > count())
       throw new IllegalArgumentException(
         "nResults must be <= the number of documents in the collection")
-    Filters.validateWhereDocument(whereDocument, "unsupported operator")
-    exactQuery(qv, nResults, filterOf(where, whereDocument), negVector, negThreshold)
   }
 
   private def filterOf(
@@ -733,31 +692,35 @@ class Collection private[core] (
     if (where.isEmpty && whereDocument.isEmpty) None
     else Some(Filters.clause(where, whereDocument))
 
-  /** One exact query over ONE snap read. A flat-indexed collection
-    * answers from the index in one pass: `filter` and the negative
-    * filter are tested on each row's payload before it is scored
-    * (collection.go:521 before :542), and the winners' documents come
-    * from the payload too, so the result is (score desc, id asc) and
-    * coherent with the committed view the index was built over. An
-    * unindexed collection runs the DataFrame plan of [[queryDF]]. */
+  /** The fused pipeline of reference queryEmbedding (collection.go:496-559):
+    * one exact query over ONE snap read. `filter` is built after the
+    * argument checks, so a bad `whereDocument` operator is reported
+    * after them. A flat-indexed collection answers from the index in
+    * one pass: `filter` and the negative filter are tested on each
+    * row's payload before it is scored (collection.go:521 before :542),
+    * and the winners' documents come from the payload too, so the result
+    * is (score desc, id asc) and coherent with the committed view the
+    * index was built over. An unindexed collection runs the DataFrame
+    * plan of [[queryDF]]. */
   private def exactQuery(
       qv: Array[Float],
       nResults: Int,
-      filter: Option[Filters.Clause],
+      filter: => Option[Filters.Clause],
       negVector: Array[Float],
       negThreshold: Float): Seq[QueryResult] = {
+    checkQuery(nResults, None, Some(qv))
+    val clause = filter
     // checked up front on both paths, so a negative of another
     // dimension fails even when the filter passes no row
     if (negVector != null && negVector.length != qv.length) throw new IllegalArgumentException(
       s"vectors must have the same length: ${negVector.length} vs ${qv.length}")
-    val keep = Collection.keep[String](filter, negVector, negThreshold)
+    val keep = Collection.keep[String](clause, negVector, negThreshold)
     readCommitted {
       snap.flat match {
         case Some(idx) =>
-          val q = if (VectorFunctions.isNormalized(qv)) qv else VectorFunctions.normalize(qv)
-          idx.topKRows(q, nResults, keep).toIndexedSeq
+          idx.topKRows(VectorFunctions.normalized(qv), nResults, keep).toIndexedSeq
             .map(h => QueryResult(h.id, h.metadata, h.embedding, h.content, h.similarity))
-        case None => plan(qv, nResults, filter, negVector, negThreshold)
+        case None => plan(qv, nResults, clause, negVector, negThreshold)
           .as[QueryResult].collect().toIndexedSeq
       }
     }
@@ -768,16 +731,8 @@ class Collection private[core] (
   def queryEmbeddingWhere(
       queryEmbedding: Array[Float],
       nResults: Int,
-      clause: Filters.Clause): Seq[QueryResult] = {
-    if (queryEmbedding == null || queryEmbedding.isEmpty)
-      throw new IllegalArgumentException("queryEmbedding is empty")
-    if (nResults <= 0)
-      throw new IllegalArgumentException("nResults must be > 0")
-    if (nResults > count())
-      throw new IllegalArgumentException(
-        "nResults must be <= the number of documents in the collection")
+      clause: Filters.Clause): Seq[QueryResult] =
     exactQuery(queryEmbedding, nResults, Some(clause), negVector = null, negThreshold = 0f)
-  }
 
   /** Lazy DataFrame form of the query — for composition / explain / tests. */
   def queryDF(
@@ -796,7 +751,7 @@ class Collection private[core] (
       negVector: Array[Float],
       negThreshold: Float): DataFrame = {
     // normalize query vector if needed (collection.go:530-532)
-    val q = if (VectorFunctions.isNormalized(qv)) qv else VectorFunctions.normalize(qv)
+    val q = VectorFunctions.normalized(qv)
     // Embedding-less rows (externally landed parquet read by
     // DB.persistent can carry them — Document.schema allows it) must
     // never reach the heap: their similarity is NULL, and once nResults
@@ -820,30 +775,32 @@ class Collection private[core] (
 
   // ------------------------------------------------------------------
 
-  /** Makes `next` the collection's state. On a persistent collection
-    * this is one Spark job, which also counts the rows it writes
-    * ([[Collection.writeCounted]]); a failed write leaves the committed
-    * files and the snap as they were. */
+  /** Makes `next` the collection's state, with no indexes, in one Spark
+    * job that also counts the rows it materializes
+    * ([[Collection.materializeCounted]]): a persistent collection writes
+    * its parquet; an in-memory one checkpoints locally, which cuts plan
+    * lineage so repeated upserts don't grow an unbounded union tree (the
+    * in-memory analog of the reference's "persist each mutation",
+    * collection.go:284-290). A failed write leaves the committed files
+    * and the snap as they were. The count is known before the swap:
+    * readCommitted's monitor-bounce relies on the commit publishing the
+    * new snap, count included, before releasing this object's monitor. */
   private def commit(next: DataFrame): Unit = {
-    val (materialized, nNext) = persistRef match {
-      case Some(p) => Collection.writeCounted(p, next, spark)
-      case None =>
-        // Cut plan lineage so repeated upserts don't grow an unbounded
-        // union/anti-join tree (the in-memory analog of the reference's
-        // "persist each mutation", collection.go:284-290).
-        val checkpointed = next.localCheckpoint(true)
-        (checkpointed, checkpointed.count())
+    val (materialized, rows) = Collection.materializeCounted(next) { observed =>
+      persistRef.fold(observed.localCheckpoint(true)) { p => p.write(observed); p.read(spark) }
     }
-    // swap the whole view first (new state, no indexes), THEN release the
-    // displaced indexes — after the swap no new reader can reach them.
-    // The count is known before the swap (hoisted: Snap's n is by-name):
-    // readCommitted's monitor-bounce relies on the commit publishing the
-    // new snap, count included, before releasing this object's monitor
+    publish(new Snap(materialized, rows, None, None, None))
+  }
+
+  /** Swaps in `next`, THEN releases each index of the displaced snap
+    * that `next` does not carry over: after the swap no new reader can
+    * reach it. */
+  private def publish(next: Snap): Unit = {
     val old = snap
-    snap = new Snap(materialized, nNext, None, None, None)
-    old.flat.foreach(_.unpersist())
-    old.lsh.foreach(_.unpersist())
-    old.ivf.foreach(_.unpersist())
+    snap = next
+    if (old.flat ne next.flat) old.flat.foreach(_.unpersist())
+    if (old.lsh ne next.lsh) old.lsh.foreach(_.unpersist())
+    if (old.ivf ne next.ivf) old.ivf.foreach(_.unpersist())
   }
 }
 
@@ -851,19 +808,20 @@ private[graft] object Collection {
 
   def lacksVector(d: Document): Boolean = d.embedding == null || d.embedding.isEmpty
 
-  /** Writes `next` through `p` in one Spark job and returns the
-    * committed frame with the row count that job observed. Spark posts
-    * the count from its listener bus, so it lands just after a write
-    * that succeeded; if the bus drops it, the committed files are
-    * counted instead. A failed write throws before any wait. */
-  def writeCounted(p: CollectionPersistence, next: DataFrame, spark: SparkSession)
+  /** Runs `materialize` (one Spark job: a parquet write, an eager local
+    * checkpoint) on `next` with an `Observation` of `count(1)` attached,
+    * and returns the materialized frame with the row count that job
+    * observed. Spark posts the count from its listener bus, so it lands
+    * just after a job that succeeded; if the bus drops it, the
+    * materialized frame is counted instead. A failed job throws before
+    * any wait. */
+  def materializeCounted(next: DataFrame)(materialize: DataFrame => DataFrame)
       : (DataFrame, Long) = {
-    val written = Observation()
-    p.write(next.observe(written, count(lit(1))))
-    val committed = p.read(spark)
-    val rows = try Await.result(written.future, 10.seconds).getLong(0)
-      catch { case _: TimeoutException => committed.count() }
-    (committed, rows)
+    val seen = Observation()
+    val done = materialize(next.observe(seen, count(lit(1))))
+    val rows = try Await.result(seen.future, 10.seconds).getLong(0)
+      catch { case _: TimeoutException => done.count() }
+    (done, rows)
   }
 
   /** The row test of a filtered indexed query, or None when nothing
@@ -874,7 +832,7 @@ private[graft] object Collection {
     * equals the DataFrame path's. Built here, outside the collection,
     * so the distributed tier ships only the filter to its tasks. */
   def keep[K](filter: Option[Filters.Clause], negative: Array[Float], threshold: Float)
-      : Option[(graft.ops.VectorIndex.Block[K], Int) => Boolean] = {
+      : Option[(VectorIndex.Block[K], Int) => Boolean] = {
     val payload = filter.map(Filters.eval)
     if (payload.isEmpty && negative == null) None
     else Some { (b, r) =>

@@ -1,6 +1,6 @@
 package graft.core
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.SparkSession
@@ -129,7 +129,7 @@ class DB private (
         val dir = Persistence.collectionDir(root, name)
         val ownedByOther = Files.exists(dir.resolve("_metadata.json")) &&
           Persistence.readMetadata(dir)._1 != name
-        if (!ownedByOther) deleteRecursively(dir)
+        if (!ownedByOther) Persistence.deleteTree(dir)
       }
       removed match {
         case Some(c) => c.synchronized { c.detachPersistence(); clear() }
@@ -145,14 +145,10 @@ class DB private (
     persistRoot.foreach { root =>
       // fence each live handle out of its directory before the root goes
       snapshot.foreach(c => c.synchronized { c.detachPersistence() })
-      deleteRecursively(Paths.get(root))
+      Persistence.deleteTree(Paths.get(root))
       Files.createDirectories(Paths.get(root))
     }
   }
-
-  // the shared helper closes the Files.walk stream — the previous local
-  // copy leaked one directory handle per deleteCollection/reset call
-  private def deleteRecursively(p: Path): Unit = Persistence.deleteTree(p)
 
   /** Snapshot export — reference db.go:384-433 (see persist.ExportImport). */
   def exportToFile(

@@ -77,6 +77,10 @@ object VectorFunctions {
   def isNormalized(v: Array[Float]): Boolean =
     math.abs(norm(v) - 1.0) < NormalizedTolerance
 
+  /** `v` when it is already unit length (the reference's check,
+    * collection.go:530-532), else [[normalize]]`(v)`. */
+  def normalized(v: Array[Float]): Array[Float] = if (isNormalized(v)) v else normalize(v)
+
   def subtract(a: Array[Float], b: Array[Float]): Array[Float] = {
     require(a.length == b.length, "vectors must have the same length")
     Array.tabulate(a.length)(i => a(i) - b(i))

@@ -105,8 +105,7 @@ final class LshIndex private[ops] (
     * unique surface) stays the production path. */
   def topK(queryVec: Array[Float], k: Int, maxHamming: Int = 2,
       precision: String = "f32"): DataFrame = {
-    val q = if (VectorFunctions.isNormalized(queryVec)) queryVec
-            else VectorFunctions.normalize(queryVec)
+    val q = VectorFunctions.normalized(queryVec)
     val qSig = VectorSearch.signatureOf(q, planes)
     signed
       .filter(hamming64(col("__sig"), lit(qSig)) <= lit(maxHamming))
@@ -137,8 +136,7 @@ final class IvfState private[ops] (
     * oracle-parity configuration); "f32" is the production hot path. */
   def topK(queryVec: Array[Float], k: Int, nprobe: Int = 2,
       precision: String = "f32"): DataFrame = {
-    val q = if (VectorFunctions.isNormalized(queryVec)) queryVec
-            else VectorFunctions.normalize(queryVec)
+    val q = VectorFunctions.normalized(queryVec)
     IvfIndex.topK(assigned, vecCol, centroids, q, k, idCol, nprobe, precision)
   }
 

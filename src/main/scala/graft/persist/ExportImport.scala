@@ -88,7 +88,7 @@ object ExportImport {
       try Files.copy(zipPath, sink)
       finally sink.close() // flush gzip/GCM trailers; caller's out stays open
       out.flush()
-    } finally deleteTree(tmp)
+    } finally Persistence.deleteTree(tmp)
   }
 
   /** Delegating stream whose close() only flushes — lets gzip/cipher
@@ -281,7 +281,7 @@ object ExportImport {
         val c = db.createCollection(name, metadata) // overwrite (db.go:201)
         if (!rows.isEmpty) c.addDF(rows)
       }
-    } finally deleteTree(tmp)
+    } finally Persistence.deleteTree(tmp)
   }
 
   // ------------------------------ helpers ------------------------------
@@ -302,5 +302,4 @@ object ExportImport {
     if (key.nonEmpty && key.getBytes("UTF-8").length != 32)
       throw new IllegalArgumentException("encryption key must be 32 bytes long")
 
-  private def deleteTree(p: Path): Unit = Persistence.deleteTree(p)
 }

@@ -75,7 +75,7 @@ object Persistence {
 
   /** Recursive delete with the walk stream CLOSED (Files.walk leaks a
     * directory handle otherwise) — the ONE shared copy; DB, the parquet
-    * layout, the snapshot store, and export/import all delegate here. */
+    * layout, the snapshot store, and export/import all call it. */
   private[graft] def deleteTree(p: Path): Unit =
     if (Files.exists(p)) {
       val w = Files.walk(p)
@@ -111,14 +111,14 @@ class ParquetPersistence(dir: Path, compression: Option[String] = None)
     * possible: [[read]] restores `.old` when `documents/` is missing. */
   override def write(df: DataFrame): Unit = {
     val tmp = dir.resolve("documents.tmp")
-    deleteTree(tmp)
+    Persistence.deleteTree(tmp)
     // same recovery as read(): if a prior write in THIS process failed
     // between the two renames (exception, not crash — so no read() ran to
     // recover), `.old` holds the only complete dataset. Deleting it here
     // would lose the collection: restore it first.
     if (!Files.exists(dataDir) && Files.exists(oldDir))
       Files.move(oldDir, dataDir)
-    deleteTree(oldDir)
+    Persistence.deleteTree(oldDir)
     val w = df.write.mode("overwrite")
     compression.foreach(c => w.option("compression", c))
     // the new state is often computed lazily FROM the current parquet
@@ -126,7 +126,7 @@ class ParquetPersistence(dir: Path, compression: Option[String] = None)
     w.parquet(tmp.toString)
     if (Files.exists(dataDir)) Files.move(dataDir, oldDir)
     Files.move(tmp, dataDir)
-    deleteTree(oldDir)
+    Persistence.deleteTree(oldDir)
   }
   override def read(spark: SparkSession): DataFrame = {
     // crash recovery: a kill between the two renames leaves only .old —
@@ -136,7 +136,6 @@ class ParquetPersistence(dir: Path, compression: Option[String] = None)
     if (Files.exists(dataDir)) spark.read.schema(Document.schema).parquet(dataDir.toString)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Document.schema)
   }
-  private def deleteTree(p: Path): Unit = Persistence.deleteTree(p)
 }
 
 /** Minimal JSON encode/parse for sidecars & provider payloads (no third-

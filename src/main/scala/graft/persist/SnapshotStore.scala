@@ -88,11 +88,11 @@ class SnapshotStore(rootDir: String) {
     val v = versions.lastOption.getOrElse(0L) + 1L
     val unique = java.util.UUID.randomUUID().toString.take(8)
     val tmp = root.resolve(f"v$v%08d.$unique.tmp")
-    deleteTree(tmp)
+    Persistence.deleteTree(tmp)
     try {
       df.write.mode("overwrite").parquet(tmp.toString)
       Files.move(tmp, versionDir(v))
-    } finally deleteTree(tmp) // no-op on success; clears a failed write
+    } finally Persistence.deleteTree(tmp) // no-op on success; clears a failed write
     val ptrTmp = root.resolve(s"_latest.json.$unique.tmp")
     Files.writeString(ptrTmp, Json.obj("version" -> Json.num(v.toDouble)))
     Files.move(ptrTmp, pointer, StandardCopyOption.REPLACE_EXISTING,
@@ -134,7 +134,7 @@ class SnapshotStore(rootDir: String) {
     if (drop.nonEmpty) {
       log.warn(s"SnapshotStore($root): pruning versions ${drop.mkString(", ")} " +
         s"(keeping ${keep.toSeq.sorted.mkString(", ")})")
-      drop.foreach(v => deleteTree(versionDir(v)))
+      drop.foreach(v => Persistence.deleteTree(versionDir(v)))
     }
     drop
   }
@@ -166,5 +166,4 @@ class SnapshotStore(rootDir: String) {
       .filter(col("change").isNotNull)
   }
 
-  private def deleteTree(p: Path): Unit = Persistence.deleteTree(p)
 }

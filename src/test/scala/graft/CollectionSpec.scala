@@ -55,6 +55,27 @@ class CollectionSpec extends SparkSuite {
       queryEmbedding = Array(1f, 0f, 0f), nResults = 1,
       negative = NegativeQueryOptions(mode = "bogus", embedding = Array(1f, 0f, 0f))))) ===
       """unsupported negative mode: "bogus"""")
+    val clause = graft.core.Filters.MetaEq("k", "v")
+    val vectorCalls: Seq[(String, (Array[Float], Int) => Unit)] = Seq(
+      "queryEmbeddingWhere" -> ((v, k) => c.queryEmbeddingWhere(v, k, clause)),
+      "queryEmbeddingApprox" -> ((v, k) => c.queryEmbeddingApprox(v, k)))
+    for ((name, call) <- vectorCalls) withClue(s"$name: ") {
+      assert(msg(call(Array.empty[Float], 1)) === "queryEmbedding is empty")
+      assert(msg(call(Array(1f), 0)) === "nResults must be > 0")
+      assert(msg(call(Array(1f), 5)) ===
+        "nResults must be <= the number of documents in the collection")
+    }
+    assert(msg(c.queryHybrid(Seq.empty, Array(1f), 1)) === "terms is empty")
+    assert(msg(c.queryHybrid(Seq("hello"), Array(1f), 0)) === "nResults must be > 0")
+    assert(msg(c.queryHybrid(Seq("hello"), Array(1f), 5)) ===
+      "nResults must be <= the number of documents in the collection")
+    // the order of the checks when a call breaks two of them
+    assert(msg(c.queryEmbedding(Array.empty[Float], 0)) === "queryEmbedding is empty")
+    assert(msg(c.queryEmbeddingWhere(Array.empty[Float], 0, clause)) === "queryEmbedding is empty")
+    assert(msg(c.queryEmbedding(Array(1f), 5, whereDocument = Map("$bad" -> "x"))) ===
+      "nResults must be <= the number of documents in the collection")
+    assert(msg(c.queryEmbedding(Array(1f), 1, whereDocument = Map("$bad" -> "x"))) ===
+      "unsupported operator")
   }
 
   test("upsert by id overwrites (collection.go:280); within-batch last wins") {
@@ -662,6 +683,20 @@ class CollectionSpec extends SparkSuite {
     assert(jobs === 1, s"persistent addDocuments ran $jobs Spark job(s)")
     assert(c.count() === 50 && c.df.count() === 50)
     assert(c.getByID("d03").content === "d03 updated")
+  }
+
+  test("an in-memory addDocuments / delete runs exactly one Spark job") {
+    val c = withLogLevel(DB.inMemory(spark, new HashingEmbeddingFunc(8))).createCollection("one-job")
+    c.addDocuments(singlePassDocs)
+    val upsert = singlePassDocs.take(10).map(d => d.copy(content = s"${d.id} updated")) ++
+      (40 until 50).map(i => Document(s"d$i", Map("k" -> s"v$i"), tieVec, s"new doc $i"))
+    val addJobs = sparkJobs(c.addDocuments(upsert))
+    assert(addJobs === 1, s"in-memory addDocuments ran $addJobs Spark job(s)")
+    assert(c.count() === 50 && c.df.count() === 50)
+    val deleteJobs = sparkJobs(c.delete(ids = Seq("d03", "d44")))
+    assert(deleteJobs === 1, s"in-memory delete ran $deleteJobs Spark job(s)")
+    assert(c.count() === 48 && c.df.count() === 48)
+    assert(c.getByID("d05").content === "d05 updated")
   }
 
   test("an embedding failure partway through a batch leaves a persistent collection as it was") {
