@@ -15,7 +15,8 @@ import org.apache.spark.storage.StorageLevel
  * packed row-major slabs, distributed over Spark partitions. One engine,
  * two slab kinds: float32 ([[VectorIndex]]) and int8-quantized
  * ([[Int8VectorIndex]]). A kind supplies only its slab type, its row
- * scoring loop ([[Slab.scan]]), its per-row build decoder and its query
+ * scoring loop ([[Slab.scan]], with its gather form [[Slab.scanRows]]
+ * for a filter's surviving rows), its per-row build decoder and its query
  * preparation; heap, scan pool, distributed pass, merge, persist and the
  * slab builder are written once here.
  *
@@ -153,6 +154,14 @@ trait Slab[K, Q] extends Serializable {
     * monomorphic scoring loop. */
   private[ops] def scan(from: Int, until: Int, d: Int, q: Q, heap: TopKHeap[K], slab: Int): Unit
 
+  /** [[scan]] over the first `n` row positions of `rows`, ascending:
+    * the gather form a filtered scan offers its surviving rows through.
+    * A kind without a gather loop scores them one by one. */
+  private[ops] def scanRows(rows: Array[Int], n: Int, d: Int, q: Q, heap: TopKHeap[K], slab: Int): Unit = {
+    var j = 0
+    while (j < n) { scan(rows(j), rows(j) + 1, d, q, heap, slab); j += 1 }
+  }
+
   /** Bytes the slab keeps beside its vectors, for the driver-local
     * budget. */
   private[graft] def payloadBytes: Long = 0L
@@ -224,7 +233,7 @@ object PackedIndex {
 
   /** Offer rows [from, until) of `b` to the heap: all of them through
     * the kind's contiguous loop, or under `keep` the rows it passes,
-    * selected first and then scored one by one by the same loop. */
+    * selected first and then scored by the kind's gather loop. */
   private def offer[K, Q, B <: Slab[K, Q]](b: B, from: Int, until: Int, d: Int, q: Q,
       heap: TopKHeap[K], slab: Int, keep: Option[(B, Int) => Boolean]): Unit = keep match {
     case None => b.scan(from, until, d, q, heap, slab)
@@ -236,8 +245,7 @@ object PackedIndex {
         if (pass(b, r)) { rows(n) = r; n += 1 }
         r += 1
       }
-      var j = 0
-      while (j < n) { b.scan(rows(j), rows(j) + 1, d, q, heap, slab); j += 1 }
+      b.scanRows(rows, n, d, q, heap, slab)
   }
 
   /** Per-block slab cap (~64 MB). The r12 1M-row build showed

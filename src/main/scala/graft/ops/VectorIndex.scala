@@ -12,13 +12,15 @@ import org.apache.spark.sql.types.{MapType, StringType}
  * one packed-scan engine ([[PackedIndex]]): driver-local under the
  * engine's 800 MB budget (200M floats), distributed above it.
  *
- * Why not the DataFrame columnar cache for the hot loop? Measured on
- * 100k×1536 float32 (local[32]): columnar-cache scan ≈ 92 ms/query,
- * parquet scan ≈ 575 ms/query, this packed-primitive layout ≈ 38 ms/query
- * — i.e. at parity with the reference's published 39.6 ms (8-thread
- * laptop, BASELINE.md). The win is data layout: one contiguous float[]
- * per block (SIMD-friendly, zero per-row decode), exactly what the
- * reference scans (contiguous sub-slices, query.go:192-196).
+ * The hot loop reads a packed layout, not the DataFrame columnar cache:
+ * one contiguous float[] per block, row-major, with zero per-row decode —
+ * what the reference scans (contiguous sub-slices, query.go:192-196).
+ * The slab is scanned 4 rows per pass ([[VectorIndex.Block]]): a one-row
+ * loop runs d dependent float adds per row, so add latency bounds it,
+ * not memory; four rows give four independent add chains over the same
+ * `q(i)`. Each row still sums in its own sequential order — no SIMD
+ * reduction, no partial sums within a row — because that order is what
+ * keeps a score bit-equal to `dot_const_f32` and the DataFrame tiers.
  */
 final class VectorIndex[K: Ordering] private (
     slabs: RDD[VectorIndex.Block[K]],
@@ -70,22 +72,56 @@ object VectorIndex {
       content: Array[String] = null) extends Slab[K, Array[Float]] {
     private[ops] def scan(from: Int, until: Int, d: Int, q: Array[Float],
         heap: TopKHeap[K], slab: Int): Unit = {
-      val data = this.data
-      val ids = this.ids
       var r = from
-      while (r < until) {
-        val off = r * d
-        var s = 0.0f
-        var i = 0
-        while (i < d) { s += data(off + i) * q(i); i += 1 }
-        heap.insert(ids(r), s, slab, r)
-        r += 1
+      while (r + 4 <= until) { four(r, r + 1, r + 2, r + 3, d, q, heap, slab); r += 4 }
+      while (r < until) { heap.insert(ids(r), dot(r, q), slab, r); r += 1 }
+    }
+
+    private[ops] override def scanRows(rows: Array[Int], n: Int, d: Int, q: Array[Float],
+        heap: TopKHeap[K], slab: Int): Unit = {
+      var j = 0
+      while (j + 4 <= n) {
+        four(rows(j), rows(j + 1), rows(j + 2), rows(j + 3), d, q, heap, slab)
+        j += 4
       }
+      while (j < n) { val r = rows(j); heap.insert(ids(r), dot(r, q), slab, r); j += 1 }
+    }
+
+    /** Rows r0..r3 scored in one pass over `q`: four independent add
+      * chains hide the float-add latency that bounds a one-row loop,
+      * while each row keeps its own sequential sum, so every score is
+      * bit-equal to [[dot]]. Offered in row order. */
+    private def four(r0: Int, r1: Int, r2: Int, r3: Int, d: Int, q: Array[Float],
+        heap: TopKHeap[K], slab: Int): Unit = {
+      val data = this.data
+      val o0 = r0 * d
+      val o1 = r1 * d
+      val o2 = r2 * d
+      val o3 = r3 * d
+      var s0 = 0.0f
+      var s1 = 0.0f
+      var s2 = 0.0f
+      var s3 = 0.0f
+      var i = 0
+      while (i < d) {
+        val qi = q(i)
+        s0 += data(o0 + i) * qi
+        s1 += data(o1 + i) * qi
+        s2 += data(o2 + i) * qi
+        s3 += data(o3 + i) * qi
+        i += 1
+      }
+      heap.insert(ids(r0), s0, slab, r0)
+      heap.insert(ids(r1), s1, slab, r1)
+      heap.insert(ids(r2), s2, slab, r2)
+      heap.insert(ids(r3), s3, slab, r3)
     }
 
     /** Row `r`'s dot product with `v`, which must have the slab's
-      * dimension: the sequential float sum of [[scan]] and of
-      * `dot_const_f32`, so it is bit-equal to both. */
+      * dimension: one sequential float sum, the order each of
+      * [[scan]]'s four chains keeps per row and the order of
+      * `dot_const_f32`, so it is bit-equal to both. The scan scores its
+      * 0-3 tail rows with it. */
     def dot(r: Int, v: Array[Float]): Float = {
       val d = v.length
       val off = r * d

@@ -40,6 +40,99 @@ class VectorSearchSpec extends SparkSuite with PackedIndexCases {
     chunkBoundaryCase(F32)
   }
 
+  /** One partition per size, ids in order, Gaussian vectors (with
+    * metadata and content, so [[VectorIndex.topKRows]] can run): the
+    * build keeps upstream partitions, so each size is one block, a size
+    * above 4096 split at the first-chunk boundary. */
+  private def blockShaped(sizes: Seq[Int], d: Int): org.apache.spark.sql.DataFrame = {
+    val starts = sizes.scanLeft(0)(_ + _)
+    withLogLevel(spark.sparkContext.parallelize(sizes.indices, sizes.length).flatMap { p =>
+      val rnd = new scala.util.Random(91 + p)
+      (starts(p) until starts(p + 1)).map { id =>
+        (id.toLong, Array.fill(d)(rnd.nextGaussian().toFloat), Map("m" -> s"${id % 7}"), s"doc $id")
+      }
+    }.toDF("vec_id", "embedding", "metadata", "content"))
+  }
+
+  private def withTiers(df: org.apache.spark.sql.DataFrame, d: Int)(
+      check: VectorIndex[Long] => Unit): Unit =
+    for (distributed <- Seq(false, true)) {
+      val idx = VectorIndex.buildWithPayload[Long](df, "vec_id", "embedding", "metadata",
+        "content", d).persist().materialize(forceDistributed = distributed)
+      try {
+        assert(idx.isLocal === !distributed)
+        withClue(s"distributed = $distributed: ")(check(idx))
+      } finally idx.unpersist(blocking = true)
+    }
+
+  private def bits(hits: Seq[(Long, Float)]): Seq[(Long, Int)] =
+    hits.map { case (id, s) => (id, java.lang.Float.floatToRawIntBits(s)) }
+
+  private def referenceBits(df: org.apache.spark.sql.DataFrame, q: Array[Float], k: Int) =
+    bits(VectorSearch.topK(df, "embedding", q, k, "vec_id").collect()
+      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Float]("similarity"))).toSeq)
+
+  test("4-row scan: blocks of 1, 2, 3, 5 and 4097 rows score bit-equal to VectorSearch.topK, filtered too") {
+    val d = 37
+    val sizes = Seq(1, 2, 3, 5, 4097)
+    val df = blockShaped(sizes, d)
+    val n = sizes.sum
+    val q = { val rnd = new scala.util.Random(5); Array.fill(d)(rnd.nextGaussian().toFloat) }
+    // the row test drops ids ≡ 3 (mod 7): survivors leave 1, 2 and 3
+    // rows in some block's last 4-row group
+    val keep: Option[(VectorIndex.Block[Long], Int) => Boolean] = Some((b, r) => b.ids(r) % 7 != 3)
+    val kept = df.filter($"vec_id" % 7 =!= 3)
+    withTiers(df, d) { idx =>
+      val blocks = idx.blocks.map(_.ids.toSeq).collect().toSeq
+      assert(blocks.map(_.length) === Seq(1, 2, 3, 5, 4096, 1), "block sizes")
+      assert(Set(1, 2, 3).subsetOf(blocks.map(_.count(_ % 7 != 3) % 4).toSet), "filtered tails")
+      for (k <- Seq(1, 10, n)) withClue(s"k = $k: ") {
+        assert(bits(idx.topK(q, k).toSeq) === referenceBits(df, q, k))
+        assert(bits(idx.topKRows(q, k, keep).toSeq.map(h => (h.id, h.similarity))) ===
+          referenceBits(kept, q, k))
+      }
+    }
+  }
+
+  test("4-row scan: five equal vectors across a 4-row group boundary tie by id asc") {
+    // one block; the ties sit at rows 2-6 (groups 0-3 | 4-7 | tail 8),
+    // ids descending with the row
+    val v = Array(0.6f, 0.8f)
+    val ids = Seq(7L, 3L, 50L, 40L, 30L, 20L, 10L, 1L, 60L)
+    val df = withLogLevel(ids.zipWithIndex.map { case (id, row) =>
+      (id, if (row >= 2 && row <= 6) v else Array(0.1f * row, -0.2f), Map.empty[String, String], "")
+    }.toDF("vec_id", "embedding", "metadata", "content").coalesce(1))
+    val keep: Option[(VectorIndex.Block[Long], Int) => Boolean] = Some((b, r) => b.ids(r) != 40L)
+    withTiers(df, 2) { idx =>
+      assert(idx.blocks.map(_.ids.length).collect().toSeq === Seq(9))
+      for (k <- Seq(3, 5, 9)) withClue(s"k = $k: ") {
+        val got = bits(idx.topK(v, k).toSeq)
+        assert(got === referenceBits(df, v, k))
+        assert(got.map(_._1).take(5) === Seq(10L, 20L, 30L, 40L, 50L).take(k), "ties: id asc")
+        val filtered = bits(idx.topKRows(v, k, keep).toSeq.map(h => (h.id, h.similarity)))
+        assert(filtered === referenceBits(df.filter($"vec_id" =!= 40L), v, k))
+      }
+    }
+  }
+
+  test("Block.dot is bit-equal to the score the 4-row scan offers, every row of a 4n+3 block") {
+    // a negative filter compares dot with its threshold while the scan
+    // ranks by its own score: they must never differ on a boundary score
+    val d = 131
+    val df = blockShaped(Seq(23), d)
+    val q = { val rnd = new scala.util.Random(8); Array.fill(d)(rnd.nextGaussian().toFloat) }
+    withTiers(df, d) { idx =>
+      val blocks = idx.blocks.collect()
+      assert(blocks.map(_.ids.length).toSeq === Seq(23))
+      val b = blocks.head
+      val offered = idx.topK(q, 23).toMap
+      for (r <- 0 until 23) withClue(s"row $r: ") {
+        assert(java.lang.Float.floatToRawIntBits(b.dot(r, q)) ===
+          java.lang.Float.floatToRawIntBits(offered(b.ids(r))))
+      }
+    }
+  }
+
   test("VectorIndex topK rejects k <= 0 loudly (r12)") {
     val idx = VectorIndex.build[Long](emb, "vec_id", "embedding", q0.length, 2)
     val e = intercept[IllegalArgumentException](idx.topK(q0, 0))
