@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
@@ -44,7 +45,7 @@ class VectorSearchSpec extends SparkSuite with PackedIndexCases {
     * metadata and content, so [[VectorIndex.topKRows]] can run): the
     * build keeps upstream partitions, so each size is one block, a size
     * above 4096 split at the first-chunk boundary. */
-  private def blockShaped(sizes: Seq[Int], d: Int): org.apache.spark.sql.DataFrame = {
+  private def blockShaped(sizes: Seq[Int], d: Int): DataFrame = {
     val starts = sizes.scanLeft(0)(_ + _)
     withLogLevel(spark.sparkContext.parallelize(sizes.indices, sizes.length).flatMap { p =>
       val rnd = new scala.util.Random(91 + p)
@@ -54,7 +55,7 @@ class VectorSearchSpec extends SparkSuite with PackedIndexCases {
     }.toDF("vec_id", "embedding", "metadata", "content"))
   }
 
-  private def withTiers(df: org.apache.spark.sql.DataFrame, d: Int)(
+  private def withTiers(df: DataFrame, d: Int)(
       check: VectorIndex[Long] => Unit): Unit =
     for (distributed <- Seq(false, true)) {
       val idx = VectorIndex.buildWithPayload[Long](df, "vec_id", "embedding", "metadata",
@@ -68,7 +69,7 @@ class VectorSearchSpec extends SparkSuite with PackedIndexCases {
   private def bits(hits: Seq[(Long, Float)]): Seq[(Long, Int)] =
     hits.map { case (id, s) => (id, java.lang.Float.floatToRawIntBits(s)) }
 
-  private def referenceBits(df: org.apache.spark.sql.DataFrame, q: Array[Float], k: Int) =
+  private def referenceBits(df: DataFrame, q: Array[Float], k: Int) =
     bits(VectorSearch.topK(df, "embedding", q, k, "vec_id").collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Float]("similarity"))).toSeq)
 
