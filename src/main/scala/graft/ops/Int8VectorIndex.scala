@@ -46,14 +46,15 @@ object Int8VectorIndex {
       extends Slab[K, (Array[Byte], Double)] {
     /** The int accumulator is exact: |Σ qaᵢ·qbᵢ| ≤ 127²·d < 2³¹ for every
       * supported d (build rejects d > 100000). */
-    private[ops] def scan(from: Int, until: Int, d: Int, q: (Array[Byte], Double),
+    private[ops] def scan(rows: Array[Int], n: Int, d: Int, q: (Array[Byte], Double),
         heap: TopKHeap[K], slab: Int): Unit = {
       val data = this.data
       val ids = this.ids
       val scales = this.scales
       val (qb, qs) = q
-      var r = from
-      while (r < until) {
+      var j = 0
+      while (j < n) {
+        val r = rows(j)
         val off = r * d
         var dot = 0
         var i = 0
@@ -61,7 +62,7 @@ object Int8VectorIndex {
         // same double product, same order, as quantizedTopK's
         // (qdot.cast(double) * qscale) * qs — bit-equal scores
         heap.insert(ids(r), dot.toDouble * scales(r) * qs, slab, r)
-        r += 1
+        j += 1
       }
     }
   }

@@ -15,10 +15,10 @@ import org.apache.spark.storage.StorageLevel
  * packed row-major slabs, distributed over Spark partitions. One engine,
  * two slab kinds: float32 ([[VectorIndex]]) and int8-quantized
  * ([[Int8VectorIndex]]). A kind supplies only its slab type, its row
- * scoring loop ([[Slab.scan]], with its gather form [[Slab.scanRows]]
- * for a filter's surviving rows), its per-row build decoder and its query
- * preparation; heap, scan pool, distributed pass, merge, persist and the
- * slab builder are written once here.
+ * scoring loop ([[Slab.scan]], over a list of row positions), its
+ * per-row build decoder and its query preparation; heap, scan pool,
+ * distributed pass, merge, persist and the slab builder are written once
+ * here.
  *
  * Scale design: blocks live distributed in executor memory
  * (MEMORY_AND_DISK); the prepared query travels in the task closure
@@ -149,18 +149,11 @@ abstract class PackedIndex[K, Q, B <: Slab[K, Q]] private[ops] (
 trait Slab[K, Q] extends Serializable {
   def ids: Array[K]
 
-  /** Offer rows [from, until) scored against the prepared query to the
-    * heap, each at its position (`slab`, row) — the kind's one
-    * monomorphic scoring loop. */
-  private[ops] def scan(from: Int, until: Int, d: Int, q: Q, heap: TopKHeap[K], slab: Int): Unit
-
-  /** [[scan]] over the first `n` row positions of `rows`, ascending:
-    * the gather form a filtered scan offers its surviving rows through.
-    * A kind without a gather loop scores them one by one. */
-  private[ops] def scanRows(rows: Array[Int], n: Int, d: Int, q: Q, heap: TopKHeap[K], slab: Int): Unit = {
-    var j = 0
-    while (j < n) { scan(rows(j), rows(j) + 1, d, q, heap, slab); j += 1 }
-  }
+  /** Offer the rows at the first `n` positions of `rows` (ascending),
+    * scored against the prepared query, to the heap, each at its
+    * position (`slab`, row) — the kind's one monomorphic scoring loop,
+    * for a filter's surviving rows and for a whole range alike. */
+  private[ops] def scan(rows: Array[Int], n: Int, d: Int, q: Q, heap: TopKHeap[K], slab: Int): Unit
 
   /** Bytes the slab keeps beside its vectors, for the driver-local
     * budget. */
@@ -231,21 +224,23 @@ object PackedIndex {
   private[graft] def fitsDriver(rows: Long, dim: Int, valueBytes: Int, payloadBytes: Long): Boolean =
     rows * dim * valueBytes + payloadBytes <= LocalScanMaxBytes
 
-  /** Offer rows [from, until) of `b` to the heap: all of them through
-    * the kind's contiguous loop, or under `keep` the rows it passes,
-    * selected first and then scored by the kind's gather loop. */
+  /** Offer rows [from, until) of `b` to the heap, under `keep` only the
+    * rows it passes: selected [[FirstChunkRows]] at a time into one row
+    * list, each list scored by the kind's [[Slab.scan]]. */
   private def offer[K, Q, B <: Slab[K, Q]](b: B, from: Int, until: Int, d: Int, q: Q,
-      heap: TopKHeap[K], slab: Int, keep: Option[(B, Int) => Boolean]): Unit = keep match {
-    case None => b.scan(from, until, d, q, heap, slab)
-    case Some(pass) =>
-      val rows = new Array[Int](until - from)
+      heap: TopKHeap[K], slab: Int, keep: Option[(B, Int) => Boolean]): Unit = {
+    val pass = keep.orNull
+    val rows = new Array[Int](math.min(until - from, FirstChunkRows))
+    var r = from
+    while (r < until) {
+      val end = math.min(r + rows.length, until)
       var n = 0
-      var r = from
-      while (r < until) {
-        if (pass(b, r)) { rows(n) = r; n += 1 }
+      while (r < end) {
+        if (pass == null || pass(b, r)) { rows(n) = r; n += 1 }
         r += 1
       }
-      b.scanRows(rows, n, d, q, heap, slab)
+      b.scan(rows, n, d, q, heap, slab)
+    }
   }
 
   /** Per-block slab cap (~64 MB). The r12 1M-row build showed

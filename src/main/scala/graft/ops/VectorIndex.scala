@@ -70,14 +70,7 @@ object VectorIndex {
       data: Array[Float],
       metadata: Array[Map[String, String]] = null,
       content: Array[String] = null) extends Slab[K, Array[Float]] {
-    private[ops] def scan(from: Int, until: Int, d: Int, q: Array[Float],
-        heap: TopKHeap[K], slab: Int): Unit = {
-      var r = from
-      while (r + 4 <= until) { four(r, r + 1, r + 2, r + 3, d, q, heap, slab); r += 4 }
-      while (r < until) { heap.insert(ids(r), dot(r, q), slab, r); r += 1 }
-    }
-
-    private[ops] override def scanRows(rows: Array[Int], n: Int, d: Int, q: Array[Float],
+    private[ops] def scan(rows: Array[Int], n: Int, d: Int, q: Array[Float],
         heap: TopKHeap[K], slab: Int): Unit = {
       var j = 0
       while (j + 4 <= n) {

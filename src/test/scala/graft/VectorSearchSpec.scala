@@ -95,27 +95,6 @@ class VectorSearchSpec extends SparkSuite with PackedIndexCases {
     }
   }
 
-  test("4-row scan: five equal vectors across a 4-row group boundary tie by id asc") {
-    // one block; the ties sit at rows 2-6 (groups 0-3 | 4-7 | tail 8),
-    // ids descending with the row
-    val v = Array(0.6f, 0.8f)
-    val ids = Seq(7L, 3L, 50L, 40L, 30L, 20L, 10L, 1L, 60L)
-    val df = withLogLevel(ids.zipWithIndex.map { case (id, row) =>
-      (id, if (row >= 2 && row <= 6) v else Array(0.1f * row, -0.2f), Map.empty[String, String], "")
-    }.toDF("vec_id", "embedding", "metadata", "content").coalesce(1))
-    val keep: Option[(VectorIndex.Block[Long], Int) => Boolean] = Some((b, r) => b.ids(r) != 40L)
-    withTiers(df, 2) { idx =>
-      assert(idx.blocks.map(_.ids.length).collect().toSeq === Seq(9))
-      for (k <- Seq(3, 5, 9)) withClue(s"k = $k: ") {
-        val got = bits(idx.topK(v, k).toSeq)
-        assert(got === referenceBits(df, v, k))
-        assert(got.map(_._1).take(5) === Seq(10L, 20L, 30L, 40L, 50L).take(k), "ties: id asc")
-        val filtered = bits(idx.topKRows(v, k, keep).toSeq.map(h => (h.id, h.similarity)))
-        assert(filtered === referenceBits(df.filter($"vec_id" =!= 40L), v, k))
-      }
-    }
-  }
-
   test("Block.dot is bit-equal to the score the 4-row scan offers, every row of a 4n+3 block") {
     // a negative filter compares dot with its threshold while the scan
     // ranks by its own score: they must never differ on a boundary score
