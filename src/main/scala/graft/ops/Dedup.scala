@@ -1,7 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
 import graft.functions.HashFunctions.{hamming64, minhash_signature, simhash64}
 import graft.functions.VectorFunctions.cosine_sim
@@ -42,13 +46,14 @@ object Dedup {
     * 10k caps the worst single-bucket cost at ~5e7 pairs. */
   val DefaultMaxBucketSize = 10000
 
-  /** [[cosineCountPairs]] degenerate-vocabulary bounds: at or under
-    * these, the prefix filter provably cannot prune (every term is a
-    * hub) and the operator evaluates the exact kernel over all ordered
-    * pairs in one broadcast nested-loop pass instead of materializing
-    * an all-pairs candidate set through the salted prefix join. 50k
-    * docs ⇒ ≤2.5e9 combos of ≤2·64-step merges — bounded map-side work;
-    * the broadcast side is ≤ 50k bags of ≤64 terms ≈ 50 MB. */
+  /** [[containmentPairs]] / [[cosineCountPairs]] degenerate-vocabulary
+    * bounds: at or under these, the prefix filter provably cannot prune
+    * (every term is a hub) and the operator evaluates the exact kernel
+    * over all pairs in one broadcast nested-loop pass ([[denseTier]])
+    * instead of materializing an all-pairs candidate set through the
+    * salted prefix join. 50k docs ⇒ ≤2.5e9 combos of ≤2·64-step merges —
+    * bounded map-side work; the driver builds the broadcast side, ≤ 50k
+    * bags (docs with a token) of ≤ 2·64 longs ≈ 50 MB. */
   val DenseAllPairsMaxVocab = 64L
   val DenseAllPairsMaxDocs = 50000L
 
@@ -74,6 +79,101 @@ object Dedup {
       if (s.isNullAt(1)) 0L else s.getLong(0) * 32L + s.getLong(1) * 16L
     if (bagBytes <= (256L << 20)) broadcast(bags) else bags
   }
+
+  /** Exact term dictionary of both prefix tiers: (tok, df, tid), with
+    * distinct LONG ids (a snapshot of monotonically_increasing_id —
+    * stable because checkpointed, and only intra-computation consistency
+    * matters). Everything downstream of the ranked window runs on 8-byte
+    * ids instead of UTF8 strings: cheaper shuffle keys and a long-compare
+    * merge in the verify kernel. NOT a hash: collisions would silently
+    * merge terms and break exactness. */
+  private def termDict(toks: DataFrame): DataFrame =
+    toks.groupBy("tok").agg(count(lit(1)).as("df"))
+      .withColumn("tid", monotonically_increasing_id())
+      .localCheckpoint(true)
+
+  /**
+   * Dense-tier decision and bag frame of both exact all-pairs operators,
+   * from the checkpointed `(doc, tok)` frame each builds first: one row
+   * per (input row, distinct term) for [[containmentPairs]], one
+   * `(doc, tok, tf)` row per term for [[cosineCountPairs]] (`weighted`).
+   * Returns the vocabulary size the prefix tier salts by, and the bags
+   * when there are at most `denseMaxVocab` terms and `denseMaxDocs` docs.
+   *
+   * One job over `toks` ([[probeTokens]]) sends per task its distinct
+   * tokens and per doc its term counts by local term id — never text, at
+   * most `cap` tokens, `denseMaxDocs` + 1 docs and `cap` counts a doc.
+   * `cap` covers 4× the parallelism, so [[saltFactor]] gets the exact
+   * vocabulary size wherever it salts. The driver numbers the terms in
+   * sorted-token order, sums a doc's counts across tasks (a set term
+   * counts once per input row having it, as the prefix tier's
+   * groupBy("doc") does) and packs one bag per doc: [tid, tf, …] with
+   * `n2` = Σ tf², or [tid, 1, …] with the term repeated per count and
+   * `n` entries, whose packed dot is |A∩B|. The bags return as a local
+   * frame that the nested-loop join scans on up to defaultParallelism
+   * tasks and broadcasts as it is: no shuffle, no checkpoint, at most
+   * `denseMaxDocs` bags of ≤ 2·|vocab| longs on the driver.
+   */
+  private def denseTier(
+      toks: DataFrame,
+      denseMaxVocab: Long,
+      denseMaxDocs: Long,
+      weighted: Boolean): (Long, Option[DataFrame]) = {
+    val sc = toks.sparkSession.sparkContext
+    val cap = math.min(Int.MaxValue - 1L,
+      math.max(denseMaxVocab, 4L * sc.defaultParallelism)).toInt
+    val parts = toks.select(col("doc"), col("tok"), if (weighted) col("tf") else lit(1L))
+      .rdd.mapPartitions(rows => Iterator(probeTokens(rows, cap, denseMaxDocs + 1))).collect()
+    val vocab = if (parts.exists(_._1 == null)) null else parts.flatMap(_._1).distinct.sorted
+    val size = if (vocab == null || vocab.length > cap) cap + 1L else math.max(1L, vocab.length)
+    if (size > denseMaxVocab || parts.exists(_._2 == null)) return (size, None)
+    val tid = vocab.zipWithIndex.toMap
+    val counts = new java.util.LinkedHashMap[Any, (Any, Array[Long])]
+    for ((local, docs) <- parts; (id, c) <- docs) {
+      val sum = counts.computeIfAbsent(groupKey(id), _ => (id, new Array[Long](vocab.length)))._2
+      for (i <- c.indices) sum(tid(local(i))) += c(i)
+    }
+    if (counts.size > denseMaxDocs) return (size, None)
+    val bags = counts.values.asScala.toSeq.map { case (id, c) =>
+      val bag = c.indices.flatMap(i =>
+        if (!weighted) Seq.fill(c(i).toInt)(Seq(i.toLong, 1L)).flatten
+        else if (c(i) > 0) Seq(i.toLong, c(i)) else Nil)
+      Row(id, bag.toArray, if (weighted) c.map(x => x * x).sum else c.sum)
+    }
+    val schema = StructType(Seq(toks.schema("doc"),
+      StructField("bag", ArrayType(LongType, containsNull = false), nullable = false),
+      StructField(if (weighted) "n2" else "n", LongType, nullable = weighted)))
+    (size, Some(toks.sparkSession.createDataFrame(bags.asJava, schema)))
+  }
+
+  /** Executor side of [[denseTier]], over (doc, tok, count) rows: the
+    * task's distinct tokens (null past `cap`, where the task stops
+    * reading), and each doc's counts indexed like them (null past
+    * `maxDocs` docs). */
+  private def probeTokens(
+      rows: Iterator[Row],
+      cap: Int,
+      maxDocs: Long): (Array[String], Array[(Any, Array[Long])]) = {
+    val vocab = mutable.LinkedHashMap.empty[String, Int]
+    var docs = mutable.HashMap.empty[Any, (Any, mutable.ArrayBuffer[Long])]
+    while (rows.hasNext && vocab.size <= cap) {
+      val r = rows.next()
+      val i = vocab.getOrElseUpdate(r.getString(1), vocab.size)
+      val key = groupKey(r.get(0))
+      if (docs != null && !docs.contains(key) && docs.size >= maxDocs) docs = null
+      if (docs != null) {
+        val c = docs.getOrElseUpdate(key, (r.get(0), mutable.ArrayBuffer.empty[Long]))._2
+        while (c.length <= i) c += 0L
+        c(i) += r.getLong(2)
+      }
+    }
+    if (vocab.size > cap) (null, null)
+    else (vocab.keys.toArray, if (docs == null) null else docs.values.map(d => (d._1, d._2.toArray)).toArray)
+  }
+
+  /** A doc id's grouping key: a binary id by content, as Spark groups it. */
+  private def groupKey(id: Any): Any =
+    id match { case b: Array[Byte] => java.nio.ByteBuffer.wrap(b); case k => k }
 
   /**
    * Bucket-skew guard for banded LSH self-joins. `banded` must carry
@@ -667,8 +767,10 @@ object Dedup {
    * provably cannot prune) skip candidate materialization entirely and
    * stream packed set-bags through a broadcast nested-loop join whose
    * condition is the exact integer containment test — the
-   * [[cosineCountPairs]] dense-tier guard, directed (all ordered
-   * pairs).
+   * [[cosineCountPairs]] dense tier, directed (all ordered pairs). Both
+   * operators build that tier's bags with one helper, [[denseTier]]: no
+   * shuffle, ≤ [[DenseAllPairsMaxDocs]] bags of ≤ 2·64 longs held on the
+   * driver (≈ 50 MB at the bounds).
    */
   def containmentPairs(
       df: DataFrame,
@@ -693,39 +795,20 @@ object Dedup {
     require(thresholdP > 0 && thresholdQ > 0 && thresholdP <= thresholdQ,
       "threshold p/q must be in (0, 1]")
     val spark = df.sparkSession
-    // distinct (doc, tok) feeds dict + ranked — materialize once
+    // distinct (doc, tok) feeds the vocabulary probe, dict and ranked —
+    // materialize once
     val t = df.select(col(idCol).as("doc"),
         explode(array_distinct(tokens(col(textCol)))).as("tok"))
       .localCheckpoint(true)
-    // exact term dictionary: distinct LONG ids (monotonic snapshot, not
-    // a hash — collisions would silently merge terms), the
-    // cosineCountPairs convention
-    val dict = t.groupBy("tok").agg(count(lit(1)).as("df"))
-      .withColumn("tid", monotonically_increasing_id())
-      .localCheckpoint(true)
-    val vocab = math.max(1L, dict.count())
-    // Degenerate-vocabulary fast path, the cosineCountPairs guard: on a
-    // handful-of-terms corpus the prefix filter provably cannot prune
-    // (every term is a hub), candidates ≈ ALL ordered pairs, and
-    // materializing them through the index join + distinct + bag probes
-    // is pure overhead (measured 16.4 s at sf0.1's 31-word corpus).
-    // Stream the packed set-bags through a broadcast nested-loop join
-    // whose condition IS the exact integer containment test — zero
-    // shuffles, zero candidate materialization (same corpus: ~2 s).
-    // Containment is DIRECTED, so all ordered pairs evaluate (a ≠ b),
-    // not the id_a < id_b half the symmetric kernels use.
-    if (vocab <= denseMaxVocab && df.count() <= denseMaxDocs) {
-      val bags = t.join(dict.select(col("tok"), col("tid")), Seq("tok"))
-        .groupBy("doc").agg(
-          sort_array(collect_list(col("tid"))).as("__st"),
-          count(lit(1)).as("n"))
-        .withColumn("bag",
-          flatten(transform(col("__st"), x => array(x, lit(1L)))))
-        .select(col("doc"), col("bag"), col("n"))
-        // explicit partition count: AQE would coalesce the tiny frame to
-        // one task and serialize the whole nested-loop pass
-        .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(true)
+    // Degenerate-vocabulary fast path (cosineCountPairs' guard): every
+    // term is a hub, so candidates ≈ ALL ordered pairs and materializing
+    // them is pure overhead (16.4 s at sf0.1's 31-word corpus, ~2 s
+    // dense). The broadcast nested-loop condition IS the exact integer
+    // containment test; containment is DIRECTED, so all ordered pairs
+    // evaluate (a ≠ b), not the id_a < id_b half.
+    val (vocab, dense) = denseTier(t, denseMaxVocab, denseMaxDocs, weighted = false)
+    if (dense.nonEmpty) {
+      val bags = dense.get
       return bags.alias("a").join(broadcast(bags.alias("b")),
           col("a.doc") =!= col("b.doc") &&
           graft.functions.BagCos.packed_bag_dot(col("a.bag"), col("b.bag"))
@@ -737,6 +820,7 @@ object Dedup {
         .select(col("id_a"), col("id_b"),
           expr("(inter * 1000000) div na").as("containment_e6"))
     }
+    val dict = termDict(t)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc")).orderBy(col("df"), col("tok"))
     // n (distinct-set size) via an unbounded frame over the same window
@@ -836,7 +920,10 @@ object Dedup {
    * (vocab ≤ [[DenseAllPairsMaxVocab]], docs ≤ [[DenseAllPairsMaxDocs]])
    * and switches to a broadcast nested-loop pass that evaluates the
    * kernel on pairs directly instead of materializing them as join
-   * output. The sketch variants (minhash/simhash/embedding LSH) remain
+   * output; its bags come from [[denseTier]], shared with
+   * [[containmentPairs]], which builds them without a shuffle and holds
+   * ≤ [[DenseAllPairsMaxDocs]] bags of ≤ 2·64 longs (≈ 50 MB) on the
+   * driver. The sketch variants (minhash/simhash/embedding LSH) remain
    * the 100 TB recall path and this operator is their exact oracle.
    *
    * All threshold tests are exact integer arithmetic: the threshold is
@@ -871,62 +958,25 @@ object Dedup {
     val p = math.round(threshold * 1e6)
     val q = 1000000L
     val dec = "decimal(38,0)"
-    // tf feeds four downstream frames (dfreq, norms, the ranked window,
-    // bags) — materialize the explode+agg once, lineage-free
+    // tf feeds the vocabulary probe and four downstream frames (dfreq,
+    // norms, the ranked window, bags) — materialize the explode+agg
+    // once, lineage-free
     val tf = df
       .select(col(idCol).as("doc"), explode(tokens(col(textCol))).as("tok"))
       .groupBy("doc", "tok").agg(count(lit(1)).as("tf"))
       .localCheckpoint(true)
-    // exact term dictionary: distinct tokens get distinct LONG ids (a
-    // snapshot of monotonically_increasing_id — stable because
-    // checkpointed, and only intra-computation consistency matters).
-    // Everything downstream of the ranked window — prefixes, the
-    // candidate self-join, bags, the verify merge — runs on 8-byte ids
-    // instead of UTF8 strings: cheaper shuffle keys and a long-compare
-    // merge in the verify kernel. NOT a hash: collisions would silently
-    // merge terms and break exactness.
-    val dict = tf.groupBy("tok").agg(count(lit(1)).as("df"))
-      .withColumn("tid", monotonically_increasing_id())
-      .localCheckpoint(true)
-    // Degenerate-vocabulary fast path. The prefix filter's pruning power
-    // comes from rare terms: P(A) must carry ≥ (1−t) of A's squared mass
-    // in globally-RARE terms for the candidate join to stay sparse. When
-    // the whole vocabulary is a handful of terms, every term is a hub,
-    // prefixes collide by construction, and the candidate set provably
-    // degenerates to ≈ all pairs — at which point the salted prefix
-    // self-join + guard + bag probes is a strictly MORE expensive way to
-    // enumerate all pairs than evaluating the kernel on them directly
-    // (measured at sf0.1's 31-word corpus: 8.9 s of candidate-join
-    // machinery ahead of a 0.5 s verify). So: when vocab ≤ 64 and the
-    // corpus is small enough that |docs|² kernel evaluations are feasible
-    // (≤ 50k docs ⇒ ≤ 2.5e9 ordered combos of ~2·|vocab|-step merges),
-    // stream the packed bags through a broadcast nested-loop join whose
-    // condition IS the exact threshold kernel: zero shuffles, zero
-    // candidate materialization, each unordered pair evaluated exactly
-    // once (id_a < id_b short-circuits ahead of the merge). Beyond those
-    // bounds the prefix path below remains the tier of record — on any
-    // REALISTIC vocabulary it is asymptotically superior (the 20k-word
-    // smoke in SURVEY §8), which is why the dense path is gated on the
-    // vocabulary actually being degenerate, never on row count alone.
-    val vocab = math.max(1L, dict.count())
-    if (vocab <= denseMaxVocab && df.count() <= denseMaxDocs) {
-      // no df-ordered window needed: bags only require SOME canonical
-      // per-doc term order for the merge kernel, and tid-ascending is
-      // free — the one window sort the prefix path pays is skipped
-      val bags = tf.join(dict.select(col("tok"), col("tid")), Seq("tok"))
-        .groupBy("doc").agg(
-          sort_array(collect_list(struct(col("tid"), col("tf")))).as("__sb"),
-          sum(col("tf") * col("tf")).as("n2"))
-        .withColumn("bag",
-          flatten(transform(col("__sb"), s => array(s("tid"), s("tf")))))
-        .select(col("doc"), col("bag"), col("n2"))
-        // explicit partition count: AQE coalesces the tiny groupBy
-        // exchange to ONE partition, which would serialize the 2.5e9
-        // combo evaluations onto a single task — the stream side must
-        // carry the parallelism because the nested-loop pass is the
-        // whole cost (measured: 3.9 s single-task vs 0.1 s spread)
-        .repartition(df.sparkSession.sparkContext.defaultParallelism)
-        .localCheckpoint(true)
+    // Degenerate-vocabulary fast path. Pruning comes from rare terms;
+    // when every term is a hub, prefixes collide by construction and the
+    // candidate set degenerates to ≈ all pairs (sf0.1's 31-word corpus:
+    // 8.9 s of candidate-join machinery ahead of a 0.5 s verify). Within
+    // the dense bounds the broadcast nested-loop condition IS the exact
+    // threshold kernel, each unordered pair evaluated once (id_a < id_b
+    // short-circuits ahead of the merge). On any REALISTIC vocabulary the
+    // prefix path is asymptotically superior (SURVEY §8's 20k-word
+    // smoke): the gate is the vocabulary, never row count alone.
+    val (vocab, dense) = denseTier(tf, denseMaxVocab, denseMaxDocs, weighted = true)
+    if (dense.nonEmpty) {
+      val bags = dense.get
       return bags.alias("a")
         .join(broadcast(bags.alias("b")),
           col("a.doc") < col("b.doc")
@@ -937,6 +987,7 @@ object Dedup {
             .as("dot"),
           col("a.n2").as("na2"), col("b.n2").as("nb2"))
     }
+    val dict = termDict(tf)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc")).orderBy(col("df"), col("tok"))
     // cumBefore = squared mass of terms strictly rarer than this rank;

@@ -540,40 +540,6 @@ class CollectionSpec extends SparkSuite {
     assert(jobs === 0, s"indexed $name query ran $jobs Spark job(s)")
   }
 
-  /** The number of Spark jobs `body` starts on this thread. */
-  private def sparkJobs(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = "collection-job-count"
-    val sentinel = "collection-job-count-sentinel"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val p = js.properties
-        if (p != null && p.getProperty("spark.jobGroup.id") == group) {
-          if (p.getProperty("spark.job.description") == sentinel) sentinelSeen.countDown()
-          else jobs.incrementAndGet()
-        }
-      }
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "calls under test")
-    try {
-      body
-      // one bus delivers job starts in order: once the sentinel's start
-      // is seen, every job the body started has been counted
-      sc.setJobDescription(sentinel)
-      sc.parallelize(Seq(1), 1).count()
-      assert(sentinelSeen.await(30, java.util.concurrent.TimeUnit.SECONDS), "sentinel job not seen")
-      jobs.get()
-    } finally {
-      sc.clearJobGroup()
-      sc.setJobDescription(null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("an indexed, unfiltered query on a driver-local collection runs no Spark job") {
     assertNoSparkJob("unfiltered", want = 10)(_.queryEmbedding(tieVec, 10))
   }

@@ -669,6 +669,128 @@ class DedupSpec extends SparkSuite {
     }
   }
 
+  test("all-pairs tiers: dense ≡ prefix ≡ brute force on repeated, null and string ids, null and empty text, empty input, the 64/65-term and doc bounds") {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val rnd = new scala.util.Random(61)
+    def words(v: Int) = (0 until v).map(i => s"w$i")
+    def text(vocab: Seq[String]) =
+      Seq.fill(2 + rnd.nextInt(9))(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    def frame(idType: org.apache.spark.sql.types.DataType, rows: Seq[(Any, String)]) =
+      spark.createDataFrame(
+        java.util.Arrays.asList(rows.map { case (i, s) => org.apache.spark.sql.Row(i, s) }: _*),
+        StructType(Seq(StructField("doc_id", idType), StructField("text", StringType))))
+    // string ids: a repeated id (its bags merge, null text included), a
+    // null id (never pairs), null text (no bag), "" and a double space
+    // (the empty token), upper case (lowercased)
+    val small = words(6)
+    val mixed = (0 until 30).map(i => (f"d$i%02d": Any, text(small))) ++ Seq(
+      ("d03", text(small)), ("d07", "W1 w2 w2"), ("d03", null),
+      ("d40", null), ("d41", ""), ("d42", ""), ("d43", "w1  w2"),
+      (null, "w1 w2 w3"), ("d44", small.mkString(" ")))
+    // 64 and 65 distinct terms (a document holds every term, so each
+    // other document is contained in it; two planted near-copies pass
+    // the cosine threshold), long ids, 43 rows
+    def wide(v: Int) = (0 until 40).map(i => (i.toLong: Any, text(words(v)))) ++ Seq(
+      (40L, words(v).mkString(" ")), (41L, "w0 w1"), (42L, "w0 w1 w2"))
+    val raw = Map("mixed" -> mixed, "empty" -> Nil, "vocab 64" -> wide(64), "vocab 65" -> wide(65))
+    val corpora = Seq("mixed", "empty", "vocab 64", "vocab 65").map { name =>
+      name -> frame(if (name.startsWith("vocab")) LongType else StringType, raw(name))
+    }
+
+    // brute force over each id's merged bag: containment counts a term
+    // once per row holding it (per-row distinct sets, merged by id);
+    // cosine sums the term frequencies of all the id's rows
+    def bags(rows: Seq[(Any, String)], distinct: Boolean): Map[Any, Map[String, Long]] =
+      rows.filter(r => r._1 != null && r._2 != null).groupBy(_._1).map { case (id, rs) =>
+        id -> rs.flatMap { r =>
+          val t = r._2.toLowerCase.split(" ", -1).toSeq
+          if (distinct) t.distinct else t
+        }.groupBy(identity).map { case (w, g) => w -> g.size.toLong }
+      }
+    def lt(a: Any, b: Any) = (a, b) match {
+      case (x: Long, y: Long) => x < y
+      case (x: String, y: String) => x < y
+      case _ => fail(s"unexpected ids $a, $b")
+    }
+    def containment(rows: Seq[(Any, String)]) = {
+      val b = bags(rows, distinct = true)
+      for {
+        (a, ma) <- b.toSeq; (c, mc) <- b.toSeq if a != c
+        n = ma.values.sum
+        inter = ma.map { case (w, k) => math.min(k, mc.getOrElse(w, 0L)) }.sum
+        if inter * 4 >= 3 * n
+      } yield Seq[Any](a, c, inter * 1000000L / n)
+    }
+    def cosine(rows: Seq[(Any, String)], t: Double) = {
+      val b = bags(rows, distinct = false)
+      val p = BigInt(math.round(t * 1e6)); val q = BigInt(1000000)
+      def n2(m: Map[String, Long]) = m.values.map(v => v * v).sum
+      for {
+        (a, ma) <- b.toSeq; (c, mc) <- b.toSeq if lt(a, c)
+        dot = ma.map { case (w, k) => k * mc.getOrElse(w, 0L) }.sum
+        if q * q * dot * dot >= p * p * n2(ma) * n2(mc)
+      } yield Seq[Any](a, c, dot, n2(ma), n2(mc))
+    }
+
+    def rowsOf(out: org.apache.spark.sql.DataFrame) =
+      out.collect().map(_.toSeq).toSeq.groupBy(identity).map { case (r, g) => r -> g.size }
+    def multiset(rows: Seq[Seq[Any]]) = rows.groupBy(identity).map { case (r, g) => r -> g.size }
+    def dense(out: org.apache.spark.sql.DataFrame) =
+      out.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin")
+    for ((name, d) <- corpora) {
+      val ops: Seq[(String, (Long, Long) => org.apache.spark.sql.DataFrame, Seq[Seq[Any]])] = Seq(
+        ("containment", (v, n) => Dedup.containmentPairs(d, "text", "doc_id", 3, 4, v, n),
+          containment(raw(name))),
+        ("cosine", (v, n) => Dedup.cosineCountPairs(d, "text", "doc_id", 0.5, v, n),
+          cosine(raw(name), 0.5)))
+      for ((op, run, brute) <- ops) {
+        val want = multiset(brute)
+        val prefix = withLogLevel(run(0L, 0L))
+        val forced = withLogLevel(run(100000L, 100000L))
+        assert(!dense(prefix), s"$name $op: the prefix tier was not taken")
+        if (name != "empty") assert(dense(forced), s"$name $op: the dense tier was not taken")
+        assert(forced.schema.map(f => f.name -> f.dataType) ===
+          prefix.schema.map(f => f.name -> f.dataType), s"$name $op: schemas differ")
+        assert(rowsOf(prefix) === want, s"$name $op: prefix tier ≠ brute force")
+        assert(rowsOf(forced) === want, s"$name $op: dense tier ≠ brute force")
+        if (name != "empty") assert(want.nonEmpty, s"$name $op: degenerate corpus")
+        if (name.startsWith("vocab")) {
+          // the default bounds pick the tier by vocabulary size; the doc
+          // bound counts docs with a token (43 here)
+          val byVocab = withLogLevel(run(Dedup.DenseAllPairsMaxVocab, Dedup.DenseAllPairsMaxDocs))
+          assert(dense(byVocab) === (name == "vocab 64"), s"$name $op: default bounds")
+          assert(rowsOf(byVocab) === want, s"$name $op: default bounds ≠ brute force")
+          for (maxDocs <- Seq(42L, 43L, 44L)) {
+            val out = withLogLevel(run(100000L, maxDocs))
+            assert(dense(out) === (maxDocs >= 43L), s"$name $op: doc bound $maxDocs")
+            assert(rowsOf(out) === want, s"$name $op: doc bound $maxDocs ≠ brute force")
+          }
+        }
+      }
+    }
+  }
+
+  test("all-pairs dense tier: a warm call of either operator runs at most 8 Spark jobs") {
+    // the benchmark's shape: a 30-word corpus in one parquet file, the
+    // result written to a noop sink
+    val rnd = new scala.util.Random(67)
+    val vocab = (0 until 30).map(i => s"w$i")
+    val path = java.nio.file.Files.createTempDirectory("dedup-jobs").resolve("docs.parquet").toString
+    withLogLevel((0 until 400).map { i =>
+      (i.toLong, Seq.fill(10 + rnd.nextInt(90))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+    }.toDF("doc_id", "text").coalesce(1).write.parquet(path))
+    val calls = Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      "containmentPairs" -> (d => Dedup.containmentPairs(d, "text", "doc_id", 19, 20)),
+      "cosineCountPairs" -> (d => Dedup.cosineCountPairs(d, "text", "doc_id", 0.9)))
+    for ((name, call) <- calls) {
+      def go(): Unit =
+        call(spark.read.parquet(path)).write.format("noop").mode("overwrite").save()
+      withLogLevel(go()) // warm
+      val jobs = sparkJobs(go())
+      assert(jobs <= 8, s"$name dense tier ran $jobs Spark jobs")
+    }
+  }
+
   test("semanticDedup is salt-invariant (each pair meets exactly once)") {
     val rnd = new scala.util.Random(23)
     def unit(): Array[Float] =

@@ -419,6 +419,9 @@ class PlanSpec extends SparkSuite {
       s"intersection must be the sorted-merge kernel:\n$p")
     assert(!p.contains("SortMergeJoin"),
       s"dense tier must not materialize candidates:\n$p")
+    val exchanges = p.linesIterator.filter(_.contains("Exchange")).toSeq
+    assert(exchanges.forall(!_.contains("text#")),
+      s"bag/id shuffles only, never text:\n$p")
   }
 
   test("containment, prefix tier: broadcast bag probes + merge kernel, no token re-explode") {
