@@ -4,8 +4,12 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.HashFunctions.{hamming64, minhash_signature, simhash64}
 import graft.functions.VectorFunctions.cosine_sim
@@ -49,11 +53,11 @@ object Dedup {
   /** [[containmentPairs]] / [[cosineCountPairs]] degenerate-vocabulary
     * bounds: at or under these, the prefix filter provably cannot prune
     * (every term is a hub) and the operator evaluates the exact kernel
-    * over all pairs in one broadcast nested-loop pass ([[denseTier]])
+    * over all pairs in one broadcast nested-loop pass ([[denseBags]])
     * instead of materializing an all-pairs candidate set through the
     * salted prefix join. 50k docs ⇒ ≤2.5e9 combos of ≤2·64-step merges —
     * bounded map-side work; the driver builds the broadcast side, ≤ 50k
-    * bags (docs with a token) of ≤ 2·64 longs ≈ 50 MB. */
+    * bags of ≤ 2·64 longs ≈ 50 MB. */
   val DenseAllPairsMaxVocab = 64L
   val DenseAllPairsMaxDocs = 50000L
 
@@ -80,100 +84,81 @@ object Dedup {
     if (bagBytes <= (256L << 20)) broadcast(bags) else bags
   }
 
-  /** Exact term dictionary of both prefix tiers: (tok, df, tid), with
-    * distinct LONG ids (a snapshot of monotonically_increasing_id —
-    * stable because checkpointed, and only intra-computation consistency
-    * matters). Everything downstream of the ranked window runs on 8-byte
-    * ids instead of UTF8 strings: cheaper shuffle keys and a long-compare
-    * merge in the verify kernel. NOT a hash: collisions would silently
-    * merge terms and break exactness. */
+  /** Exact term dictionary of both prefix tiers: (tok, df, tid), tid a
+    * checkpointed snapshot of monotonically_increasing_id — distinct
+    * 8-byte ids for everything downstream, NOT a hash (collisions would
+    * silently merge terms and break exactness). */
   private def termDict(toks: DataFrame): DataFrame =
     toks.groupBy("tok").agg(count(lit(1)).as("df"))
       .withColumn("tid", monotonically_increasing_id())
       .localCheckpoint(true)
 
   /**
-   * Dense-tier decision and bag frame of both exact all-pairs operators,
-   * from the checkpointed `(doc, tok)` frame each builds first: one row
-   * per (input row, distinct term) for [[containmentPairs]], one
-   * `(doc, tok, tf)` row per term for [[cosineCountPairs]] (`weighted`).
-   * Returns the vocabulary size the prefix tier salts by, and the bags
-   * when there are at most `denseMaxVocab` terms and `denseMaxDocs` docs.
-   *
-   * One job over `toks` ([[probeTokens]]) sends per task its distinct
-   * tokens and per doc its term counts by local term id — never text, at
-   * most `cap` tokens, `denseMaxDocs` + 1 docs and `cap` counts a doc.
-   * `cap` covers 4× the parallelism, so [[saltFactor]] gets the exact
-   * vocabulary size wherever it salts. The driver numbers the terms in
-   * sorted-token order, sums a doc's counts across tasks (a set term
-   * counts once per input row having it, as the prefix tier's
-   * groupBy("doc") does) and packs one bag per doc: [tid, tf, …] with
-   * `n2` = Σ tf², or [tid, 1, …] with the term repeated per count and
-   * `n` entries, whose packed dot is |A∩B|. The bags return as a local
-   * frame that the nested-loop join scans on up to defaultParallelism
-   * tasks and broadcasts as it is: no shuffle, no checkpoint, at most
-   * `denseMaxDocs` bags of ≤ 2·|vocab| longs on the driver.
+   * Dense tier of both exact all-pairs operators: the packed bags of
+   * `toks` — `(doc, tok)` per input row and distinct term for
+   * [[containmentPairs]], per token occurrence for [[cosineCountPairs]]
+   * (`weighted`); lazily checkpointed, so job 1 materializes it for either
+   * tier — or None past `denseMaxVocab` terms or `denseMaxDocs` docs, a
+   * doc counted once per task holding it (never more than the input's
+   * rows). Job 1 sends per task ≤ `denseMaxVocab` + 1 distinct tokens and
+   * its doc count; only within both bounds does job 2 send per doc its
+   * term counts (term ids in sorted-token order): ≤ `denseMaxDocs` docs of
+   * `denseMaxVocab` longs in all, never text. Docs are keyed as Spark's
+   * aggregation keys them, so a repeated id's counts sum across tasks as
+   * groupBy("doc") sums them. Bags: [tid, 1, …] once per count with `n`
+   * (packed dot = |A∩B|), or [tid, tf, …] with `n2` = Σ tf², as a local
+   * frame the nested-loop join scans on up to defaultParallelism tasks and
+   * broadcasts as it is.
    */
-  private def denseTier(
+  private def denseBags(
       toks: DataFrame,
       denseMaxVocab: Long,
       denseMaxDocs: Long,
-      weighted: Boolean): (Long, Option[DataFrame]) = {
-    val sc = toks.sparkSession.sparkContext
-    val cap = math.min(Int.MaxValue - 1L,
-      math.max(denseMaxVocab, 4L * sc.defaultParallelism)).toInt
-    val parts = toks.select(col("doc"), col("tok"), if (weighted) col("tf") else lit(1L))
-      .rdd.mapPartitions(rows => Iterator(probeTokens(rows, cap, denseMaxDocs + 1))).collect()
-    val vocab = if (parts.exists(_._1 == null)) null else parts.flatMap(_._1).distinct.sorted
-    val size = if (vocab == null || vocab.length > cap) cap + 1L else math.max(1L, vocab.length)
-    if (size > denseMaxVocab || parts.exists(_._2 == null)) return (size, None)
-    val tid = vocab.zipWithIndex.toMap
-    val counts = new java.util.LinkedHashMap[Any, (Any, Array[Long])]
-    for ((local, docs) <- parts; (id, c) <- docs) {
-      val sum = counts.computeIfAbsent(groupKey(id), _ => (id, new Array[Long](vocab.length)))._2
-      for (i <- c.indices) sum(tid(local(i))) += c(i)
-    }
-    if (counts.size > denseMaxDocs) return (size, None)
-    val bags = counts.values.asScala.toSeq.map { case (id, c) =>
-      val bag = c.indices.flatMap(i =>
-        if (!weighted) Seq.fill(c(i).toInt)(Seq(i.toLong, 1L)).flatten
-        else if (c(i) > 0) Seq(i.toLong, c(i)) else Nil)
-      Row(id, bag.toArray, if (weighted) c.map(x => x * x).sum else c.sum)
-    }
-    val schema = StructType(Seq(toks.schema("doc"),
-      StructField("bag", ArrayType(LongType, containsNull = false), nullable = false),
-      StructField(if (weighted) "n2" else "n", LongType, nullable = weighted)))
-    (size, Some(toks.sparkSession.createDataFrame(bags.asJava, schema)))
-  }
-
-  /** Executor side of [[denseTier]], over (doc, tok, count) rows: the
-    * task's distinct tokens (null past `cap`, where the task stops
-    * reading), and each doc's counts indexed like them (null past
-    * `maxDocs` docs). */
-  private def probeTokens(
-      rows: Iterator[Row],
-      cap: Int,
-      maxDocs: Long): (Array[String], Array[(Any, Array[Long])]) = {
-    val vocab = mutable.LinkedHashMap.empty[String, Int]
-    var docs = mutable.HashMap.empty[Any, (Any, mutable.ArrayBuffer[Long])]
-    while (rows.hasNext && vocab.size <= cap) {
-      val r = rows.next()
-      val i = vocab.getOrElseUpdate(r.getString(1), vocab.size)
-      val key = groupKey(r.get(0))
-      if (docs != null && !docs.contains(key) && docs.size >= maxDocs) docs = null
-      if (docs != null) {
-        val c = docs.getOrElseUpdate(key, (r.get(0), mutable.ArrayBuffer.empty[Long]))._2
-        while (c.length <= i) c += 0L
-        c(i) += r.getLong(2)
+      weighted: Boolean): Option[DataFrame] = {
+    // an empty vocabulary counts as one term
+    if (denseMaxVocab < 1) return None
+    val cap = math.min(denseMaxVocab, Int.MaxValue - 1L).toInt
+    val doc = toks.schema("doc")
+    // the id normalized as a grouping key (-0.0, NaN), compared by bytes
+    def docKey() = UnsafeProjection.create(Seq(
+      ColumnBridge.groupingKey(BoundReference(0, doc.dataType, doc.nullable))))
+    val rows = toks.select(col("doc"), col("tok")).queryExecution.toRdd
+    val probe = rows.mapPartitions { it =>
+      val key = docKey()
+      val terms = mutable.HashSet.empty[UTF8String]
+      val docs = mutable.HashSet.empty[UnsafeRow]
+      while (it.hasNext && terms.size <= cap) {
+        val r = it.next()
+        docs += key(r).copy()
+        terms += r.getUTF8String(1).clone()
       }
+      Iterator((terms.map(_.toString).toArray, docs.size.toLong))
+    }.collect()
+    val vocab = probe.flatMap(_._1).distinct.sorted
+    if (vocab.length > cap || probe.map(_._2).sum > denseMaxDocs) return None
+    val parts = rows.mapPartitions { it =>
+      val key = docKey()
+      val tid = vocab.map(UTF8String.fromString).zipWithIndex.toMap
+      val docs = mutable.HashMap.empty[UnsafeRow, Array[Long]]
+      for (r <- it) docs.getOrElseUpdate(key(r).copy(), new Array[Long](vocab.length))(
+        tid(r.getUTF8String(1))) += 1
+      docs.iterator
+    }.collect()
+    val counts = mutable.LinkedHashMap.empty[UnsafeRow, Array[Long]]
+    for ((k, c) <- parts; i <- c.indices)
+      counts.getOrElseUpdate(k, new Array[Long](c.length))(i) += c(i)
+    val toId = CatalystTypeConverters.createToScalaConverter(doc.dataType)
+    val bags = counts.toSeq.map { case (k, c) =>
+      val bag = c.indices.flatMap(i =>
+        if (weighted) (if (c(i) > 0) Seq(i.toLong, c(i)) else Nil)
+        else Seq.fill(c(i).toInt)(Seq(i.toLong, 1L)).flatten)
+      Row(toId(k.get(0, doc.dataType)), bag.toArray,
+        if (weighted) c.map(x => x * x).sum else c.sum)
     }
-    if (vocab.size > cap) (null, null)
-    else (vocab.keys.toArray, if (docs == null) null else docs.values.map(d => (d._1, d._2.toArray)).toArray)
+    Some(toks.sparkSession.createDataFrame(bags.asJava, StructType(Seq(doc,
+      StructField("bag", ArrayType(LongType, containsNull = false), nullable = false),
+      StructField(if (weighted) "n2" else "n", LongType, nullable = weighted)))))
   }
-
-  /** A doc id's grouping key: a binary id by content, as Spark groups it. */
-  private def groupKey(id: Any): Any =
-    id match { case b: Array[Byte] => java.nio.ByteBuffer.wrap(b); case k => k }
 
   /**
    * Bucket-skew guard for banded LSH self-joins. `banded` must carry
@@ -767,10 +752,8 @@ object Dedup {
    * provably cannot prune) skip candidate materialization entirely and
    * stream packed set-bags through a broadcast nested-loop join whose
    * condition is the exact integer containment test — the
-   * [[cosineCountPairs]] dense tier, directed (all ordered pairs). Both
-   * operators build that tier's bags with one helper, [[denseTier]]: no
-   * shuffle, ≤ [[DenseAllPairsMaxDocs]] bags of ≤ 2·64 longs held on the
-   * driver (≈ 50 MB at the bounds).
+   * [[cosineCountPairs]] dense tier ([[denseBags]]), directed (all
+   * ordered pairs).
    */
   def containmentPairs(
       df: DataFrame,
@@ -795,18 +778,18 @@ object Dedup {
     require(thresholdP > 0 && thresholdQ > 0 && thresholdP <= thresholdQ,
       "threshold p/q must be in (0, 1]")
     val spark = df.sparkSession
-    // distinct (doc, tok) feeds the vocabulary probe, dict and ranked —
-    // materialize once
+    // distinct (doc, tok) per input row feeds the dense tier, dict and
+    // ranked — checkpointed once, by the first job over it
     val t = df.select(col(idCol).as("doc"),
         explode(array_distinct(tokens(col(textCol)))).as("tok"))
-      .localCheckpoint(true)
+      .localCheckpoint(false)
     // Degenerate-vocabulary fast path (cosineCountPairs' guard): every
     // term is a hub, so candidates ≈ ALL ordered pairs and materializing
     // them is pure overhead (16.4 s at sf0.1's 31-word corpus, ~2 s
     // dense). The broadcast nested-loop condition IS the exact integer
     // containment test; containment is DIRECTED, so all ordered pairs
     // evaluate (a ≠ b), not the id_a < id_b half.
-    val (vocab, dense) = denseTier(t, denseMaxVocab, denseMaxDocs, weighted = false)
+    val dense = denseBags(t, denseMaxVocab, denseMaxDocs, weighted = false)
     if (dense.nonEmpty) {
       val bags = dense.get
       return bags.alias("a").join(broadcast(bags.alias("b")),
@@ -821,6 +804,7 @@ object Dedup {
           expr("(inter * 1000000) div na").as("containment_e6"))
     }
     val dict = termDict(t)
+    val vocab = math.max(1L, dict.count())
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc")).orderBy(col("df"), col("tok"))
     // n (distinct-set size) via an unbounded frame over the same window
@@ -920,10 +904,9 @@ object Dedup {
    * (vocab ≤ [[DenseAllPairsMaxVocab]], docs ≤ [[DenseAllPairsMaxDocs]])
    * and switches to a broadcast nested-loop pass that evaluates the
    * kernel on pairs directly instead of materializing them as join
-   * output; its bags come from [[denseTier]], shared with
-   * [[containmentPairs]], which builds them without a shuffle and holds
-   * ≤ [[DenseAllPairsMaxDocs]] bags of ≤ 2·64 longs (≈ 50 MB) on the
-   * driver. The sketch variants (minhash/simhash/embedding LSH) remain
+   * output; [[denseBags]], shared with [[containmentPairs]], builds its
+   * bags on the driver (≤ 50k of ≤ 2·64 longs, ≈ 50 MB) without a
+   * shuffle. The sketch variants (minhash/simhash/embedding LSH) remain
    * the 100 TB recall path and this operator is their exact oracle.
    *
    * All threshold tests are exact integer arithmetic: the threshold is
@@ -958,23 +941,18 @@ object Dedup {
     val p = math.round(threshold * 1e6)
     val q = 1000000L
     val dec = "decimal(38,0)"
-    // tf feeds the vocabulary probe and four downstream frames (dfreq,
-    // norms, the ranked window, bags) — materialize the explode+agg
-    // once, lineage-free
-    val tf = df
+    // one row per token occurrence, in the input's partitions: the dense
+    // tier counts them per doc, the prefix tier aggregates them into tf
+    val occ = df
       .select(col(idCol).as("doc"), explode(tokens(col(textCol))).as("tok"))
-      .groupBy("doc", "tok").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
-    // Degenerate-vocabulary fast path. Pruning comes from rare terms;
-    // when every term is a hub, prefixes collide by construction and the
+      .localCheckpoint(false)
+    // Degenerate-vocabulary fast path: when every term is a hub the
     // candidate set degenerates to ≈ all pairs (sf0.1's 31-word corpus:
-    // 8.9 s of candidate-join machinery ahead of a 0.5 s verify). Within
-    // the dense bounds the broadcast nested-loop condition IS the exact
-    // threshold kernel, each unordered pair evaluated once (id_a < id_b
-    // short-circuits ahead of the merge). On any REALISTIC vocabulary the
-    // prefix path is asymptotically superior (SURVEY §8's 20k-word
-    // smoke): the gate is the vocabulary, never row count alone.
-    val (vocab, dense) = denseTier(tf, denseMaxVocab, denseMaxDocs, weighted = true)
+    // 8.9 s of candidate-join machinery ahead of a 0.5 s verify), so the
+    // nested-loop condition IS the exact kernel, each unordered pair once
+    // (id_a < id_b short-circuits ahead of the merge). On any REALISTIC
+    // vocabulary the prefix path wins (SURVEY §8's 20k-word smoke).
+    val dense = denseBags(occ, denseMaxVocab, denseMaxDocs, weighted = true)
     if (dense.nonEmpty) {
       val bags = dense.get
       return bags.alias("a")
@@ -987,7 +965,12 @@ object Dedup {
             .as("dot"),
           col("a.n2").as("na2"), col("b.n2").as("nb2"))
     }
+    // tf feeds dfreq, norms, the ranked window and bags — checkpointed
+    // once, by the dict's job
+    val tf = occ.groupBy("doc", "tok").agg(count(lit(1)).as("tf"))
+      .localCheckpoint(false)
     val dict = termDict(tf)
+    val vocab = math.max(1L, dict.count())
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc")).orderBy(col("df"), col("tok"))
     // cumBefore = squared mass of terms strictly rarer than this rank;

@@ -2,6 +2,7 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /**
@@ -14,4 +15,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+  /** A grouping key as Spark's aggregation evaluates it: -0.0 and NaN
+    * normalized (`NormalizeFloatingNumbers`, also `private[sql]`). */
+  def groupingKey(e: Expression): Expression = NormalizeFloatingNumbers.normalize(e)
 }

@@ -770,6 +770,64 @@ class DedupSpec extends SparkSuite {
     }
   }
 
+  test("all-pairs dense tier: the doc bound holds over the docs of all tasks, not per task") {
+    // 80 docs in 8 partitions of ~10: every task is under a bound of 40,
+    // their sum is not. A repeated id (doc 3) sits in two of them and
+    // counts once in each, as two input rows did in the bound: 81
+    val rnd = new scala.util.Random(71)
+    val words = (0 until 6).map(i => s"w$i")
+    val rows = (0 until 80).map(i => (i.toLong, Seq.fill(3 + rnd.nextInt(6))(words(rnd.nextInt(6))).mkString(" "))) :+
+      (3L, "w0 w1 w2 w3")
+    val d = withLogLevel(spark.createDataFrame(spark.sparkContext.parallelize(rows, 8)).toDF("doc_id", "text"))
+    def dense(out: org.apache.spark.sql.DataFrame) =
+      out.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin")
+    def rowsOf(out: org.apache.spark.sql.DataFrame) =
+      out.collect().map(_.toSeq).toSeq.groupBy(identity).map { case (r, g) => r -> g.size }
+    val ops = Seq[(String, (Long, Long) => org.apache.spark.sql.DataFrame)](
+      "containment" -> ((v, n) => Dedup.containmentPairs(d, "text", "doc_id", 3, 4, v, n)),
+      "cosine" -> ((v, n) => Dedup.cosineCountPairs(d, "text", "doc_id", 0.8, v, n)))
+    for ((op, run) <- ops) {
+      val want = rowsOf(withLogLevel(run(0L, 0L)))
+      assert(want.nonEmpty, s"$op: degenerate corpus")
+      for (maxDocs <- Seq(40L, 80L, 81L, 100L)) {
+        val out = withLogLevel(run(100000L, maxDocs))
+        assert(dense(out) === (maxDocs >= 81L), s"$op: doc bound $maxDocs")
+        assert(rowsOf(out) === want, s"$op: doc bound $maxDocs ≠ prefix tier")
+      }
+    }
+  }
+
+  test("all-pairs dense tier: repeated ids merge as Spark groups them (binary by content, -0.0 = 0.0, NaN = NaN)") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, StringType, StructField, StructType}
+    val texts = Seq("w1 w2 w3", "w1 w2", "w2 w3 w3", "w1 w3", "w1 w2 w3 w3", "w3 w1")
+    val corpora = Seq[(DataType, Seq[Any])](
+      BinaryType -> Seq(Array[Byte](1), Array[Byte](2), Array[Byte](1), Array[Byte](3), Array[Byte](2), Array[Byte](4)),
+      DoubleType -> Seq(0.0, -0.0, Double.NaN, 1.0, Double.NaN, 2.0))
+    // ids compared as values: binary by content, a zero or NaN as one id
+    def id(x: Any): Any = x match {
+      case b: Array[Byte] => b.toSeq
+      case d: Double if d.isNaN => "NaN"
+      case d: Double if d == 0.0 => 0.0
+      case v => v
+    }
+    def rowsOf(out: org.apache.spark.sql.DataFrame) =
+      out.collect().map(_.toSeq.map(id)).toSeq.groupBy(identity).map { case (r, g) => r -> g.size }
+    for ((idType, ids) <- corpora) {
+      val d = withLogLevel(spark.createDataFrame(
+        java.util.Arrays.asList(ids.zip(texts).map { case (i, t) => Row(i, t) }: _*),
+        StructType(Seq(StructField("doc_id", idType), StructField("text", StringType)))).repartition(3))
+      val ops = Seq[(String, (Long, Long) => org.apache.spark.sql.DataFrame)](
+        "containment" -> ((v, n) => Dedup.containmentPairs(d, "text", "doc_id", 1, 2, v, n)),
+        "cosine" -> ((v, n) => Dedup.cosineCountPairs(d, "text", "doc_id", 0.5, v, n)))
+      for ((op, run) <- ops) {
+        val prefix = rowsOf(withLogLevel(run(0L, 0L)))
+        assert(prefix.nonEmpty, s"$idType $op: degenerate corpus")
+        assert(rowsOf(withLogLevel(run(100000L, 100000L))) === prefix, s"$idType $op: dense tier ≠ prefix tier")
+      }
+    }
+  }
+
   test("all-pairs dense tier: a warm call of either operator runs at most 8 Spark jobs") {
     // the benchmark's shape: a 30-word corpus in one parquet file, the
     // result written to a noop sink
