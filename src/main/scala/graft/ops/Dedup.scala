@@ -31,15 +31,21 @@ import graft.functions.VectorFunctions.cosine_sim
  *    not the 100 TB path.
  *  - embeddingNearDup: brute pair scan at small n, LSH-prefiltered at scale.
  *
- * Every banded self-join goes through `guardBuckets`: a hot (band, bucket)
- * group — boilerplate-heavy shards, near-constant token streams — would
- * otherwise make candidate generation quadratic in that bucket's occupancy
- * on a single reducer. The guard counts occupancy (map-side-combined agg on
- * the 8-byte keys), drops buckets above `maxBucketSize`, and LOGS the drop
- * (bucket + row counts) so caps are never silent. Oversized buckets are
- * dominated by exact duplicates, which `exact`/`exactSurvivors` catch
- * without any pairwise join — run exact dedup first and the guard only
- * fires on adversarial near-constant corpora.
+ * Every banded LSH operator finds its candidates through one helper,
+ * [[bandedPairs]]: band keys explode to (band, bucket) rows, each side
+ * passes `guardBuckets`, and the sides equi-join on (band, bucket). A hot
+ * bucket — boilerplate-heavy shards, near-constant token streams — would
+ * otherwise make candidate generation quadratic in that bucket's
+ * occupancy on a single reducer. The guard counts occupancy
+ * (map-side-combined agg on the 8-byte keys), drops buckets above
+ * `maxBucketSize`, and LOGS the drop (bucket + row counts) so caps are
+ * never silent. Oversized buckets are dominated by exact duplicates,
+ * which `exact`/`exactSurvivors` catch without any pairwise join — run
+ * exact dedup first and the guard only fires on adversarial
+ * near-constant corpora. One banded self-join runs unguarded:
+ * `Multimodal.hashNearDupPairs` passes `maxBucketSize = 0`, because its
+ * DuckDB oracle replays a brute-force popcount join and so needs full
+ * recall.
  */
 object Dedup {
 
@@ -161,28 +167,23 @@ object Dedup {
   }
 
   /**
-   * Bucket-skew guard for banded LSH self-joins. `banded` must carry
-   * `band` and `bucket` columns (other columns pass through). Buckets with
-   * more than `maxBucketSize` rows are removed before the self-join and
-   * the drop is logged (never silent). `maxBucketSize <= 0` disables the
-   * guard.
+   * Bucket-skew guard for [[bandedPairs]]. `banded` must carry `band` and
+   * `bucket` columns (other columns pass through). Buckets with more than
+   * `maxBucketSize` rows are removed before the join and the drop is
+   * logged (never silent). `maxBucketSize <= 0` disables the guard.
    *
-   * r16 shape (guide §1.2 step 1 — one fewer job per guarded op): the
-   * anti-join against the oversized-bucket set is UNCONDITIONAL (an
+   * The anti-join against the oversized-bucket set is unconditional (an
    * empty build side keeps every row, so the no-skew result is
-   * bit-identical), which moves the occupancy aggregate INSIDE the main
-   * action's broadcast build instead of a separate eagerly-executed
-   * stats job per guard. The r13/r14-audited safety property — a drop
-   * is NEVER silent — is kept through an `observe()` metric on the
-   * oversized set plus a QueryExecutionListener that WARNs whenever an
-   * action observes a non-empty drop ([[GuardMetrics]]; DedupSpec pins
-   * that the WARN still fires). The aggregate still runs against the
-   * caller's already-checkpointed signature frame (`cached` is an EAGER
+   * bit-identical), which puts the occupancy aggregate inside the main
+   * action's broadcast build instead of a separate stats job per guard.
+   * A drop stays loud through an `observe()` metric on the oversized set
+   * plus a QueryExecutionListener that WARNs whenever an action observes
+   * a non-empty drop ([[GuardMetrics]]). The aggregate runs against the
+   * caller's checkpointed signature frame (`cached` is an eager
    * localCheckpoint), so the broadcast build re-scans in-memory blocks,
-   * not the corpus — same bytes as the old stats job, one less job
-   * launch, and the build overlaps the main action's other work.
+   * not the corpus.
    */
-  private[graft] def guardBuckets(
+  private def guardBuckets(
       banded: DataFrame,
       maxBucketSize: Int,
       op: String): DataFrame = {
@@ -198,6 +199,65 @@ object Dedup {
     banded.join(broadcast(over.select("band", "bucket")),
       Seq("band", "bucket"), "left_anti")
   }
+
+  /** One side of a [[bandedPairs]] join: `df` carries the `doc` id,
+    * `keys` holds one bucket-key column per band over `df`'s columns, and
+    * `op` names the side's guard in [[GuardMetrics]]. */
+  private[graft] case class BandSide(df: DataFrame, keys: Seq[Column], op: String)
+
+  /**
+   * The candidate stage of every banded LSH operator: each side's keys
+   * explode to (band, bucket) rows, pass [[guardBuckets]] under the
+   * side's op name, and the sides equi-join on (band, bucket). A
+   * self-join (`b` empty) keeps `a.doc < b.doc`. Candidates travel as id
+   * pairs only — payloads never ride the join; [[withPayload]]
+   * re-attaches them for verification. Returns distinct (id_a, id_b);
+   * `distinct = false` skips that aggregate for a caller whose pairs
+   * cannot repeat (one band over unique ids).
+   */
+  private[graft] def bandedPairs(a: BandSide, b: Option[BandSide],
+      maxBucketSize: Int, distinct: Boolean = true): DataFrame = {
+    def banded(s: BandSide): DataFrame = guardBuckets(s.keys match {
+      case Seq(k) => s.df.select(col("doc"), lit(0).as("band"), k.as("bucket"))
+      case ks => s.df.select(col("doc"),
+        posexplode(array(ks: _*)).as(Seq("band", "bucket")))
+    }, maxBucketSize, s.op)
+    val self = banded(a)
+    val on = col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket")
+    val pairs = self.alias("a").join(b.fold(self)(banded).alias("b"),
+        if (b.isEmpty) on && col("a.doc") < col("b.doc") else on)
+      .select(col("a.doc").as("id_a"), col("b.doc").as("id_b"))
+    if (distinct) pairs.distinct() else pairs
+  }
+
+  /** Candidate pairs with each side's verify payload re-attached by id:
+    * `a` and `b` carry `doc` and `payload`, which comes back as `__pa`
+    * (joined on id_a) and `__pb` (on id_b). */
+  private[graft] def withPayload(
+      pairs: DataFrame, payload: String, a: DataFrame, b: DataFrame): DataFrame =
+    pairs
+      .join(a.select(col("doc").as("id_a"), col(payload).as("__pa")), Seq("id_a"))
+      .join(b.select(col("doc").as("id_b"), col(payload).as("__pb")), Seq("id_b"))
+
+  /** `bands` bucket keys over a 64-bit signature: band i is bits
+    * [i·width, (i+1)·width). */
+  private[graft] def bitBands(sig: Column, bands: Int, width: Int): Seq[Column] = {
+    val mask = if (width == 64) -1L else (1L << width) - 1
+    (0 until bands).map(i => shiftrightunsigned(sig, i * width).bitwiseAND(lit(mask)))
+  }
+
+  /** Values per band when a `total`-value signature splits into `bands`
+    * equal bands. Every bands-taking operator calls this first, so a
+    * non-positive `bands` fails before any job (and before the `%`). */
+  private def bandWidth(total: Int, bands: Int, what: String): Int = {
+    require(bands > 0, s"bands must be > 0, got $bands")
+    require(total % bands == 0, s"$what must be divisible by bands")
+    total / bands
+  }
+
+  /** MinHash band keys: band i hashes signature values [i·rows, (i+1)·rows). */
+  private def minhashBands(sig: Column, bands: Int, rows: Int): Seq[Column] =
+    (0 until bands).map(i => xxhash64(slice(sig, i * rows + 1, rows), lit(i)))
 
   /** Materialize a (deterministic) signature frame once, lineage-free.
     * localCheckpoint, NOT persist: CacheManager entries live for the
@@ -393,8 +453,8 @@ object Dedup {
    * MinHash + LSH candidate pairs. Signature: `numHashes` minima per row
    * (map-only). Banding: `bands` bands of numHashes/bands values; docs
    * agreeing on ANY band land in the same bucket. Bucket self-join emits
-   * candidate pairs; `withJaccard` re-ranks them with the exact token-set
-   * Jaccard (cheap: only candidates, not corpus²).
+   * candidate pairs; `minhashDuplicates` verifies them with the exact
+   * shingle-set Jaccard (cheap: only candidates, not corpus²).
    */
   def minhashCandidates(
       df: DataFrame,
@@ -404,8 +464,7 @@ object Dedup {
       bands: Int = 16,
       shingleSize: Int = 3,
       maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rows = numHashes / bands
+    val rows = bandWidth(numHashes, bands, "numHashes")
     // Materialize signatures once: the bucket self-join would otherwise
     // recompute the shingle+minhash scan for BOTH sides (a full corpus
     // re-read at scale). Signatures are tiny (numHashes × 8 B per doc).
@@ -414,22 +473,8 @@ object Dedup {
     val sig = cached(df.select(
       col(idCol).as("doc"),
       minhash_signature(tokens(col(textCol)), numHashes, shingleSize).as("sig")))
-    val banded = guardBuckets(sig.select(
-      col("doc"),
-      posexplode(transform(
-        sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(slice(col("sig"), b * rows + 1, lit(rows)), b))))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bucket"),
-      maxBucketSize, "minhashCandidates")
-    val a = banded.alias("a")
-    val b = banded.alias("b")
-    a.join(b,
-        col("a.band") === col("b.band") &&
-        col("a.bucket") === col("b.bucket") &&
-        col("a.doc") < col("b.doc"))
-      .select(col("a.doc").as("id_a"), col("b.doc").as("id_b"))
-      .distinct()
+    bandedPairs(BandSide(sig, minhashBands(col("sig"), bands, rows),
+      "minhashCandidates"), None, maxBucketSize)
   }
 
   /** MinHash LSH candidates verified by exact shingle-set Jaccard ≥
@@ -446,41 +491,34 @@ object Dedup {
       bands: Int = 16,
       shingleSize: Int = 3,
       maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rows = numHashes / bands
-    // shingle sets carried as SORTED HASH arrays (shingle_hashes) — no
-    // shingle-string allocation (that pass measured ~10× the signature
-    // kernel); Jaccard on candidates is then a linear merge.
-    val sig = cached(df.select(
+    val rows = bandWidth(numHashes, bands, "numHashes")
+    val sig = cached(minhashSide(df, textCol, idCol, numHashes, shingleSize))
+    val pairs = bandedPairs(BandSide(sig, minhashBands(col("sig"), bands, rows),
+      "minhashDuplicates"), None, maxBucketSize)
+    jaccardVerify(withPayload(pairs, "__toks", sig, sig), threshold)
+      .select(col("id_a"), col("id_b"), col("jaccard"))
+  }
+
+  /** Signature and distinct shingle set per doc in ONE corpus pass, so
+    * banding and both sides of the verification join read the same
+    * checkpoint. Shingle sets are SORTED HASH arrays (shingle_hashes) —
+    * no shingle-string allocation (that pass measured ~10× the signature
+    * kernel); Jaccard on candidates is then a linear merge. */
+  private def minhashSide(df: DataFrame, textCol: String, idCol: String,
+      numHashes: Int, shingleSize: Int): DataFrame =
+    df.select(
       col(idCol).as("doc"),
       minhash_signature(tokens(col(textCol)), numHashes, shingleSize).as("sig"),
       graft.functions.HashFunctions.shingle_hashes(
-        tokens(col(textCol)), shingleSize).as("__toks")))
-    val banded = guardBuckets(sig.select(
-      col("doc"),
-      posexplode(transform(
-        sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(slice(col("sig"), b * rows + 1, lit(rows)), b))))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bucket"),
-      maxBucketSize, "minhashDuplicates")
-    val a = banded.alias("a")
-    val b = banded.alias("b")
-    val cand = a.join(b,
-        col("a.band") === col("b.band") &&
-        col("a.bucket") === col("b.bucket") &&
-        col("a.doc") < col("b.doc"))
-      .select(col("a.doc").as("id_a"), col("b.doc").as("id_b"))
-      .distinct()
-    val toks = sig.select(col("doc"), col("__toks"))
-    cand
-      .join(toks.select(col("doc").as("id_a"), col("__toks").as("__ta")), Seq("id_a"))
-      .join(toks.select(col("doc").as("id_b"), col("__toks").as("__tb")), Seq("id_b"))
+        tokens(col(textCol)), shingleSize).as("__toks"))
+
+  /** Exact shingle-set Jaccard of re-attached payloads, kept at ≥ threshold. */
+  private def jaccardVerify(withToks: DataFrame, threshold: Double): DataFrame =
+    withToks
       .withColumn("jaccard",
-        graft.functions.HashFunctions.jaccard_sorted(col("__ta"), col("__tb")))
+        graft.functions.HashFunctions.jaccard_sorted(col("__pa"), col("__pb")))
       .filter(col("jaccard") >= lit(threshold))
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-  }
+      .withColumn("jaccard", round(col("jaccard"), 4))
 
   /**
    * Cross-corpus MinHash dedup: near-dup pairs BETWEEN a new batch and an
@@ -509,40 +547,15 @@ object Dedup {
       bands: Int = 16,
       shingleSize: Int = 3,
       maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rows = numHashes / bands
-    def side(df: DataFrame, op: String): (DataFrame, DataFrame) = {
-      val sig = cached(df.select(
-        col(idCol).as("doc"),
-        minhash_signature(tokens(col(textCol)), numHashes, shingleSize).as("sig"),
-        graft.functions.HashFunctions.shingle_hashes(
-          tokens(col(textCol)), shingleSize).as("__toks")))
-      val banded = guardBuckets(sig.select(
-        col("doc"),
-        posexplode(transform(
-          sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(slice(col("sig"), b * rows + 1, lit(rows)), b))))
-        .withColumnRenamed("pos", "band")
-        .withColumnRenamed("col", "bucket"),
-        maxBucketSize, op)
-        (sig, banded)
-    }
-    val (sigA, bandedA) = side(batch, "minhashCrossCorpus(batch)")
-    val (sigB, bandedB) = side(corpus, "minhashCrossCorpus(corpus)")
-    val cand = bandedA.alias("a").join(bandedB.alias("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
-      .select(col("a.doc").as("batch_id"), col("b.doc").as("corpus_id"))
-      .distinct()
-    cand
-      .join(sigA.select(col("doc").as("batch_id"), col("__toks").as("__ta")),
-        Seq("batch_id"))
-      .join(sigB.select(col("doc").as("corpus_id"), col("__toks").as("__tb")),
-        Seq("corpus_id"))
-      .withColumn("jaccard",
-        graft.functions.HashFunctions.jaccard_sorted(col("__ta"), col("__tb")))
-      .filter(col("jaccard") >= lit(threshold))
-      .select(col("batch_id"), col("corpus_id"),
-        round(col("jaccard"), 4).as("jaccard"))
+    val rows = bandWidth(numHashes, bands, "numHashes")
+    val sigA = cached(minhashSide(batch, textCol, idCol, numHashes, shingleSize))
+    val sigB = cached(minhashSide(corpus, textCol, idCol, numHashes, shingleSize))
+    val pairs = bandedPairs(
+      BandSide(sigA, minhashBands(col("sig"), bands, rows), "minhashCrossCorpus(batch)"),
+      Some(BandSide(sigB, minhashBands(col("sig"), bands, rows), "minhashCrossCorpus(corpus)")),
+      maxBucketSize)
+    jaccardVerify(withPayload(pairs, "__toks", sigA, sigB), threshold)
+      .select(col("id_a").as("batch_id"), col("id_b").as("corpus_id"), col("jaccard"))
   }
 
   /** Batch rows that do NOT near-duplicate any corpus document — the
@@ -591,28 +604,18 @@ object Dedup {
       maxHamming: Int = 3,
       bands: Int = 4,
       maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    require(bands > 0 && 64 % bands == 0, "bands must divide 64")
+    val width = bandWidth(64, bands, "64")
     require(bands > maxHamming,
       s"bands ($bands) must exceed maxHamming ($maxHamming) for full recall")
-    val width = 64 / bands
-    val mask = if (width == 64) -1L else (1L << width) - 1
+    // one signature pass; distinct (doc, sig) rows, so an id repeated
+    // with the same text re-attaches one signature, not one per copy
     val sig = cached(df.select(col(idCol).as("doc"),
-      simhash64(tokens(col(textCol))).as("sig"))) // one signature pass
-    val banded = guardBuckets(sig.select(col("doc"), col("sig"),
-      posexplode(array((0 until bands).map(q =>
-        xxhash64(shiftrightunsigned(col("sig"), q * width).bitwiseAND(lit(mask)),
-          lit(q))): _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket"),
-      maxBucketSize, "simhashDuplicates")
-    val a = banded.alias("a")
-    val b = banded.alias("b")
-    a.join(b,
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-        col("a.doc") < col("b.doc"))
-      .select(col("a.doc").as("id_a"), col("b.doc").as("id_b"),
-        col("a.sig").as("__sa"), col("b.sig").as("__sb"))
-      .distinct()
-      .withColumn("hamming", hamming64(col("__sa"), col("__sb")))
+      simhash64(tokens(col(textCol))).as("sig")).distinct())
+    val keys = bitBands(col("sig"), bands, width).zipWithIndex
+      .map { case (k, q) => xxhash64(k, lit(q)) }
+    withPayload(bandedPairs(BandSide(sig, keys, "simhashDuplicates"), None,
+        maxBucketSize), "sig", sig, sig)
+      .withColumn("hamming", hamming64(col("__pa"), col("__pb")))
       .filter(col("hamming") <= lit(maxHamming))
       .select("id_a", "id_b", "hamming")
   }
@@ -643,19 +646,9 @@ object Dedup {
     val base = cached(df.select(col(idCol).as("doc"),
         simhash64(tokens(col(textCol))).as("sig"),
         md5(lower(col(textCol))).as("__d")))
-    val banded = guardBuckets(
-      base.select(col("doc"), lit(0).as("band"), col("sig").as("bucket")),
-      maxBucketSize, "simhashExactDuplicates")
-    val a = banded.alias("a")
-    val b = banded.alias("b")
-    val cand = a.join(b,
-        col("a.bucket") === col("b.bucket") && col("a.doc") < col("b.doc"))
-      .select(col("a.doc").as("id_a"), col("b.doc").as("id_b"))
-    val digests = base.select(col("doc"), col("__d"))
-    cand
-      .join(digests.select(col("doc").as("id_a"), col("__d").as("__da")), Seq("id_a"))
-      .join(digests.select(col("doc").as("id_b"), col("__d").as("__db")), Seq("id_b"))
-      .filter(col("__da") === col("__db"))
+    withPayload(bandedPairs(BandSide(base, Seq(col("sig")), "simhashExactDuplicates"),
+        None, maxBucketSize, distinct = false), "__d", base, base)
+      .filter(col("__pa") === col("__pb"))
       .select("id_a", "id_b")
   }
 
@@ -1489,37 +1482,35 @@ object Dedup {
       bands: Int = 4,
       seed: Long = 42L,
       maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    require(numPlanes <= 64 && numPlanes % bands == 0,
-      "numPlanes must be <= 64 and divisible by bands")
-    require(dim > 0, "dim must be the embedding dimensionality (> 0)")
-    val rows = numPlanes / bands
-    val mask = if (rows == 64) -1L else (1L << rows) - 1
-    val planes = VectorSearch.randomPlanes(numPlanes, dim, seed)
-    def side(df: DataFrame, op: String): (DataFrame, DataFrame) = {
-      val sig = cached(df.select(col(idCol).as("doc"), col(vecCol).as("__v"),
-        VectorSearch.hyperplaneSignature(col(vecCol), planes).as("__sig")))
-      val banded = guardBuckets(sig.select(col("doc"),
-        posexplode(array((0 until bands).map(b =>
-          shiftrightunsigned(col("__sig"), b * rows).bitwiseAND(lit(mask))): _*)))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket"),
-        maxBucketSize, op)
-        (sig, banded)
-    }
-    val (sigA, bandedA) = side(batch, "embeddingCrossCorpusLSH(batch)")
-    val (sigB, bandedB) = side(corpus, "embeddingCrossCorpusLSH(corpus)")
-    val cand = bandedA.alias("a").join(bandedB.alias("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
-      .select(col("a.doc").as("batch_id"), col("b.doc").as("corpus_id"))
-      .distinct()
-    cand
-      .join(sigA.select(col("doc").as("batch_id"), col("__v").as("__va")),
-        Seq("batch_id"))
-      .join(sigB.select(col("doc").as("corpus_id"), col("__v").as("__vb")),
-        Seq("corpus_id"))
-      .withColumn("cos", cosine_sim(col("__va"), col("__vb")))
-      .filter(col("cos") >= lit(threshold))
-      .select(col("batch_id"), col("corpus_id"), round(col("cos"), 4).as("cos"))
+    val side = planeSide(vecCol, idCol, dim, numPlanes, bands, seed)
+    val (sigA, sigB) = (cached(side(batch)), cached(side(corpus)))
+    val keys = bitBands(col("__sig"), bands, numPlanes / bands)
+    cosineVerify(withPayload(bandedPairs(
+        BandSide(sigA, keys, "embeddingCrossCorpusLSH(batch)"),
+        Some(BandSide(sigB, keys, "embeddingCrossCorpusLSH(corpus)")),
+        maxBucketSize), "__v", sigA, sigB), threshold)
+      .select(col("id_a").as("batch_id"), col("id_b").as("corpus_id"), col("cos"))
   }
+
+  /** Hyperplane-LSH side of the embedding operators: `doc`, the vector
+    * `__v` (the verify payload) and its `numPlanes`-bit signature
+    * `__sig`, for one frame. Validates the banding before any job. */
+  private def planeSide(vecCol: String, idCol: String, dim: Int,
+      numPlanes: Int, bands: Int, seed: Long): DataFrame => DataFrame = {
+    bandWidth(numPlanes, bands, "numPlanes")
+    require(numPlanes <= 64, "numPlanes must be <= 64")
+    require(dim > 0, "dim must be the embedding dimensionality (> 0)")
+    val planes = VectorSearch.randomPlanes(numPlanes, dim, seed)
+    df => df.select(col(idCol).as("doc"), col(vecCol).as("__v"),
+      VectorSearch.hyperplaneSignature(col(vecCol), planes).as("__sig"))
+  }
+
+  /** Exact cosine of re-attached vectors, kept at ≥ threshold. */
+  private def cosineVerify(withVecs: DataFrame, threshold: Double): DataFrame =
+    withVecs
+      .withColumn("cos", cosine_sim(col("__pa"), col("__pb")))
+      .filter(col("cos") >= lit(threshold))
+      .withColumn("cos", round(col("cos"), 4))
 
   /** Embedding-cosine near-dup pairs — EXACT brute pairwise; ground truth
     * and fine at modest n. The 100 TB path is the LSH variant below. */
@@ -1557,38 +1548,16 @@ object Dedup {
       bands: Int = 4,
       seed: Long = 42L,
       maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    require(numPlanes <= 64 && numPlanes % bands == 0,
-      "numPlanes must be <= 64 and divisible by bands")
-    require(dim > 0, "dim must be the embedding dimensionality (> 0)")
-    val rows = numPlanes / bands
-    val mask = if (rows == 64) -1L else (1L << rows) - 1
-    val planes = VectorSearch.randomPlanes(numPlanes, dim, seed)
-    val sig = cached(df.select(col(idCol).as("doc"), col(vecCol).as("__v"),
-      VectorSearch.hyperplaneSignature(col(vecCol), planes).as("__sig")))
     // Candidates travel as ID PAIRS only: the banded self-join and its
     // distinct never shuffle embedding payloads (6 KB/row at d=1536 —
     // the dominant exchange cost at scale); vectors re-attach from the
     // cached signature pass for the exact-cosine verification of
     // candidates only.
-    val banded = guardBuckets(sig.select(col("doc"),
-      posexplode(array((0 until bands).map(b =>
-        shiftrightunsigned(col("__sig"), b * rows).bitwiseAND(lit(mask))): _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket"),
-      maxBucketSize, "embeddingNearDupPairsLSH")
-    val a = banded.alias("a")
-    val b = banded.alias("b")
-    val cand = a.join(b,
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-        col("a.doc") < col("b.doc"))
-      .select(col("a.doc").as("id_a"), col("b.doc").as("id_b"))
-      .distinct()
-    val vecs = sig.select(col("doc"), col("__v"))
-    cand
-      .join(vecs.select(col("doc").as("id_a"), col("__v").as("__va")), Seq("id_a"))
-      .join(vecs.select(col("doc").as("id_b"), col("__v").as("__vb")), Seq("id_b"))
-      .withColumn("cos", cosine_sim(col("__va"), col("__vb")))
-      .filter(col("cos") >= lit(threshold))
-      .select(col("id_a"), col("id_b"), round(col("cos"), 4).as("cos"))
+    val sig = cached(planeSide(vecCol, idCol, dim, numPlanes, bands, seed)(df))
+    cosineVerify(withPayload(bandedPairs(BandSide(sig,
+        bitBands(col("__sig"), bands, numPlanes / bands), "embeddingNearDupPairsLSH"),
+        None, maxBucketSize), "__v", sig, sig), threshold)
+      .select(col("id_a"), col("id_b"), col("cos"))
   }
 
   /**

@@ -5,13 +5,11 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /**
- * Loud-drop plumbing for [[Dedup.guardBuckets]] (r16): the guard's
- * oversized-bucket aggregate runs inside the main action (an
- * `observe()` metric on the broadcast build side), and this listener
- * turns every observed non-empty drop into the same WARN the old
- * separate stats job logged synchronously — the safety property the
- * r13/r14 audits pinned ("caps are never silent"), now evaluated
- * without a dedicated job per guard.
+ * Loud-drop plumbing for the bucket-skew guard of [[Dedup.bandedPairs]]:
+ * the guard's oversized-bucket aggregate runs inside the main action
+ * (an `observe()` metric on the broadcast build side), and this
+ * listener turns every observed non-empty drop into a WARN, so caps are
+ * never silent without a dedicated stats job per guard.
  *
  * An action that fails after the guard ran reports its drop as well,
  * with "(action failed)" appended to the WARN.

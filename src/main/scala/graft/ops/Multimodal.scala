@@ -312,23 +312,16 @@ object Multimodal {
     // distinct (the sharedHashPairs convention): an id appearing more
     // than once would re-join in the verify stage and inflate each pair
     // into n_a×n_b rows with divergent hamming values
-    val hs = hashes.select(col(idCol).as("__id"), col(hashCol).as("__h"))
+    val hs = hashes.select(col(idCol).as("doc"), col(hashCol).as("__h"))
       .distinct()
       .localCheckpoint(true) // two consumers: banding + verify re-attach
-    val banded = hs.select(col("__id"),
-      posexplode(array((0 until 4).map(b =>
-        shiftrightunsigned(col("__h"), b * 16).bitwiseAND(lit(0xFFFFL))): _*))
-        .as(Seq("band", "bucket")))
-    val cand = banded.alias("a").join(banded.alias("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-        col("a.__id") < col("b.__id"))
-      .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
-      .distinct()
-    cand
-      .join(hs.select(col("__id").as("id_a"), col("__h").as("__ha")), Seq("id_a"))
-      .join(hs.select(col("__id").as("id_b"), col("__h").as("__hb")), Seq("id_b"))
+    // unguarded (maxBucketSize = 0): the oracle's brute-force popcount
+    // join needs full recall
+    Dedup.withPayload(Dedup.bandedPairs(Dedup.BandSide(hs,
+        Dedup.bitBands(col("__h"), 4, 16), "hashNearDupPairs"), None, 0),
+        "__h", hs, hs)
       .withColumn("hamming",
-        bit_count(col("__ha").bitwiseXOR(col("__hb"))).cast("long"))
+        bit_count(col("__pa").bitwiseXOR(col("__pb"))).cast("long"))
       .filter(col("hamming") <= maxDist)
       .select(col("id_a"), col("id_b"), col("hamming"))
   }

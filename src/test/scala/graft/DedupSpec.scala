@@ -377,6 +377,107 @@ class DedupSpec extends SparkSuite {
     assert(GuardMetrics.lastDrop.map(_._1) === Some("minhashCandidates"))
   }
 
+  test("bucket-skew guard on every banded operator: only the small pair survives, the drop names its op") {
+    import graft.ops.{GuardMetrics, Multimodal}
+    // 140 rows share one bucket per band (cap 50); 900/901 are a near-dup
+    // pair in buckets of their own. A cross-corpus side under test holds
+    // the 140 rows, the other side one row of the same bucket (1000), so
+    // the drop is that side's guard alone. 140, not the 120/130 of the
+    // tests above, so a late drop event from them cannot pass a row here.
+    val cap = 50
+    val mega = 0 until 140
+    def text(ids: Seq[Int], pair: Long) =
+      (ids.map(i => (i.toLong, "boiler plate page body")) :+
+        ((pair, "rare unique sentence alpha beta gamma"))).toDF("doc_id", "text")
+    def vecs(ids: Seq[Int], pair: Long) =
+      (ids.map(i => (i.toLong, Array(0.6f, 0.8f, 0f, 0f))) :+
+        ((pair, Array(0f, 0f, 0.6f, 0.8f)))).toDF("vec_id", "embedding")
+    val textSelf = text(mega, 900L).union(text(Nil, 901L))
+    val vecSelf = vecs(mega, 900L).union(vecs(Nil, 901L))
+    def mh(a: Seq[Int], b: Seq[Int]) = Dedup.minhashCrossCorpus(text(a, 900L),
+      text(b, 901L), "text", "doc_id", 0.5, shingleSize = 1, maxBucketSize = cap)
+    def emb(a: Seq[Int], b: Seq[Int]) = Dedup.embeddingCrossCorpusLSH(vecs(a, 900L),
+      vecs(b, 901L), "embedding", "vec_id", 0.99, dim = 4, numPlanes = 16,
+      maxBucketSize = cap)
+    def embSelf = Dedup.embeddingNearDupPairsLSH(vecSelf, "embedding", "vec_id",
+      0.99, dim = 4, numPlanes = 16, maxBucketSize = cap)
+    val guarded: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "minhashCandidates" -> (() => Dedup.minhashCandidates(textSelf, "text", "doc_id",
+        shingleSize = 1, maxBucketSize = cap)),
+      "minhashDuplicates" -> (() => Dedup.minhashDuplicates(textSelf, "text", "doc_id",
+        0.5, shingleSize = 1, maxBucketSize = cap)),
+      "minhashCrossCorpus(batch)" -> (() => mh(mega, Seq(1000))),
+      "minhashCrossCorpus(corpus)" -> (() => mh(Seq(1000), mega)),
+      "simhashDuplicates" -> (() => Dedup.simhashDuplicates(textSelf, "text", "doc_id",
+        0, maxBucketSize = cap)),
+      "simhashExactDuplicates" -> (() => Dedup.simhashExactDuplicates(textSelf, "text",
+        "doc_id", maxBucketSize = cap)),
+      "embeddingNearDupPairsLSH" -> (() => embSelf),
+      "embeddingCrossCorpusLSH(batch)" -> (() => emb(mega, Seq(1000))),
+      "embeddingCrossCorpusLSH(corpus)" -> (() => emb(Seq(1000), mega)))
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    for ((op, run) <- guarded) {
+      GuardMetrics.lastDrop = None
+      val got = withLogLevel(pairs(run()))
+      assert(got === Set((900L, 901L)), s"$op: mega-bucket must be dropped, pair kept")
+      def reported = GuardMetrics.lastDrop.exists { case (o, nb, nr) =>
+        o == op && nb > 0 && nr >= nb * mega.size }
+      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
+      while (!reported && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(reported, s"$op: drop not reported under its op name: ${GuardMetrics.lastDrop}")
+    }
+    // hashNearDupPairs is the one unguarded banded join: every pair of
+    // the mega-bucket comes back
+    val hashes = (mega.map(i => (i.toLong, 0L)) ++ Seq((900L, -1L), (901L, -1L)))
+      .toDF("id", "h")
+    val all = pairs(Multimodal.hashNearDupPairs(hashes, "id", "h", 0))
+    assert(all === (for (i <- mega; j <- mega if i < j) yield (i.toLong, j.toLong)).toSet +
+      ((900L, 901L)))
+  }
+
+  test("banded candidates: a corpus with every row twice gives the same pairs (one band too)") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq
+    val twice = docs.union(docs)
+    val ops: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+      "simhashDuplicates" -> (d => Dedup.simhashDuplicates(d, "text", "doc_id", 3)),
+      "minhashCandidates" -> (d => Dedup.minhashCandidates(d, "text", "doc_id")),
+      "minhashCandidates, one band" -> (d =>
+        Dedup.minhashCandidates(d, "text", "doc_id", numHashes = 4, bands = 1)))
+    for ((op, run) <- ops) {
+      val once = rows(run(docs))
+      assert(once.nonEmpty, op)
+      assert(rows(run(twice)) === once, op)
+    }
+  }
+
+  test("every bands-taking operator rejects bands 0 and -4 before any Spark job") {
+    val text = Seq((1L, "a b c d"), (2L, "a b c d")).toDF("doc_id", "text")
+    val vecs = Seq((1L, Array(1f, 0f)), (2L, Array(1f, 0f))).toDF("vec_id", "embedding")
+    val ops: Seq[(String, Int => Any)] = Seq(
+      "minhashCandidates" -> (b => Dedup.minhashCandidates(text, "text", "doc_id", bands = b)),
+      "minhashDuplicates" -> (b =>
+        Dedup.minhashDuplicates(text, "text", "doc_id", 0.5, bands = b)),
+      "minhashCrossCorpus" -> (b =>
+        Dedup.minhashCrossCorpus(text, text, "text", "doc_id", 0.5, bands = b)),
+      "newAgainstCorpus" -> (b =>
+        Dedup.newAgainstCorpus(text, text, "text", "doc_id", 0.5, bands = b)),
+      "simhashDuplicates" -> (b =>
+        Dedup.simhashDuplicates(text, "text", "doc_id", 0, bands = b)),
+      "embeddingNearDupPairsLSH" -> (b => Dedup.embeddingNearDupPairsLSH(vecs,
+        "embedding", "vec_id", 0.9, dim = 2, bands = b)),
+      "embeddingCrossCorpusLSH" -> (b => Dedup.embeddingCrossCorpusLSH(vecs, vecs,
+        "embedding", "vec_id", 0.9, dim = 2, bands = b)))
+    for ((op, run) <- ops; bands <- Seq(0, -4)) {
+      val jobs = sparkJobs {
+        val e = intercept[IllegalArgumentException](run(bands))
+        assert(e.getMessage.contains("bands must be > 0"), s"$op bands=$bands: $e")
+      }
+      assert(jobs === 0, s"$op bands=$bands started $jobs Spark job(s) before failing")
+    }
+  }
+
   test("bucket-skew guard bounds embedding-LSH candidates too") {
     val v = Array(0.6f, 0.8f, 0f, 0f)
     val mega = (0 until 80).map(i => (i.toLong, v))

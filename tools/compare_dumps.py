@@ -10,6 +10,10 @@ cluster changes) must not move a single value. Documented exceptions
 (engine-internal sketch state whose merge order is partitioning-
 dependent) pass via PARTITION_VARIANT_ALLOW (comma-separated names) —
 they are still checked for schema + row count.
+The same comparison serves refactor equivalence: Verify outputs of a
+parent and a changed checkout, run with the SAME SPARK_GRAFT_CPUS, must
+match on every entry (this also covers entries whose oracle checks only
+the row count).
 Usage: compare_dumps.py <outDirA> <outDirB>
 """
 import math, os, sys
